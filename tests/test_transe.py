@@ -68,11 +68,38 @@ def test_model_init_invariants(spark):
 
 
 def test_checkpoint_roundtrip(spark, tmp_path):
+    """Bit-identical round trip; the files carry ``EMBEDDING_SCHEMA``;
+    restore puts rows back by id whatever files and order they come in,
+    and rejects a checkpoint with an id missing."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from transe_pyspark_spark.transe.model import EMBEDDING_SCHEMA
+
     m = TransEModel.init_random(20, 4, k=8, seed=3)
-    m.checkpoint(spark, str(tmp_path / "ckpt"))
-    m2 = TransEModel.restore(spark, str(tmp_path / "ckpt"))
+    path = str(tmp_path / "ckpt")
+    m.checkpoint(spark, path)
+    m2 = TransEModel.restore(spark, path)
     np.testing.assert_array_equal(m.entity, m2.entity)
     np.testing.assert_array_equal(m.label, m2.label)
+    files = glob.glob(f"{path}/*.parquet")
+    assert files
+    for f in files:
+        written = pq.read_schema(f).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        assert T.StructType.fromJson(json.loads(written)) == EMBEDDING_SCHEMA
+
+    scattered = str(tmp_path / "scattered")
+    (m.to_df(spark).repartition(3, "id").sortWithinPartitions(F.desc("id"))
+     .write.parquet(scattered))
+    assert len(glob.glob(f"{scattered}/*.parquet")) > 1
+    m3 = TransEModel.restore(spark, scattered)
+    np.testing.assert_array_equal(m.entity, m3.entity)
+    np.testing.assert_array_equal(m.label, m3.label)
+    with pytest.raises(ValueError, match="entity ids"):
+        TransEModel.from_df(m.to_df(spark).where("kind != 'entity' OR id != 3"))
 
 
 @pytest.mark.parametrize("distance", ["L1", "L2"])
@@ -386,24 +413,75 @@ def test_eval_metrics_shape(spark, sf_dir):
     assert 0.0 <= out["hits_at_10"] <= 1.0
 
 
-def test_filtered_relational_matches_broadcast(spark, toy_triples):
-    """The scale-path filtered evaluation (join against known triples,
-    nothing collected) returns exactly the driver-dict path's ranks."""
+def _bruteforce_ranks(E, L, triples, known, l1):
+    """The documented rank rule, candidate by candidate: a candidate
+    counts if it is strictly closer than the true entity, or equally
+    close with a smaller id; known-true candidates other than the true
+    one never count. Returns (h, l, t, rank_head, rank_tail) rows."""
+    known = set(known)
+    dist = (lambda x: np.abs(x).sum()) if l1 else (lambda x: (x * x).sum())
+
+    def rank(d, true, excluded):
+        return sum(1 for c in range(len(d)) if c != true and c not in excluded
+                   and (d[c] < d[true] or (d[c] == d[true] and c < true)))
+
+    out = []
+    for h, l, t in triples:
+        d_tail = [dist(E[h] + L[l] - E[c]) for c in range(len(E))]
+        d_head = [dist(E[c] + L[l] - E[t]) for c in range(len(E))]
+        other_tails = {c for a, b, c in known if (a, b) == (h, l)}
+        other_heads = {a for a, b, c in known if (b, c) == (l, t)}
+        out.append((h, l, t, rank(d_head, h, other_heads), rank(d_tail, t, other_tails)))
+    return out
+
+
+def test_ranks_match_bruteforce_on_exact_ties(spark):
+    """Raw and filtered ranks equal a brute force of the rank rule
+    exactly, for both distances. Small-integer embeddings make every L1
+    and L2 distance an exact integer, so ties are common and any
+    rounding or tie-break slip would change a rank. ``known`` holds
+    duplicate rows; one test triple is absent from it and one test row
+    appears twice."""
+    rng = np.random.default_rng(5)
+    V, n_lab = 12, 2
+    E = rng.integers(-1, 2, size=(V, 3)).astype(np.float64)
+    L = rng.integers(-1, 2, size=(n_lab, 3)).astype(np.float64)
+    model = TransEModel(E, L)
+    known = sorted({(int(rng.integers(V)), int(rng.integers(n_lab)), int(rng.integers(V)))
+                    for _ in range(60)})
+    absent = next((h, l, t) for h in range(V) for l in range(n_lab) for t in range(V)
+                  if (h, l, t) not in set(known))
+    test = known[::4] + [absent, known[0]]
+    known_df = spark.createDataFrame(known + known[:10], ["h", "l", "t"])
+    test_df = spark.createDataFrame(test, ["h", "l", "t"])
+    n_filtered = 0
+    for distance in ("L1", "L2"):
+        l1 = distance == "L1"
+        raw = sorted(tuple(r) for r in rank_triples(spark, model, test_df, distance).collect())
+        assert raw == sorted(_bruteforce_ranks(E, L, test, [], l1)), distance
+        filt = sorted(tuple(r) for r in rank_triples(spark, model, test_df, distance,
+                                                     known_triples=known_df).collect())
+        assert filt == sorted(_bruteforce_ranks(E, L, test, known, l1)), distance
+        n_filtered += sum(a != b for a, b in zip(raw, filt))
+    assert n_filtered > 0  # the known set does move some ranks
+
+
+def test_metrics_run_ranking_kernel_once(spark, toy_triples):
+    """The metrics aggregation reads the ranks once: its executed plan
+    holds one ranking ``MapInPandas``, raw and filtered alike."""
     from transe_pyspark_spark.transe.data import load_triples
-    from transe_pyspark_spark.transe.evaluate import rank_triples
+    from transe_pyspark_spark.transe.evaluate import rank_metrics
 
     raw_df = load_triples(spark, toy_triples)
     ev, lv = build_vocab(raw_df)
     enc = encode_triples(raw_df, ev, lv).cache()
-    model = TransEModel.init_random(ev.count(), lv.count(), k=16, seed=7)
-    for distance in ("L2", "L1"):
-        rel = {(r.h, r.l, r.t): (r.rank_head, r.rank_tail)
-               for r in rank_triples(spark, model, enc, distance=distance,
-                                     known_triples=enc, filter_method="relational").collect()}
-        bc = {(r.h, r.l, r.t): (r.rank_head, r.rank_tail)
-              for r in rank_triples(spark, model, enc, distance=distance,
-                                    known_triples=enc, filter_method="broadcast").collect()}
-        assert rel == bc
+    model = TransEModel.init_random(ev.count(), lv.count(), k=8, seed=4)
+    for known in (None, enc):
+        metrics = rank_metrics(rank_triples(spark, model, enc, known_triples=known))
+        metrics.collect()
+        plan = metrics._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in plan
+        assert plan.count("MapInPandas") == 1, plan
 
 
 def test_bloom_rejection_no_false_negatives(spark, toy_triples):

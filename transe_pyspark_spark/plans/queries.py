@@ -3553,12 +3553,12 @@ def q_transe_rank_eval_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same synthetic KG as the flagship plus a second deterministic known
     set ((h, h%10, 10+13h mod V)), so the exclusion is non-trivial.
 
-    Fully relational twin of
-    ``transe.evaluate._filtered_ranks_relational``: the known-triple
-    table is only ever joined on its (h, l, cand) keys — never
-    collected — which is the shape that survives a KG far larger than
-    the model. Raw and filtered mean ranks are returned side by side;
-    filtered rank == raw rank minus out-ranking known corruptions."""
+    Fully relational: the known-triple table is only ever joined on
+    its (h, l, cand) keys — never collected — which is the shape that
+    survives a KG far larger than the model (``transe.evaluate`` joins
+    the same keys, then excludes inside its ranking kernel). Raw and
+    filtered mean ranks are returned side by side; filtered rank ==
+    raw rank minus out-ranking known corruptions."""
     emb = _T(spark, sf_dir, "embeddings")
     ent = emb.filter(F.col("vec_id") >= 10).select("vec_id", "embedding")
     rel = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")

@@ -1,18 +1,20 @@
 """Link-prediction evaluator (SURVEY §2B R22) — the reference's
 ``test.py`` rebuilt: Mean Rank & Hits@10 under the paper's *raw*
-protocol.
+protocol, plus the *filtered* protocol of Bordes et al. §4.
 
 Semantics parity (SURVEY §4 quirks 4-5): ranks are **0-based** (the
 position in the distance argsort — so ``hits@10`` effectively counts
-top-11) and candidates are **not** filtered against known-true triples.
-Both head and tail are ranked per triple (``test.py:49-62``).
+top-11). Both head and tail are ranked per triple (``test.py:49-62``).
 
 Execution: the entity/label matrices are broadcast once (vs 6
 broadcasts in the reference, ``test.py:79-84``); test triples stream
 through ``mapInPandas`` where a whole Arrow batch of triples is scored
 against all V candidates in one BLAS call — the reference scores one
-triple at a time (``test.py:49-58``). Metrics are a relational
-aggregation over the returned rank column (SURVEY §2A A2/A3).
+triple at a time (``test.py:49-58``). Filtered ranking is an input of
+the same kernel: a join on integer keys hands each test row the ids of
+its other known-true candidates, whose distances are set to +inf before
+ranks are counted. Metrics are one aggregation over both rank columns
+(SURVEY §2A A2/A3), so every evaluation runs the kernel once.
 """
 
 from __future__ import annotations
@@ -22,12 +24,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transe_pyspark_spark.transe.model import TransEModel
 
 _RANK_SCHEMA = "h long, l long, t long, rank_head long, rank_tail long"
+_KEYS = ["h", "l", "t"]
 
 
 def rank_triples(
@@ -36,50 +39,32 @@ def rank_triples(
     test_triples: DataFrame,
     distance: str = "L2",
     known_triples: DataFrame | None = None,
-    filter_method: str = "relational",
 ) -> DataFrame:
-    """Per-triple 0-based head/tail ranks against the full entity vocab.
+    """Per-triple 0-based head/tail ranks against the full entity vocab,
+    one output row per test row.
+
+    A candidate counts towards a rank if it is strictly closer than the
+    true entity, or equally close with a smaller id (the stable-argsort
+    order of the reference).
 
     ``known_triples`` switches to the paper's **filtered** protocol
     (Bordes et al. §4, not implemented by the reference — it is
     raw-only, ``test.py:49-62``): candidate corruptions that are
-    themselves known-true triples are excluded from the ranking, so a
-    model isn't penalized for ranking another correct answer above the
-    test one. Pass the union of train+valid+test triples.
-
-    ``filter_method`` picks how the exclusion is applied:
-
-    * ``"relational"`` (default, scale path): raw ranks from the
-      broadcast kernel, then a per-(h,l)/(l,t) JOIN against
-      ``known_triples`` computes how many known-true corruptions
-      out-ranked the test triple and subtracts them. ``known_triples``
-      is never collected — it stays a DataFrame however large the KG.
-    * ``"broadcast"``: collect ``known_triples`` into driver-side
-      dicts shipped with the model (fast for model-scale KGs like
-      FB15k, unusable when the triple set is much larger than the
-      model).
+    themselves known-true triples never count, so a model isn't
+    penalized for ranking another correct answer above the test one.
+    Pass the union of train+valid+test triples; duplicates are harmless.
+    The exclusion is exact — it applies to the kernel's own distances —
+    and ``known_triples`` is only joined on its integer keys, never
+    collected, however large the KG.
     """
-    if known_triples is not None and filter_method == "relational":
-        raw = rank_triples(spark, model, test_triples, distance)
-        return _filtered_ranks_relational(spark, model, raw, known_triples, distance)
-
     sc = spark.sparkContext
     b_ent = sc.broadcast(model.entity)
     b_lab = sc.broadcast(model.label)
     use_l1 = distance == "L1"
-
-    known_tails: dict[tuple[int, int], np.ndarray] = {}
-    known_heads: dict[tuple[int, int], np.ndarray] = {}
-    if known_triples is not None:
-        tails_acc: dict[tuple[int, int], list[int]] = {}
-        heads_acc: dict[tuple[int, int], list[int]] = {}
-        for r in known_triples.select("h", "l", "t").collect():  # model-scale by contract
-            tails_acc.setdefault((r.h, r.l), []).append(r.t)
-            heads_acc.setdefault((r.l, r.t), []).append(r.h)
-        known_tails = {k: np.asarray(v, np.int64) for k, v in tails_acc.items()}
-        known_heads = {k: np.asarray(v, np.int64) for k, v in heads_acc.items()}
-    b_ktails = sc.broadcast(known_tails)
-    b_kheads = sc.broadcast(known_heads)
+    filtered = known_triples is not None
+    rows_in = test_triples.select(*_KEYS)
+    if filtered:
+        rows_in = _with_known_candidates(rows_in, known_triples)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         E = b_ent.value  # (V, k)
@@ -104,22 +89,13 @@ def rank_triples(
                 d_tail = np.abs(q_tail[:, None, :] - E[None, :, :]).sum(axis=2)
                 d_head = np.abs(E[None, :, :] - q_head[:, None, :]).sum(axis=2)
             else:
-                # squared L2 via ||q||² − 2qEᵀ + ||e||² (no sqrt — TransE.py:304-309)
-                d_tail = (q_tail * q_tail).sum(axis=1)[:, None] - 2.0 * (q_tail @ E.T) + e_sq[None, :]
-                d_head = (q_head * q_head).sum(axis=1)[:, None] - 2.0 * (q_head @ E.T) + e_sq[None, :]
-            ktails, kheads = b_ktails.value, b_kheads.value
-            if ktails or kheads:
-                # filtered protocol: known-true corruptions (other than
-                # the test triple itself) never outrank it
-                for i in range(len(h)):
-                    kt = ktails.get((int(h[i]), int(l[i])))
-                    if kt is not None:
-                        excl = kt[kt != t[i]]
-                        d_tail[i, excl] = np.inf
-                    kh = kheads.get((int(l[i]), int(t[i])))
-                    if kh is not None:
-                        excl = kh[kh != h[i]]
-                        d_head[i, excl] = np.inf
+                d_tail = _sq_dists(q_tail, E, e_sq)
+                d_head = _sq_dists(q_head, E, e_sq)
+            if filtered:
+                # known-true corruptions (the true entity is never among
+                # them) are pushed past every real candidate
+                _exclude(d_tail, pdf["excl_tail"].to_numpy())
+                _exclude(d_head, pdf["excl_head"].to_numpy())
             # 0-based rank = #candidates strictly closer (ties: stable
             # argsort order == candidate id order, so count equal-dist
             # candidates with smaller id)
@@ -136,106 +112,71 @@ def rank_triples(
                 {"h": h, "l": l, "t": t, "rank_head": rank_head, "rank_tail": rank_tail}
             )
 
-    return test_triples.select("h", "l", "t").mapInPandas(score, schema=_RANK_SCHEMA)
+    # a test set small enough to sit in one partition would otherwise
+    # be ranked on one core; the round-robin shuffle moves only ids
+    return rows_in.repartition(sc.defaultParallelism).mapInPandas(score, schema=_RANK_SCHEMA)
 
 
-def _model_vector_dfs(spark: SparkSession, model: TransEModel) -> tuple[DataFrame, DataFrame]:
-    """Model matrices as (id, vec) DataFrames — model-sized (V·k, L·k),
-    so they broadcast in the joins below."""
-    ent = spark.createDataFrame(
-        pd.DataFrame({"__eid": np.arange(model.entity.shape[0], dtype=np.int64),
-                      "__evec": list(model.entity)})
-    )
-    lab = spark.createDataFrame(
-        pd.DataFrame({"__lid": np.arange(model.label.shape[0], dtype=np.int64),
-                      "__lvec": list(model.label)})
-    )
-    return ent, lab
+def _sq_dists(q: np.ndarray, E: np.ndarray, e_sq: np.ndarray) -> np.ndarray:
+    """Squared L2 distance of each row of ``q`` to every entity, as
+    ‖q‖² − 2qEᵀ + ‖e‖² (no sqrt — ``TransE.py:304-309``). Built in place
+    on the BLAS product: one B×V array instead of four, with the same
+    bits as the expression form (−2x + a is a − 2x exactly)."""
+    d = q @ E.T
+    d *= -2.0
+    d += (q * q).sum(axis=1)[:, None]
+    d += e_sq
+    return d
 
 
-def _filtered_ranks_relational(
-    spark: SparkSession,
-    model: TransEModel,
-    raw_ranks: DataFrame,
-    known_triples: DataFrame,
-    distance: str,
-) -> DataFrame:
-    """Filtered-protocol ranks without collecting ``known_triples``.
-
-    filtered_rank = raw_rank − #{known-true corruptions that out-rank
-    the test triple}. The subtrahend is a join: test triples match
-    known triples on (h,l) for tail corruption / (l,t) for head
-    corruption, the corruption's distance comes from a broadcast join
-    against the model-sized vector tables, and "out-ranks" uses the raw
-    kernel's tie RULE (strictly closer, or equal-distance with a
-    smaller candidate id) — but not its exact ROUNDING: raw ranks come
-    from the kernel's expanded BLAS form (‖q‖²−2qEᵀ+‖e‖²) while this
-    path computes distances elementwise, and the two can disagree
-    within ~1 ulp of d_true. This path is therefore TIE-APPROXIMATE
-    relative to ``filter_method="broadcast"``: a corruption landing
-    exactly on the float boundary may shift a filtered rank by ±1
-    (head-to-head equivalence on non-adversarial models is pytest-
-    gated by ``test_filtered_relational_matches_broadcast``). Bit-exact parity
-    across the two formulas is not achievable anyway — BLAS block
-    summation order differs from any per-element fold.
-    One shuffle per side (the groupBy), and the
-    known-triple table is only ever shuffled on its join keys — this is
-    the 100 TB-KG shape; the driver-dict path is the model-scale
-    shortcut."""
-    from transe_pyspark_spark.functions import vector as V
-
-    dist_fn = V.l1 if distance == "L1" else V.l2_sq
-    ent, lab = _model_vector_dfs(spark, model)
-    known = known_triples.select("h", "l", "t").distinct()
-
-    # one row per test triple with the true triple's distance
-    test = (
-        raw_ranks.select("h", "l", "t")
-        .join(F.broadcast(ent.select(F.col("__eid").alias("h"), F.col("__evec").alias("__hv"))), "h")
-        .join(F.broadcast(lab.select(F.col("__lid").alias("l"), F.col("__lvec").alias("__lv"))), "l")
-        .join(F.broadcast(ent.select(F.col("__eid").alias("t"), F.col("__evec").alias("__tv"))), "t")
-        .select("h", "l", "t", dist_fn(V.add("__hv", "__lv"), F.col("__tv")).alias("__d_true"),
-                "__hv", "__lv", "__tv")
-    )
-
-    # tail side: known (h, l, t') with t' ≠ t that out-rank the true tail
-    kt = known.select("h", "l", F.col("t").alias("__cand"))
-    adj_tail = (
-        test.join(kt, ["h", "l"])
-        .filter(F.col("__cand") != F.col("t"))
-        .join(F.broadcast(ent.select(F.col("__eid").alias("__cand"), F.col("__evec").alias("__cv"))), "__cand")
-        .withColumn("__d", dist_fn(V.add("__hv", "__lv"), F.col("__cv")))
-        .filter(
-            (F.col("__d") < F.col("__d_true"))
-            | ((F.col("__d") == F.col("__d_true")) & (F.col("__cand") < F.col("t")))
+def _with_known_candidates(test: DataFrame, known_triples: DataFrame) -> DataFrame:
+    """``test`` plus ``excl_tail`` / ``excl_head``: the other known-true
+    tails of each row's (h, l) and heads of its (l, t), as ``array<long>``
+    of distinct entity ids (so at most V long; null when there is none).
+    The known triples are only joined on integer keys; one shuffle per
+    side, on the join output."""
+    known = known_triples.select(*_KEYS)
+    out = test
+    for side, true in (("tail", "t"), ("head", "h")):
+        cands = (
+            test.join(known.withColumnRenamed(true, "__c"), [k for k in _KEYS if k != true])
+            .where(F.col("__c") != F.col(true))
+            .groupBy(*_KEYS)
+            .agg(F.collect_set("__c").alias(f"excl_{side}"))
         )
-        .groupBy("h", "l", "t")
-        .agg(F.count(F.lit(1)).alias("__adj_tail"))
-    )
+        out = out.join(cands, _KEYS, "left")
+    return out
 
-    # head side: known (h', l, t) with h' ≠ h; d(e_h' + l, t)
-    kh = known.select(F.col("h").alias("__cand"), "l", "t")
-    adj_head = (
-        test.join(kh, ["l", "t"])
-        .filter(F.col("__cand") != F.col("h"))
-        .join(F.broadcast(ent.select(F.col("__eid").alias("__cand"), F.col("__evec").alias("__cv"))), "__cand")
-        .withColumn("__d", dist_fn(V.add("__cv", "__lv"), F.col("__tv")))
-        .filter(
-            (F.col("__d") < F.col("__d_true"))
-            | ((F.col("__d") == F.col("__d_true")) & (F.col("__cand") < F.col("h")))
-        )
-        .groupBy("h", "l", "t")
-        .agg(F.count(F.lit(1)).alias("__adj_head"))
-    )
 
-    return (
-        raw_ranks.join(adj_tail, ["h", "l", "t"], "left")
-        .join(adj_head, ["h", "l", "t"], "left")
-        .select(
-            "h", "l", "t",
-            (F.col("rank_head") - F.coalesce("__adj_head", F.lit(0))).cast("long").alias("rank_head"),
-            (F.col("rank_tail") - F.coalesce("__adj_tail", F.lit(0))).cast("long").alias("rank_tail"),
-        )
+def _exclude(d: np.ndarray, cands: np.ndarray) -> None:
+    """``d[i, c] = +inf`` for every id ``c`` in ``cands[i]`` (an array
+    of ids, or None for none)."""
+    lens = np.fromiter((0 if c is None else len(c) for c in cands), np.int64, len(cands))
+    if lens.any():
+        cols = np.concatenate([c for c in cands if c is not None])
+        d[np.repeat(np.arange(len(cands)), lens), cols] = np.inf
+
+
+def rank_metrics(ranks: DataFrame, hits_k: int = 10) -> DataFrame:
+    """One-row frame of Mean Rank, Hits@``hits_k``, MRR, Hits@1 and
+    Hits@3 over the ``rank_head`` and ``rank_tail`` columns of ``ranks``
+    taken together — one aggregation, so the plan reads ``ranks`` once.
+    Each metric is the mean of a per-rank term; the mean over both
+    columns is half the mean of the per-row sum of the two terms."""
+    def both(term) -> Column:
+        return F.avg(term(F.col("rank_head")) + term(F.col("rank_tail"))) / 2
+
+    def hit(k: int):
+        return lambda r: F.when(r <= k, 1.0).otherwise(0.0)
+
+    return ranks.agg(
+        both(lambda r: r).alias("mean_rank"),
+        both(hit(hits_k)).alias(f"hits_at_{hits_k}"),
+        # standard KG-completion extras (beyond the reference's two):
+        # MRR over 1-based ranks, hits@1/@3 with the same 0-based quirk
+        both(lambda r: 1.0 / (r + 1)).alias("mrr"),
+        both(hit(1)).alias("hits_at_1"),
+        both(hit(3)).alias("hits_at_3"),
     )
 
 
@@ -271,7 +212,6 @@ def evaluate_link_prediction(
     distance: str = "L2",
     hits_k: int = 10,
     known_triples: DataFrame | None = None,
-    filter_method: str = "relational",
     progress_every: int | None = None,
     progress_fn=None,
 ) -> dict[str, float]:
@@ -286,7 +226,7 @@ def evaluate_link_prediction(
     driver-side pass over the (test-set-sized) result in deterministic
     (h, l, t) order — the reference's sequential-scan UX without
     serializing the scoring. ``progress_fn`` overrides ``print``."""
-    ranks = rank_triples(spark, model, test_triples, distance, known_triples, filter_method)
+    ranks = rank_triples(spark, model, test_triples, distance, known_triples)
     if progress_every:
         # the replay collects the ranks anyway, so final metrics come
         # from the same collected array instead of re-running the kernel
@@ -298,22 +238,5 @@ def evaluate_link_prediction(
             "hits_at_1": float((r <= 1).mean()),
             "hits_at_3": float((r <= 3).mean()),
         }
-    both = ranks.select(F.col("rank_head").alias("rank")).unionAll(
-        ranks.select(F.col("rank_tail").alias("rank"))
-    )
-    row = both.agg(
-        F.avg("rank").alias("mean_rank"),
-        F.avg(F.when(F.col("rank") <= hits_k, 1.0).otherwise(0.0)).alias("hits"),
-        # standard KG-completion extras (beyond the reference's two):
-        # MRR over 1-based ranks, hits@1/@3 with the same 0-based quirk
-        F.avg(1.0 / (F.col("rank") + 1)).alias("mrr"),
-        F.avg(F.when(F.col("rank") <= 1, 1.0).otherwise(0.0)).alias("h1"),
-        F.avg(F.when(F.col("rank") <= 3, 1.0).otherwise(0.0)).alias("h3"),
-    ).collect()[0]
-    return {
-        "mean_rank": float(row.mean_rank),
-        f"hits_at_{hits_k}": float(row.hits),
-        "mrr": float(row.mrr),
-        "hits_at_1": float(row.h1),
-        "hits_at_3": float(row.h3),
-    }
+    row = rank_metrics(ranks, hits_k).collect()[0]
+    return {name: float(value) for name, value in row.asDict().items()}

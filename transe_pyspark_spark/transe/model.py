@@ -12,9 +12,9 @@ sink at ``utils.py:44-49``) and for the relational scale-out path.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 EMBEDDING_SCHEMA = T.StructType(
@@ -75,6 +75,17 @@ def _load_pickled_matrix(path: str) -> np.ndarray:
     return mat
 
 
+def _rows_by_id(pdf: pd.DataFrame, kind: str) -> np.ndarray:
+    """The ``kind`` rows of a checkpoint frame as a matrix whose row i
+    is id i, whatever order the rows were read in."""
+    part = pdf[pdf["kind"] == kind]
+    order = np.argsort(part["id"].to_numpy(), kind="stable")
+    ids = part["id"].to_numpy()[order]
+    if not np.array_equal(ids, np.arange(len(ids))):
+        raise ValueError(f"checkpoint {kind} ids are not 0..{len(ids) - 1}")
+    return np.array(list(part["vec"].to_numpy()[order]), dtype=np.float64)
+
+
 class TransEModel:
     """Driver-held embedding matrices + checkpoint IO.
 
@@ -100,19 +111,18 @@ class TransEModel:
         return self.entity.shape[1]
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(int(i), "entity", v.tolist()) for i, v in enumerate(self.entity)] + [
-            (int(i), "label", v.tolist()) for i, v in enumerate(self.label)
-        ]
-        return spark.createDataFrame(rows, EMBEDDING_SCHEMA)
+        n_ent, n_lab = len(self.entity), len(self.label)
+        pdf = pd.DataFrame({
+            "id": np.concatenate([np.arange(n_ent), np.arange(n_lab)]).astype(np.int64),
+            "kind": ["entity"] * n_ent + ["label"] * n_lab,
+            "vec": list(self.entity) + list(self.label),
+        })
+        return spark.createDataFrame(pdf, EMBEDDING_SCHEMA)
 
     @classmethod
     def from_df(cls, df: DataFrame) -> "TransEModel":
-        rows = df.select("id", "kind", "vec").collect()  # model-sized by contract
-        ent = {r["id"]: r["vec"] for r in rows if r["kind"] == "entity"}
-        lab = {r["id"]: r["vec"] for r in rows if r["kind"] == "label"}
-        entity = np.array([ent[i] for i in range(len(ent))], dtype=np.float64)
-        label = np.array([lab[i] for i in range(len(lab))], dtype=np.float64)
-        return cls(entity, label)
+        pdf = df.select("id", "kind", "vec").toPandas()  # model-sized by contract
+        return cls(_rows_by_id(pdf, "entity"), _rows_by_id(pdf, "label"))
 
     def checkpoint(self, spark: SparkSession, path: str) -> None:
         """Parquet checkpoint (replaces pickle backup, ``utils.py:44-49``)."""
