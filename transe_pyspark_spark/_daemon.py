@@ -5,10 +5,8 @@ At the start of every task ``pyspark.worker_util.setup_spark_files`` calls
 ``zipimporter`` in ``sys.path_importer_cache`` re-read its archive's whole
 central directory; a worker importing pyspark from ``pyspark.zip`` (1,328
 entries) holds 16 of them, about 0.2 core-s per task however small the task.
-A dropped entry costs nothing: imported modules are untouched, and a later
+A dropped entry costs little: imported modules are untouched, and a later
 import rebuilds the importer from ``zipimport._zip_directory_cache``.
-CPython 3.13 made ``zipimporter.invalidate_caches`` lazy, so there the
-daemon runs unmodified.
 
 Selected by ``spark.python.daemon.module`` (see ``session._DEFAULT_CONF``).
 """
@@ -32,7 +30,6 @@ def drop_zip_importers(worker_main):
 
 
 if __name__ == "__main__":
-    if sys.version_info < (3, 13):
-        # manager()'s forked workers look worker_main up in pyspark.daemon.
-        pyspark.daemon.worker_main = drop_zip_importers(pyspark.daemon.worker_main)
+    # manager()'s forked workers look worker_main up in pyspark.daemon.
+    pyspark.daemon.worker_main = drop_zip_importers(pyspark.daemon.worker_main)
     pyspark.daemon.manager()
