@@ -3,30 +3,41 @@
 
 Each query is forced to full materialization via a count over the
 result (no driver-side row transfer beyond the count), timed
-wall-clock. Every recorded number is the MEDIAN of 3 steady-state runs
-(after one untimed warmup), so single-run machine noise — the phantom
-+27% between the r01 and r02 recordings — can't masquerade as a
-regression. ``value`` is the total seconds (sum of medians) across
-headline queries — the number BENCH_r{N}.json records and BASELINE.md
-is judged against; ``runs`` carries the raw per-run samples.
+wall-clock: one untimed warm-up, then ``N_RUNS`` timed runs, and the
+recorded number is their MEDIAN. ``value`` is the total seconds (sum of
+medians) across the headline rows — the number BENCH_r{N}.json records
+and BASELINE.md is judged against.
 
-CLOBBER FOOTGUN: without SPARK_GRAFT_BENCH_OUT, the full JSON lands at
-BENCH_full_r{N}.json for the round PROGRESS.jsonl currently reports —
-a post-round smoke run therefore SILENTLY OVERWRITES (or pre-shadows)
-the NEXT round's driver artifact. For any ad-hoc run, set
-SPARK_GRAFT_BENCH_OUT to a scratch path (or a *_calm.json name if the
-reading is worth keeping — the r11 precedent: BENCH_full_r11_calm.json).
+Payload: ``queries`` (the headline medians), ``scale_paths`` and ``sf1``
+(reference sections, not summed into ``value``), ``runs`` (every row's
+raw samples), ``cpu_s`` (one entry per ``runs`` key: the core-seconds
+the bench process tree — this process, the Spark JVM, the PySpark
+daemon and workers, and reaped subprocesses — used during that row,
+warm-up included) and ``section_cpu`` (each section's host-wide
+CPU-mode fractions, steal among them). A row whose wall time moved
+while its ``cpu_s`` did not was slowed by the host, not by the code.
+
+Without SPARK_GRAFT_BENCH_OUT, the full JSON is written to
+BENCH_full_r{N}.json for the round after the newest BENCH_r{N} /
+CORRECTNESS_r{N} artifact in the repo, so an ad-hoc run overwrites the
+next round's artifact: point SPARK_GRAFT_BENCH_OUT at a scratch path
+for such runs.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
+
+import procfs  # noqa: E402
 
 from transe_pyspark_spark.plans.queries import REGISTRY  # noqa: E402
 from transe_pyspark_spark.session import get_spark  # noqa: E402
@@ -239,12 +250,58 @@ SF1_HEADLINE = [
 ]
 
 
-def _train_epoch_seconds(spark) -> float:
+def _median(samples: list[float]) -> float:
+    return sorted(samples)[len(samples) // 2]
+
+
+def _tree_cpu_s() -> float:
+    """Core-seconds used so far by the bench process tree. ``procfs``
+    counts this process and its live descendants (the JVM, the PySpark
+    daemon and workers); it leaves out children this process has
+    already reaped, so ``os.times()`` adds those (the relational-epoch
+    subprocess)."""
+    t = os.times()
+    return procfs.cpu_now()["total"] + t.children_user + t.children_system
+
+
+def _with_cpu(fn, *args) -> tuple:
+    """``fn(*args)``'s result tuple with one more element: the
+    core-seconds the bench process tree used while it ran."""
+    cpu0 = _tree_cpu_s()
+    out = fn(*args)
+    return (*out, round(_tree_cpu_s() - cpu0, 3))
+
+
+def _timed(run, n: int = N_RUNS) -> tuple[float, list[float], float]:
+    """One untimed warm-up call of ``run``, then ``n`` timed calls.
+    Returns the median wall seconds, the samples, and the core-seconds
+    of all ``n + 1`` calls."""
+
+    def warm_then_sample() -> tuple[float, list[float]]:
+        run()  # warmup: JIT/codegen compile, parquet footer cache
+        samples = []
+        for _ in range(n):
+            t0 = time.perf_counter()
+            run()
+            samples.append(round(time.perf_counter() - t0, 3))
+        return _median(samples), samples
+
+    return _with_cpu(warm_then_sample)
+
+
+def _train_epoch_seconds(spark, overlap: bool = False) -> tuple[float, list[float]]:
     """Per-epoch TransE training time at the reference's published
     scale (FB15k-237: 483,142 train triples, 14,541 entities, 237
     relations, k=50, 2 batches — BASELINE.md rows 1-5; 13.5 s/epoch on
     its 1-worker config). Synthetic triples at identical shape; median
-    of epochs 2-4 (epoch 1 pays broadcast warmup)."""
+    of epochs 2-4 (epoch 1 pays broadcast warmup).
+
+    ``overlap=True``: pairs of batches run their kernel jobs
+    concurrently against one model snapshot (documented deviation —
+    two concurrent minibatches of synchronous data-parallel SGD;
+    quality-band tested in ``test_overlap_trainer_quality_band``). The
+    kernel job is ~85% of a batch, so overlapping two roughly halves
+    the epoch."""
     import numpy as np
     import pandas as pd
 
@@ -256,38 +313,14 @@ def _train_epoch_seconds(spark) -> float:
         {"h": rng.integers(0, V, N), "l": rng.integers(0, L, N), "t": rng.integers(0, V, N)}
     )
     triples = spark.createDataFrame(pdf).repartition(32)
-    tr = TransETrainer(k=K, n_epochs=1 + N_RUNS, n_batches=2, learning_rate=0.01, seed=1)
-    tr.fit(spark, triples, n_entities=V, n_labels=L)
-    later = [round(t, 3) for t in tr.epoch_times[1:]]
-    return sorted(later)[len(later) // 2], later
-
-
-def _train_epoch_overlap_seconds(spark) -> float:
-    """Same shape, ``overlap=True``: pairs of batches run their kernel
-    jobs concurrently against one model snapshot (documented deviation
-    — two concurrent minibatches of synchronous data-parallel SGD;
-    quality-band tested in ``test_overlap_trainer_quality_band``).
-    The kernel job is ~85% of a batch, so overlapping two roughly
-    halves the epoch."""
-    import numpy as np
-    import pandas as pd
-
-    from transe_pyspark_spark.transe.train import TransETrainer
-
-    V, L, N, K = 14541, 237, 483142, 50
-    rng = np.random.default_rng(43)
-    pdf = pd.DataFrame(
-        {"h": rng.integers(0, V, N), "l": rng.integers(0, L, N), "t": rng.integers(0, V, N)}
-    )
-    triples = spark.createDataFrame(pdf).repartition(32)
     tr = TransETrainer(k=K, n_epochs=1 + N_RUNS, n_batches=2, learning_rate=0.01, seed=1,
-                       overlap=True)
+                       overlap=overlap)
     tr.fit(spark, triples, n_entities=V, n_labels=L)
     later = [round(t, 3) for t in tr.epoch_times[1:]]
-    return sorted(later)[len(later) // 2], later
+    return _median(later), later
 
 
-def _train_epoch_relational_seconds(spark, mode: str = "auto") -> float:
+def _train_epoch_relational_seconds(mode: str = "auto") -> tuple[float, list[float], dict]:
     """Per-epoch time for the RELATIONAL TransE trainer at the same
     FB15k-237 shape as ``_train_epoch_seconds`` (VERDICT r03 item 2).
 
@@ -311,12 +344,11 @@ def _train_epoch_relational_seconds(spark, mode: str = "auto") -> float:
     state. The bench JVM idles meanwhile, so nothing contends. Returns
     (median_epoch_s, per_epoch_list, phase_seconds) — the phase
     breakdown parsed from the subprocess transcript lands in the bench
-    JSON under runs."""
+    JSON under ``phases``."""
     import re
     import subprocess
 
-    script = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "scripts", "bench_relational_epoch.py")
+    script = os.path.join(HERE, "scripts", "bench_relational_epoch.py")
     args = [sys.executable, script, "4"]
     if mode == "shuffled":
         # force broadcast_model_limit=0: the beyond-broadcast regime
@@ -360,10 +392,10 @@ def _train_epoch_relational_seconds(spark, mode: str = "auto") -> float:
     if per_epoch:
         phases = dict(phases)
         phases["per_epoch"] = per_epoch
-    return sorted(later)[len(later) // 2], later, phases
+    return _median(later), later, phases
 
 
-def _bucketed_join_seconds(spark, sf_dir: str) -> float:
+def _bucketed_join_seconds(spark, sf_dir: str) -> tuple[float, list[float], float]:
     """Pay-the-shuffle-once story in numbers: orders and lineitem are
     bucketed by their join key at WRITE time (setup, untimed), so the
     timed fact-fact join + aggregation runs with no Exchange on either
@@ -397,13 +429,7 @@ def _bucketed_join_seconds(spark, sf_dir: str) -> float:
             .count()
         )
 
-    run()  # warmup: codegen + footer cache
-    samples = []
-    for _ in range(N_RUNS):
-        t0 = time.time()
-        run()
-        samples.append(round(time.time() - t0, 3))
-    return sorted(samples)[len(samples) // 2], samples
+    return _timed(run)
 
 
 def _cpu_times() -> dict | None:
@@ -411,9 +437,8 @@ def _cpu_times() -> dict | None:
     for per-section CPU-mode fractions (r12, VERDICT r11 ask #4): the
     relational-big epoch spread settled as windows of ~99% KERNEL time
     across all cores (a host-era pathology hitting the Python/Arrow
-    IPC path) that the short 3-sample speed probes dodge entirely —
-    a mover triages honestly only when the artifact records where the
-    CPU actually went during its section."""
+    IPC path) — a mover triages honestly only when the artifact
+    records where the host's CPU went during its section."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
@@ -439,483 +464,45 @@ def _cpu_frac(a: dict | None, b: dict | None) -> dict | None:
     return {k: round(v / tot, 3) for k, v in d.items()}
 
 
-#: committed calm-reference probe band (BASELINE.md "r13 calm-window
-#: reference": jvm_codegen 0.126-0.138, jvm_shuffle brackets 0.43-0.54)
-#: — the denominator every era verdict compares against. Update when a
-#: new calm reference lands in BASELINE.md.
-_CALM_BAND = {"jvm_codegen": 0.138, "jvm_shuffle": 0.43}
-#: a probe (or bracket midpoint) within this factor of the calm band
-#: counts as era-comparable (VERDICT r13 ask #3's 1.5×)
-_ERA_TOL = 1.5
-
-
-#: Per-row sf1 quiet bands (r15, VERDICT r14 ask #2): section-level
-#: era stamps can't see mid-section host windows — the calm-stamped
-#: r14 final artifact carried sf1 rows 1.9-3× their quiet bands
-#: (assortativity 6.34 vs 2.7-3.5, stream_value_drift 10.3 vs 3.4-3.9,
-#: sssp 8.9 vs 5.8-7.7). Each row's band is MACHINE-READABLE here so
-#: movers self-flag in the artifact itself: lo = the row's minimum
-#: across the five committed calm references (BENCH_full_{r12_calm,
-#: r13_calm, r13_calm2, r14_calm, r14_calm3}.json — the BASELINE.md
-#: quiet-window record), hi = 1.5 × lo (the same _ERA_TOL factor the
-#: era gate uses; spot-checked against every BASELINE.md settled band:
-#: stream_value_drift 3.4-3.9 ⊂ [3.37, 5.06], interpolate 0.6-0.9 ⊂
-#: [0.55, 0.83]≈, hybrid_rrf 2.8-3.4 ⊂ [2.61, 3.91]). A row above hi
-#: is EITHER a regression or a mid-section host window — triage order:
-#: section_cpu system-fraction first (kernel era), then normalized
-#: ratio (probe drift), then code. Regenerate lo after a new calm
-#: reference lands: scripts/quiet_bands.py.
-_SF1_QUIET_BANDS: dict[str, tuple[float, float]] = {
-    "absent_followup_events": (0.331, 0.497),
-    "acf_daily_value_events": (0.61, 0.915),
-    "approx_percentile_sketch": (0.197, 0.295),
-    "assoc_rules_parts": (0.886, 1.329),
-    "assortativity_trading": (2.699, 4.048),
-    "benford_totalprice_orders": (0.363, 0.544),
-    "bfs_hops_trading": (5.577, 8.366),
-    "bigram_familiarity_docs": (7.794, 11.691),
-    "bm25_docs": (0.573, 0.859),
-    "cdc_apply_customers": (0.591, 0.886),
-    "chi2_lang_source_docs": (0.554, 0.831),
-    "collocations_docs": (0.961, 1.442),
-    "corpus_pipeline": (15.369, 23.053),
-    "data_quality_audit": (1.26, 1.89),
-    "decayed_user_scores": (0.284, 0.426),
-    "dedup_bursts_events": (0.77, 1.155),
-    "doc_keywords_lift": (1.596, 2.394),
-    "embedding_covariance_vecs": (1.132, 1.698),
-    "equi_depth_prices_approx": (1.023, 1.534),
-    "event_transitions": (0.832, 1.248),
-    "eventually_follows_events": (2.329, 3.494),
-    "fd_violations_docs": (0.43, 0.645),
-    "funnel_ordered_steps": (0.659, 0.989),
-    "gini_customer_spend": (1.138, 1.707),
-    "golden_record_docs": (0.534, 0.801),
-    "heavy_hitter_words": (1.693, 2.54),
-    "hits_copurchase_parts": (5.707, 8.56),
-    "hybrid_rrf_docs": (2.609, 3.913),
-    "interpolate_hourly": (0.55, 0.825),
-    "ivm_summary_customers": (0.825, 1.237),
-    "jaccard_prefix_near_pairs": (7.477, 11.216),
-    "km_conversion_events": (1.429, 2.143),
-    "ks_value_drift_events": (0.747, 1.121),
-    "lpa_communities_trading": (7.185, 10.777),
-    "mann_kendall_daily_events": (0.788, 1.182),
-    "mannwhitney_value_events": (0.693, 1.039),
-    "minhash_pairs_raw": (3.311, 4.966),
-    "multires_rollup_events": (0.596, 0.894),
-    "mutual_info_events": (0.652, 0.978),
-    "nearest_click_purchase": (0.286, 0.429),
-    "node_clustering_parts": (0.431, 0.646),
-    "pagerank_trading_graph": (0.86, 1.29),
-    "pareto_frontier_lineitem": (2.2, 3.3),
-    "quantile_normalize_docs": (1.545, 2.317),
-    "region_revenue": (2.576, 3.864),
-    "rfm_segments_customers": (3.952, 5.928),
-    "robust_outliers_events": (7.875, 11.812),
-    "runs_test_daily_events": (0.711, 1.067),
-    "seasonal_anomaly_events": (0.454, 0.681),
-    "sessionize_events": (0.743, 1.115),
-    "source_divergence_docs": (0.701, 1.051),
-    "spearman_qty_price_lineitem": (3.389, 5.083),
-    "sssp_trading_graph": (5.837, 8.755),
-    "stream_tumbling_counts": (1.641, 2.462),
-    "stream_value_drift": (3.372, 5.058),
-    "tfidf_top_terms_docs": (1.036, 1.554),
-    "top_event_paths": (0.96, 1.44),
-    "top_revenue_orders": (1.248, 1.872),
-    "triangle_stats_parts": (6.674, 10.011),
-    "unigram_nll_docs": (0.725, 1.087),
-    "vocab_growth_sources": (0.71, 1.065),
-    "wasserstein_value_drift_events": (0.744, 1.116),
-    "weighted_jaccard3_prefix_docs": (7.369, 11.053),
-}
-
-
-#: Per-row HEADLINE quiet bands (r16): the sf1 section got per-row
-#: bands in r15 (VERDICT r14 ask #2); the judged ``value`` section had
-#: none, and a mid-headline host window is invisible to the section's
-#: (start, end) probe brackets — the r16 baseline run carried a
-#: calm-stamped headline of 39.4 s whose storm rows (minhash 12.0 s vs
-#: a 1.12 s calm floor, knn 4.0 vs 0.55, stream_tumbling 7.0 vs 1.67)
-#: sat inside an 11%-steal window the brackets never saw. Same rule as
-#: _SF1_QUIET_BANDS: lo = row minimum across the five committed calm
-#: references (BENCH_full_{r12_calm,r13_calm,r13_calm2,r14_calm,
-#: r14_calm3}.json), hi = 1.5 × lo (_ERA_TOL). Regenerate:
-#: scripts/quiet_bands.py --headline.
-_HEADLINE_QUIET_BANDS: dict[str, tuple[float, float]] = {
-    "asof_purchase_click": (0.338, 0.507),
-    "bucketed_orders_lineitem": (0.354, 0.531),
-    "doc_chunks": (0.359, 0.538),
-    "gopher_quality_docs": (0.356, 0.534),
-    "jaccard3_near_pairs": (1.952, 2.928),
-    "knn_brute_force": (0.545, 0.818),
-    "minhash_pairs_raw": (1.118, 1.677),
-    "pricing_summary": (0.514, 0.771),
-    "region_revenue": (1.214, 1.821),
-    "stream_tumbling_counts": (1.672, 2.508),
-    "text_stats": (0.26, 0.39),
-    "top_revenue_orders": (1.175, 1.763),
-    "transe_rank_eval": (0.612, 0.918),
-    "transe_train_epoch": (1.814, 2.721),
-    "window_order_seq": (0.208, 0.312),
-}
-
-
-def _band_annotations(values: dict, bands: dict) -> dict:
-    """Per-row quiet-band verdicts (VERDICT r14 ask #2; extended to the
-    headline section in r16). ``band_ok`` False means the row read
-    above 1.5× its calm floor — an era window or a regression, never
-    silently era-comparable. Rows without calm history carry
-    ``band: null``."""
-    out = {}
-    for name, v in values.items():
-        if not isinstance(v, (int, float)):
-            continue
-        band = bands.get(name)
-        out[name] = {
-            "value": v,
-            "band": list(band) if band else None,
-            "band_ok": (v <= band[1]) if band else None,
-        }
-    return out
-
-
-def _sf1_band_annotations(sf1: dict) -> dict:
-    return _band_annotations(sf1, _SF1_QUIET_BANDS)
-
-
-def _within_calm_band(cal: dict[str, float]) -> bool:
-    """True when both speed probes sit within _ERA_TOL of the calm
-    reference — the era-aware half of the warmup gate."""
-    return (
-        cal["jvm_codegen"] <= _ERA_TOL * _CALM_BAND["jvm_codegen"]
-        and cal["jvm_shuffle"] <= _ERA_TOL * _CALM_BAND["jvm_shuffle"]
-    )
-
-
-def _section_era(cg_pair: list[float], sh_pair: list[float]) -> str:
-    """Era stamp for one section from its (start, end) probe brackets
-    (VERDICT r13 ask #3): "calm" only when the codegen brackets agree
-    within _ERA_TOL (no mid-section drift) AND both bracket midpoints
-    sit within _ERA_TOL of the committed calm band — otherwise the
-    section self-labels "slow" and its rows are not era-comparable."""
-    lo, hi = min(cg_pair), max(cg_pair)
-    if lo <= 0:
-        return "slow"
-    agree = hi <= _ERA_TOL * lo
-    in_band = (
-        sum(cg_pair) / 2 <= _ERA_TOL * _CALM_BAND["jvm_codegen"]
-        and sum(sh_pair) / 2 <= _ERA_TOL * _CALM_BAND["jvm_shuffle"]
-    )
-    return "calm" if agree and in_band else "slow"
-
-
-def _probe_codegen(spark) -> float:
-    """The jvm_codegen probe alone (median of 3, after a warmup) —
-    the cheap section-bracket sample. r11 (VERDICT r10 ask #4): a
-    single run-level probe midpoint divided every normalized row, so
-    when machine speed drifted MID-RUN (r10: the midpoint nearly
-    halved r09→r10) 18 normalized ratios moved while only 4 raw rows
-    did — the normalization manufactured false movers. Each section
-    now gets its own (start, end) bracket and its rows normalize by
-    that bracket's midpoint."""
-    fn = lambda: spark.range(500_000_000).selectExpr("sum(id * 2 + 7)").collect()  # noqa: E731
-    fn()  # warmup
-    s = []
-    for _ in range(3):
-        t0 = time.time()
-        fn()
-        s.append(round(time.time() - t0, 3))
-    return sorted(s)[1]
-
-
-def _probe_codegen_once(spark) -> float:
-    """ONE codegen-probe sample, no warmup — the cheap (~0.15 s calm)
-    per-row era marker taken right after each headline row (r16). The
-    JVM is warm mid-run, so a single sample is an honest read of the
-    host at that instant; it exists to place a row INSIDE or OUTSIDE a
-    host window the section brackets cannot see."""
-    t0 = time.time()
-    spark.range(500_000_000).selectExpr("sum(id * 2 + 7)").collect()
-    return round(time.time() - t0, 3)
-
-
-def _await_calm_probe(spark, rounds: int = 6, sleep_s: int = 5) -> float:
-    """Bounded wait for the host to re-enter the calm codegen band;
-    returns the last probe either way (the caller records it — a retry
-    taken through a still-rough window self-labels)."""
-    p = _probe_codegen_once(spark)
-    for _ in range(rounds):
-        if p <= _ERA_TOL * _CALM_BAND["jvm_codegen"]:
-            break
-        time.sleep(sleep_s)
-        p = _probe_codegen_once(spark)
-    return p
-
-
-#: retry budget: a storm spanning the whole run must not double it
-_MAX_ERA_RETRIES_HEADLINE = 8
-_MAX_ERA_RETRIES_SF1 = 8
-
-
-def _era_retry_rows(
-    spark,
-    times: dict,
-    runs: dict,
-    bands: dict,
-    timing_fns: dict,
-    max_retries: int,
-    section: str,
-    enabled: bool,
-) -> dict:
-    """Row-granular era retry (r16 measurement fix, documented in
-    OPTIMIZATION_r16.md): a row whose median read above its committed
-    calm band (hi = 1.5 × the row's minimum across the five committed
-    calm references) was timed through a host window (the r16 baseline:
-    four consecutive headline rows 4-11× their floors inside an
-    11%-steal window, section-stamped calm) OR regressed — the two
-    cases the bench must separate because ``value`` is judged
-    cross-round. Each suspect row gets ONE retry: a bounded wait for
-    the calm codegen band, then the row's ORIGINAL timing methodology
-    re-run (same warmup + sample count). The retry median replaces the
-    first only when the retry window probed calm AND the retry is
-    faster (a genuine regression reads the same both times and keeps
-    its first number); BOTH measurements and both probes are recorded
-    under ``era_retries`` and ``runs["<name>__first"]`` — nothing is
-    discarded. Enabled only at the 32-CPU reference condition the
-    bands were recorded under (the 8-CPU scaling run would flag every
-    row); capped at ``max_retries`` rows per section."""
-    retries: dict[str, dict] = {}
-    if not enabled:
-        return retries
-    suspects = [
-        n for n, v in times.items()
-        if isinstance(v, (int, float)) and n in bands and n in timing_fns
-        and v > bands[n][1]
-    ]
-    # worst offenders first: a marginal 1.6×-band row must not exhaust
-    # the cap before a 10× storm row gets its retry
-    suspects.sort(key=lambda n: times[n] / bands[n][1], reverse=True)
-    for name in suspects[:max_retries]:
-        probe_before = _await_calm_probe(spark)
-        try:
-            med, samples = timing_fns[name]()
-        except Exception as e:  # noqa: BLE001 — a failed retry keeps the first number
-            retries[name] = {"first_median": times[name], "retry_error": str(e)[:200]}
-            continue
-        calm = probe_before <= _ERA_TOL * _CALM_BAND["jvm_codegen"]
-        use_retry = calm and med < times[name]
-        retries[name] = {
-            "first_median": times[name],
-            "first_runs": runs.get(name),
-            "retry_median": med,
-            "retry_runs": samples,
-            "probe_before_retry": probe_before,
-            "retry_window_calm": calm,
-            "used": "retry" if use_retry else "first",
-            "band": list(bands[name]),
-        }
-        print(
-            f"# era_retry[{section}] {name}: first={times[name]} retry={med} "
-            f"probe={probe_before} used={'retry' if use_retry else 'first'}",
-            file=sys.stderr,
-        )
-        if use_retry:
-            runs[f"{name}__first"] = runs.get(name)
-            runs[name] = samples
-            times[name] = med
-    return retries
-
-
-def _probe_shuffle(spark) -> float:
-    """The jvm_shuffle probe alone (median of 3, after a warmup) — the
-    exchange-machinery section-bracket sample. Added late-r11: the r11
-    run showed the codegen bracket STABLE across the sf1 section
-    (0.121→0.123) while every shuffle-heavy row ran ~2× its r10 time
-    and the run-level jvm_shuffle probe sat at 1.3-1.6× its r10 value —
-    shuffle capacity (disk/IPC) drifts independently of ALU throughput,
-    so shuffle-bound rows must triage against a shuffle bracket, not
-    the codegen one."""
-    from pyspark.sql import functions as F
-
-    fn = lambda: (  # noqa: E731
-        spark.range(20_000_000)
-        .groupBy((F.col("id") % 100_000).alias("k"))
-        .agg(F.sum("id"))
-        .count()
-    )
-    fn()  # warmup
-    s = []
-    for _ in range(3):
-        t0 = time.time()
-        fn()
-        s.append(round(time.time() - t0, 3))
-    return sorted(s)[1]
-
-
-def _calibration(spark) -> dict[str, float]:
-    """Machine-speed probes on FIXED synthetic work — no testdata, no
-    repo code — so a cross-round shift in these numbers measures the
-    ENVIRONMENT, not the engine. Motivated by r03→r04: every shared
-    query slowed 9-51% with unchanged plans and the per-round PROGRESS
-    log shows the VM was rebuilt between those rounds; without a
-    calibration row that looked like a code regression. Probes: one
-    whole-stage-codegen scan (JVM integer throughput), one fixed
-    32-partition shuffle (exchange machinery), one numpy matmul (BLAS /
-    Python-side speed). Each is the median of 3."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    def med(fn):
-        fn()  # warmup
-        s = []
-        for _ in range(3):
-            t0 = time.time()
-            fn()
-            s.append(round(time.time() - t0, 3))
-        return sorted(s)[1]
-
-    out = {}
-    out["jvm_codegen"] = _probe_codegen(spark)
-    out["jvm_shuffle"] = _probe_shuffle(spark)
-    a = np.random.default_rng(0).random((2000, 2000))
-    out["numpy_matmul"] = med(lambda: a @ a)
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    sys.path.insert(0, os.path.join(HERE, "scripts"))
     spark = get_spark("bench")
     # Warm the JVM + parquet footers so q1 doesn't pay session startup.
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
-    calibration = _calibration(spark)
-    print(f"# calibration: {calibration}", file=sys.stderr)
-
-    # Warmup-proof the headline section (VERDICT r12 ask #3): the
-    # committed r12 calm headline was hostage to JVM slow-start — the
-    # start bracket read jvm_codegen 0.223 vs 0.094 at run end (2.4×),
-    # and the headline section runs FIRST, so cross-round headline
-    # sums conflated warmup era with engine speed. Loop the codegen
-    # probe until consecutive samples agree within 1.25× (≤8 extra
-    # probes), then RE-TAKE the whole start calibration so the
-    # headline bracket and every normalized row divide by post-warmup
-    # denominators. Done-bar: a calm artifact's start/end calibration
-    # brackets agree within 1.5×.
-    # convergence tolerance 1.10 (was 1.25 in r13): the first r14 calm
-    # run converged at [0.152, 0.128] (1.19) yet the JVM kept warming
-    # through the headline section — start/end brackets read
-    # 0.146/0.097 (1.505×), a hair past the era gate's own 1.5×
-    # agreement bar. Tighter convergence costs a few 1-second probes
-    # and buys brackets that actually agree.
-    warmup_trail = [calibration["jvm_codegen"]]
-    for _ in range(10):
-        p = _probe_codegen(spark)
-        prev = warmup_trail[-1]
-        warmup_trail.append(p)
-        if max(p, prev) <= 1.10 * min(p, prev):
-            break
-    calibration = _calibration(spark)
-    print(
-        f"# warmup trail: {warmup_trail} -> recalibrated: {calibration}",
-        file=sys.stderr,
-    )
-    # ERA gate (VERDICT r13 ask #3): consecutive-sample agreement alone
-    # passes slow-but-stable hosts — the r13 driver run converged at
-    # [1.056, 1.087], a plateau ~7× slower than its own end-of-run
-    # probe, and the committed headline was timed inside it. After
-    # convergence, also require the warmed probes to sit within
-    # _ERA_TOL of the committed calm-reference band; keep warming
-    # (bounded) while they don't, and stamp every section's era in the
-    # artifact either way (`_section_era`) so a slow-era number can
-    # never masquerade as era-comparable.
-    era_extra_probes = []
-    for _ in range(6):
-        if _within_calm_band(calibration):
-            break
-        era_extra_probes.append(
-            [calibration["jvm_codegen"], calibration["jvm_shuffle"]]
-        )
-        time.sleep(5)
-        calibration = _calibration(spark)
-    if era_extra_probes:
-        print(
-            f"# era gate: {len(era_extra_probes)} extra warm round(s): "
-            f"{era_extra_probes} -> {calibration}",
-            file=sys.stderr,
-        )
-    cpu_run_start = _cpu_times()
-
-    # per-row era machinery (r16): bands + retries apply only at the
-    # 32-CPU reference condition the calm bands were recorded under —
-    # at the driver's low-CPU scaling run every row legitimately reads
-    # above a 32-CPU band and mass retries would burn its wall clock
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    era_rows_enabled = (cpus_env == "32") or (cpus_env is None and os.cpu_count() == 32)
-
-    def _time_registry_query(name: str) -> tuple[float, list[float]]:
+    def query(name: str, path: str):
         fn = REGISTRY[name].fn
-        fn(spark, sf_dir).count()  # warmup — same methodology as the first pass
-        samples = []
-        for _ in range(N_RUNS):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(round(time.time() - t0, 3))
-        return sorted(samples)[len(samples) // 2], samples
+        return lambda: fn(spark, path).count()
+
+    def settle() -> None:
+        # Drop dead references (localCheckpoint blocks free via
+        # ContextCleaner only after Python GC releases them) and cached
+        # frames, so the next row isn't timed under the previous one's
+        # block/GC pressure — measured 2× on the relational epoch.
+        gc.collect()
+        spark.catalog.clearCache()
+
+    def log(key: str, median: float, samples, cpu: float) -> None:
+        print(f"# {key}: median {median}s of {samples}, {cpu} core-s", file=sys.stderr)
 
     times: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
-    row_probes: dict[str, float] = {}
+    cpu_s: dict[str, float] = {}
+    cpu_run_start = _cpu_times()
     for name in HEADLINE:
-        fn = REGISTRY[name].fn
-        n = fn(spark, sf_dir).count()  # warmup: JIT/codegen compile, parquet footer cache
-        samples = []
-        for _ in range(N_RUNS):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(round(time.time() - t0, 3))
-        runs[name] = samples
-        times[name] = sorted(samples)[len(samples) // 2]
-        if era_rows_enabled:
-            # one probe sample right after the row: places the row
-            # inside/outside a host window the section brackets miss
-            row_probes[name] = _probe_codegen_once(spark)
-        print(f"# {name}: {n} rows, median {times[name]}s of {samples}", file=sys.stderr)
+        times[name], runs[name], cpu_s[name] = _timed(query(name, sf_dir))
+        log(name, times[name], runs[name], cpu_s[name])
 
     # Drop caches left by the headline queries (minhash signature cache
     # etc.) so the sections below aren't timed under their GC pressure.
     spark.catalog.clearCache()
-
-    times["bucketed_orders_lineitem"], runs["bucketed_orders_lineitem"] = (
-        _bucketed_join_seconds(spark, sf_dir)
-    )
-    print(f"# bucketed_orders_lineitem: {times['bucketed_orders_lineitem']}s", file=sys.stderr)
-
-    # r16 era retry, headline section: every suspect row re-times
-    # through its ORIGINAL methodology after a bounded wait for the
-    # calm band; both measurements land in the artifact
-    headline_timing_fns = {
-        name: (lambda n=name: _time_registry_query(n)) for name in HEADLINE
-    }
-    headline_timing_fns["bucketed_orders_lineitem"] = (
-        lambda: _bucketed_join_seconds(spark, sf_dir)
-    )
-    era_retries = _era_retry_rows(
-        spark, times, runs, _HEADLINE_QUIET_BANDS, headline_timing_fns,
-        _MAX_ERA_RETRIES_HEADLINE, "headline", era_rows_enabled,
-    )
+    key = "bucketed_orders_lineitem"
+    times[key], runs[key], cpu_s[key] = _bucketed_join_seconds(spark, sf_dir)
+    log(key, times[key], runs[key], cpu_s[key])
     spark.catalog.clearCache()
-
-    # headline-section end bracket (VERDICT r10 ask #4)
-    # CPU sample FIRST, probes after: each section's jiffy window must
-    # cover exactly the section's own work — sampling after the probes
-    # would attribute probe/calibration CPU to the section
     cpu_headline_end = _cpu_times()
-    probe_headline_end = _probe_codegen(spark)
-    probe_headline_end_sh = _probe_shuffle(spark)
-    print(f"# probe_headline_end: {probe_headline_end} / shuffle {probe_headline_end_sh}", file=sys.stderr)
 
     # Scale-path reference points, NOT summed into ``value``: the
     # relational trainer deliberately pays per-batch shuffles to keep
@@ -927,11 +514,9 @@ def main() -> None:
     # GC churn left behind by other trainers (r05: 9.4 s on a fresh
     # JVM vs 15.8 s measured after two broadcast-trainer sections),
     # and the broadcast trainers are far less state-sensitive.
-    import gc
-
     scale_paths: dict[str, float] = {}
-    gc.collect()
-    spark.catalog.clearCache()
+    phases: dict[str, dict] = {}
+    settle()
     # guarded like the sf1 section: a crashed/timed-out subprocess or an
     # unparseable transcript records an error entry instead of killing
     # the whole bench before the headline JSON is emitted
@@ -939,197 +524,97 @@ def main() -> None:
                       ("shuffled", "transe_train_epoch_relational_shuffled"),
                       ("big", "transe_train_epoch_relational_big")):
         try:
-            scale_paths[key], runs[key], relational_phases = (
-                _train_epoch_relational_seconds(spark, mode)
+            scale_paths[key], runs[key], phases[key], cpu_s[key] = _with_cpu(
+                _train_epoch_relational_seconds, mode
             )
-            if relational_phases:
-                runs[f"{key}_phases"] = relational_phases
-            print(
-                f"# {key}: {scale_paths[key]}s/epoch phases={relational_phases}",
-                file=sys.stderr,
-            )
+            log(key, scale_paths[key], runs[key], cpu_s[key])
         except Exception as e:  # noqa: BLE001
             scale_paths[f"{key}_error"] = str(e)[:200]
             print(f"# {key} FAILED: {e}", file=sys.stderr)
-        gc.collect()
-        spark.catalog.clearCache()
+        settle()
 
-    times["transe_train_epoch"], runs["transe_train_epoch"] = _train_epoch_seconds(spark)
-    print(f"# transe_train_epoch: {times['transe_train_epoch']}s/epoch", file=sys.stderr)
-    # r16 era retry for the one ``value`` row timed in this section
-    # (the r15 driver run read 5.56 s/epoch against a 1.81-2.72 s calm
-    # band with rising samples — a host window, confirmed by the same
-    # code reading 1.6-1.9 s in the next calm window)
-    era_retries.update(_era_retry_rows(
-        spark, times, runs, _HEADLINE_QUIET_BANDS,
-        {"transe_train_epoch": lambda: _train_epoch_seconds(spark)},
-        1, "scale_paths", era_rows_enabled,
-    ))
-    gc.collect()
-    spark.catalog.clearCache()
-
-    # Drop the trainer's dead references (localCheckpoint blocks free
-    # via ContextCleaner only after Python GC releases them) so the
-    # next sections aren't timed under the previous one's block/GC
-    # pressure — measured 2× on the relational epoch without this.
-    gc.collect()
-    spark.catalog.clearCache()
-
-    scale_paths["transe_train_epoch_overlap"], runs["transe_train_epoch_overlap"] = (
-        _train_epoch_overlap_seconds(spark)
-    )
-    print(
-        f"# transe_train_epoch_overlap: {scale_paths['transe_train_epoch_overlap']}s/epoch",
-        file=sys.stderr,
-    )
+    # the one ``value`` row timed in this section
+    key = "transe_train_epoch"
+    times[key], runs[key], cpu_s[key] = _with_cpu(_train_epoch_seconds, spark)
+    log(key, times[key], runs[key], cpu_s[key])
+    settle()
+    key = "transe_train_epoch_overlap"
+    scale_paths[key], runs[key], cpu_s[key] = _with_cpu(_train_epoch_seconds, spark, True)
+    log(key, scale_paths[key], runs[key], cpu_s[key])
 
     # Skew mitigation reference points (same hot-key join three ways;
     # the executed-plan skew=true gate lives in explain_plans.py and
     # test_aqe_skew_join_splits)
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
     import skew_demo
 
     for mode in ("plain", "aqe", "salted"):
-        med, samples, _ = skew_demo.run_variant(spark, sf_dir, mode)
-        scale_paths[f"skew_join_{mode}"] = med
-        runs[f"skew_join_{mode}"] = samples
-        print(f"# skew_join_{mode}: {med}s", file=sys.stderr)
+        key = f"skew_join_{mode}"
+        scale_paths[key], runs[key], _plan, cpu_s[key] = _with_cpu(
+            skew_demo.run_variant, spark, sf_dir, mode
+        )
+        log(key, scale_paths[key], runs[key], cpu_s[key])
+    cpu_scale_end = _cpu_times()
 
-    # scale-paths-section end bracket (VERDICT r10 ask #4)
-    cpu_scale_end = _cpu_times()  # before the probes (exact section window)
-    probe_scale_end = _probe_codegen(spark)
-    probe_scale_end_sh = _probe_shuffle(spark)
-    print(f"# probe_scale_end: {probe_scale_end} / shuffle {probe_scale_end_sh}", file=sys.stderr)
-
-    # sf1 scale-proof section (VERDICT r04 ask #6): the 5 most
-    # expensive headline queries at 10× the bench scale, NOT summed
-    # into ``value`` (cross-round headline comparability). Linear-ish
+    # sf1 scale-proof section (VERDICT r04 ask #6): the most expensive
+    # headline queries at 10× the bench scale, NOT summed into
+    # ``value`` (cross-round headline comparability). Linear-ish
     # scaling here is the measured evidence behind the PLANS.md
     # "survives 100×" arguments; the executed-plan gate at sf1 lives in
-    # scripts/explain_plans.py --sf1.
+    # scripts/explain_plans.py --sf1. Timed with 1 warmup + 2 samples
+    # (the tables are 10× — the third sample buys little).
     sf1: dict[str, float] = {}
     if abs(sf - 0.1) < 1e-9:
         # never let the scale section cost the round its headline JSON
         try:
-            sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
             import make_sf1
 
-            t0 = time.time()
+            t0 = time.perf_counter()
             sf1_path = make_sf1.ensure_sf1(spark, sf_dir)
-            print(f"# sf1 fixture ready in {round(time.time() - t0, 1)}s", file=sys.stderr)
-            gc.collect()
-            spark.catalog.clearCache()
+            print(f"# sf1 fixture ready in {round(time.perf_counter() - t0, 1)}s", file=sys.stderr)
+            settle()
             for name in SF1_HEADLINE:
-                fn = REGISTRY[name].fn
-                n = fn(spark, sf1_path).count()
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf1_path).count()
-                    samples.append(round(time.time() - t0, 3))
-                runs[f"sf1_{name}"] = samples
-                sf1[name] = sorted(samples)[len(samples) // 2]
-                print(f"# sf1_{name}: {n} rows, {sf1[name]}s of {samples}", file=sys.stderr)
-                gc.collect()
-                spark.catalog.clearCache()
+                key = f"sf1_{name}"
+                sf1[name], runs[key], cpu_s[key] = _timed(query(name, sf1_path), n=2)
+                log(key, sf1[name], runs[key], cpu_s[key])
+                settle()
             # end-to-end corpus pipeline at sf1 (r09, VERDICT r08 ask
             # #4): the full audit→dedup→gate→decontaminate→scrub→mix→
             # chunk→pack→split→report chain as ONE action — composition
             # is where multi-consumer re-execution bites, and this row
             # is the measured evidence the pins hold at 10×. One sample
             # (the chain embeds its own eager CC loop; a warmup would
-            # double a minute-scale section for a number the
-            # normalized block already stabilizes).
+            # double a minute-scale section).
             try:
                 from transe_pyspark_spark.operators.pipeline import (
                     corpus_pipeline_report,
                 )
                 from transe_pyspark_spark.sources.readers import load_table
 
-                t0 = time.time()
-                rep, pipe_pins = corpus_pipeline_report(
-                    load_table(spark, sf1_path, "documents")
-                )
-                n = rep.count()
-                sf1["corpus_pipeline"] = round(time.time() - t0, 3)
-                runs["sf1_corpus_pipeline"] = [sf1["corpus_pipeline"]]
-                for p in pipe_pins:
-                    p.unpersist()
-                print(
-                    f"# sf1_corpus_pipeline: {n} metric rows, "
-                    f"{sf1['corpus_pipeline']}s",
-                    file=sys.stderr,
-                )
+                def pipeline() -> tuple[float, list[float]]:
+                    t0 = time.perf_counter()
+                    rep, pins = corpus_pipeline_report(load_table(spark, sf1_path, "documents"))
+                    rep.count()
+                    dt = round(time.perf_counter() - t0, 3)
+                    for p in pins:
+                        p.unpersist()
+                    return dt, [dt]
+
+                key = "sf1_corpus_pipeline"
+                sf1["corpus_pipeline"], runs[key], cpu_s[key] = _with_cpu(pipeline)
+                log(key, sf1["corpus_pipeline"], runs[key], cpu_s[key])
             except Exception as e:  # noqa: BLE001
                 sf1["corpus_pipeline_error"] = str(e)[:200]
                 print(f"# sf1_corpus_pipeline FAILED: {e}", file=sys.stderr)
-            gc.collect()
-            spark.catalog.clearCache()
-
-            # r16 era retry, sf1 section: same rule and recording as
-            # the headline pass (original methodology: 1 warmup + 2
-            # samples; corpus_pipeline keeps its single-sample form)
-            def _time_sf1_query(name: str) -> tuple[float, list[float]]:
-                fn = REGISTRY[name].fn
-                fn(spark, sf1_path).count()  # warmup
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf1_path).count()
-                    samples.append(round(time.time() - t0, 3))
-                gc.collect()
-                spark.catalog.clearCache()
-                return sorted(samples)[len(samples) // 2], samples
-
-            def _time_sf1_pipeline() -> tuple[float, list[float]]:
-                from transe_pyspark_spark.operators.pipeline import (
-                    corpus_pipeline_report,
-                )
-                from transe_pyspark_spark.sources.readers import load_table
-
-                t0 = time.time()
-                rep, pipe_pins = corpus_pipeline_report(
-                    load_table(spark, sf1_path, "documents")
-                )
-                rep.count()
-                dt = round(time.time() - t0, 3)
-                for p in pipe_pins:
-                    p.unpersist()
-                gc.collect()
-                spark.catalog.clearCache()
-                return dt, [dt]
-
-            sf1_timing_fns = {
-                name: (lambda n=name: _time_sf1_query(n)) for name in SF1_HEADLINE
-            }
-            sf1_timing_fns["corpus_pipeline"] = _time_sf1_pipeline
-            sf1_retries = _era_retry_rows(
-                spark, sf1, {k: runs.get(f"sf1_{k}") for k in sf1}, _SF1_QUIET_BANDS,
-                sf1_timing_fns, _MAX_ERA_RETRIES_SF1, "sf1", era_rows_enabled,
-            )
-            for k, info in sf1_retries.items():
-                if info.get("used") == "retry":
-                    runs[f"sf1_{k}__first"] = runs.get(f"sf1_{k}")
-                    runs[f"sf1_{k}"] = info["retry_runs"]
-            era_retries.update({f"sf1_{k}": v for k, v in sf1_retries.items()})
+            settle()
         except Exception as e:  # noqa: BLE001
             sf1["error"] = str(e)[:200]
             print(f"# sf1 section failed: {e}", file=sys.stderr)
 
-    # second calibration sample: machine speed can drift WITHIN a run
-    # (r05 observed numpy_matmul 0.076 vs 0.331 across two runs an hour
-    # apart on an idle machine — host-level noise); start+end samples
-    # bound which sections a drift window could have touched
-    cpu_run_end = _cpu_times()  # before the end calibration (exact sf1 window)
-    calibration_end = _calibration(spark)
-    print(f"# calibration_end: {calibration_end}", file=sys.stderr)
-    # CPU-mode brackets (r12, VERDICT r11 ask #4): the jiffy-delta
-    # fractions per section. The relational-big spread settled as
-    # host-era windows of sy≈99% across all cores that BOTH speed-
-    # probe brackets dodge (3 quick samples each); a section whose
-    # `system` fraction dominates was measured through a kernel
-    # stall — triage its movers against section_cpu before either
-    # speed bracket.
+    # CPU-mode fractions per section (r12, VERDICT r11 ask #4): a
+    # section whose `system` or `steal` fraction dominates was measured
+    # through a kernel stall or a co-tenant window — triage its movers
+    # against section_cpu and the rows' cpu_s before reading them as code.
+    cpu_run_end = _cpu_times()
     section_cpu = {
         "headline": _cpu_frac(cpu_run_start, cpu_headline_end),
         "scale_paths": _cpu_frac(cpu_headline_end, cpu_scale_end),
@@ -1137,121 +622,31 @@ def main() -> None:
     }
     print(f"# section_cpu: {section_cpu}", file=sys.stderr)
 
-    # calibration-normalized ratios (VERDICT r06 ask #8): query time
-    # divided by a same-run jvm_codegen probe — a dimensionless
-    # number that factors host-speed drift out of cross-round
-    # comparisons (the r05/r06 small-suite "regressions" were pinned
-    # plans + drifting probes; this makes that call mechanical).
-    # r11 (VERDICT r10 ask #4): each SECTION is bracketed by its own
-    # (start, end) probe pair and its rows normalize by that
-    # bracket's midpoint — a multi-minute run drifts mid-flight, and
-    # one run-level midpoint dividing every row made 18 normalized
-    # sf1 ratios move r09→r10 while only 4 raw rows did. The
-    # run-level pair (calibration/calibration_end) remains the
-    # cross-section drift bound.
-    # shuffle-capacity brackets (late-r11): shuffle-bound rows triage
-    # against these; the codegen brackets miss disk/IPC drift
-    section_probes_shuffle = {
-        "headline": [calibration["jvm_shuffle"], probe_headline_end_sh],
-        "scale_paths": [probe_headline_end_sh, probe_scale_end_sh],
-        "sf1": [probe_scale_end_sh, calibration_end["jvm_shuffle"]],
-    }
-    section_probes = {
-        "headline": [calibration["jvm_codegen"], probe_headline_end],
-        "scale_paths": [probe_headline_end, probe_scale_end],
-        "sf1": [probe_scale_end, calibration_end["jvm_codegen"]],
-    }
-    p_head, p_scale, p_sf1 = (
-        sum(section_probes[k]) / 2 for k in ("headline", "scale_paths", "sf1")
-    )
-    probe = (calibration["jvm_codegen"] + calibration_end["jvm_codegen"]) / 2
-    normalized = {n: round(times[n] / p_head, 2) for n in HEADLINE}
-    # r09 (VERDICT r08 ask #2): the sf1 and scale-path rows get the
-    # same treatment — the r07/r08 "regressions" that cost manual
-    # quiet-host triage were both sf1 rows, which the normalized block
-    # didn't cover. A mover whose normalized ratio is flat across
-    # rounds is host drift; a mover whose ratio moved is real.
-    normalized_sf1 = {
-        n: round(v / p_sf1, 2) for n, v in sf1.items() if isinstance(v, (int, float))
-    }
-    normalized_scale_paths = {
-        k: round(v / p_scale, 2)
-        for k, v in scale_paths.items()
-        if isinstance(v, (int, float))
-    }
-
-    total = round(sum(times.values()), 3)
     payload = {
         "metric": "headline_total_runtime",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
-        "normalized": normalized,
-        "normalized_sf1": normalized_sf1,
-        "normalized_scale_paths": normalized_scale_paths,
-        "normalized_probe": round(probe, 4),
-        "section_probes": section_probes,
-        "section_probes_shuffle": section_probes_shuffle,
-        "section_cpu": section_cpu,
-        # era stamps (VERDICT r13 ask #3): per-section verdicts derived
-        # from the section's own probe brackets vs the calm band — a
-        # committed artifact self-labels which sections are
-        # era-comparable and which were timed through a slow window
-        "era": {
-            k: _section_era(section_probes[k], section_probes_shuffle[k])
-            for k in section_probes
-        },
-        "era_band": {
-            "calm_ref": _CALM_BAND,
-            "tolerance": _ERA_TOL,
-            "extra_warm_rounds": era_extra_probes,
-        },
-        "section_probe_midpoints": {
-            "headline": round(p_head, 4),
-            "scale_paths": round(p_scale, 4),
-            "sf1": round(p_sf1, 4),
-        },
         "scale_paths": scale_paths,
         "sf1": sf1,
-        # per-row quiet-band verdicts (r15, VERDICT r14 ask #2): each
-        # sf1 row self-flags against its committed calm band — a
-        # band_ok=false row was timed through a mid-section host
-        # window OR regressed; triage via section_cpu + normalized
-        # before reading it as code
-        "sf1_bands": _sf1_band_annotations(sf1),
-        "sf1_band_rule": (
-            "lo=min across the 5 committed calm references "
-            "(BENCH_full_{r12_calm,r13_calm,r13_calm2,r14_calm,"
-            "r14_calm3}.json), hi=1.5*lo (_ERA_TOL); "
-            "regenerate via scripts/quiet_bands.py"
-        ),
-        # r16: the judged headline rows get the same per-row verdicts
-        # the sf1 section got in r15 — plus one probe sample taken
-        # right after each row (headline_row_probes) and the full
-        # record of any era retries (first AND retry measurements;
-        # see _era_retry_rows)
-        "headline_bands": _band_annotations(times, _HEADLINE_QUIET_BANDS),
-        "headline_row_probes": row_probes,
-        "era_retries": era_retries,
-        "calibration": calibration,
-        "calibration_end": calibration_end,
-        "warmup_trail": warmup_trail,
         "runs": runs,
+        "cpu_s": cpu_s,
+        # the relational trainers' phase breakdown, parsed from the
+        # subprocess transcript
+        "phases": phases,
+        "section_cpu": section_cpu,
         "sf": sf,
     }
     print(json.dumps(payload))
     # Persist the FULL bench JSON in-repo (VERDICT r07 ask #3): the
-    # driver artifact captures only a 2000-char stdout tail, which
-    # truncates away the normalized/calibration blocks that exist
-    # precisely to make the host-drift-vs-regression call mechanical.
+    # BENCH_r{N}.json record keeps only a 2000-char stdout tail.
     # SPARK_GRAFT_BENCH_OUT overrides the path; default names the file
-    # by round if PROGRESS.jsonl reveals one, else "latest".
+    # by round if the repo's artifacts reveal one, else "latest".
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if not out_path:
         rnd = _current_round()
         out_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_full_r{rnd:02d}.json" if rnd else "BENCH_full_latest.json",
+            HERE, f"BENCH_full_r{rnd:02d}.json" if rnd else "BENCH_full_latest.json"
         )
     try:
         with open(out_path, "w") as f:
@@ -1289,10 +684,9 @@ def _current_round() -> int | None:
     round's artifact)."""
     import re
 
-    root = os.path.dirname(os.path.abspath(__file__))
     rounds = [
         int(m.group(1))
-        for fn in os.listdir(root)
+        for fn in os.listdir(HERE)
         for m in [re.match(r"(?:BENCH|CORRECTNESS)_r(\d+)\.json$", fn)]
         if m
     ]
@@ -1301,3 +695,4 @@ def _current_round() -> int | None:
 
 if __name__ == "__main__":
     main()
+

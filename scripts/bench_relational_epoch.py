@@ -74,6 +74,15 @@ def main() -> None:
     for i, d in enumerate(getattr(tr, "epoch_phase_times", [])):
         parts = " ".join(f"{n}={v:.2f}" for n, v in d.items())
         print(f"epochphases {i}: {parts}")
+    # Stop the JVM and wait for it: its CPU, and that of the Python
+    # workers it reaped, then counts as this process's reaped children,
+    # which is how bench.py charges the row's cpu_s. Left to exit on its
+    # own after this process, the JVM is reparented and its CPU is
+    # counted nowhere.
+    gateway = spark.sparkContext._gateway
+    spark.stop()
+    gateway.proc.stdin.close()
+    gateway.proc.wait()
 
 
 if __name__ == "__main__":

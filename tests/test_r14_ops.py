@@ -204,58 +204,6 @@ def test_merged_hinge_split_has_signal(spark, sf_dir):
         assert (~viol[mask]).any(), f"partition {p}: all violations"
 
 
-# ------------------- bench era gate (VERDICT r13 ask #3)
-
-
-def test_bench_section_era_stamps():
-    """The era stamp must reject BOTH failure shapes the r13 verdict
-    named: a slow-but-STABLE plateau (consecutive agreement, far off
-    the calm band — the r13 driver run's [1.056, 1.087] trap) and
-    mid-section drift (brackets disagreeing >1.5×), and accept only
-    brackets that agree AND sit within 1.5× of the calm band."""
-    import sys
-    sys.path.insert(0, ".")
-    import bench
-
-    calm = bench._CALM_BAND
-    # genuinely calm: agreement + in band
-    assert bench._section_era(
-        [calm["jvm_codegen"], calm["jvm_codegen"] * 1.1],
-        [calm["jvm_shuffle"], calm["jvm_shuffle"]],
-    ) == "calm"
-    # the r13 trap: stable plateau ~7x the band
-    assert bench._section_era([1.056, 1.087], [1.7, 1.8]) == "slow"
-    # mid-section drift: starts calm, ends 6x
-    assert bench._section_era(
-        [calm["jvm_codegen"], calm["jvm_codegen"] * 6],
-        [calm["jvm_shuffle"], calm["jvm_shuffle"]],
-    ) == "slow"
-    # shuffle capacity off-band flags even when codegen is calm
-    assert bench._section_era(
-        [calm["jvm_codegen"], calm["jvm_codegen"]],
-        [calm["jvm_shuffle"] * 4, calm["jvm_shuffle"] * 4],
-    ) == "slow"
-    # degenerate zero bracket never passes
-    assert bench._section_era([0.0, 0.0], [0.1, 0.1]) == "slow"
-
-
-def test_bench_within_calm_band_gate():
-    import sys
-    sys.path.insert(0, ".")
-    import bench
-
-    calm = bench._CALM_BAND
-    assert bench._within_calm_band(
-        {"jvm_codegen": calm["jvm_codegen"], "jvm_shuffle": calm["jvm_shuffle"]}
-    )
-    assert not bench._within_calm_band(
-        {"jvm_codegen": calm["jvm_codegen"] * 2, "jvm_shuffle": calm["jvm_shuffle"]}
-    )
-    assert not bench._within_calm_band(
-        {"jvm_codegen": calm["jvm_codegen"], "jvm_shuffle": calm["jvm_shuffle"] * 2}
-    )
-
-
 def test_two_steps_second_hinge_has_signal(spark, sf_dir):
     """Step 2 of the registered chain face carries BOTH hinge branches
     against the EVOLVED (step-1) snapshot — the margin keeps carrying

@@ -1,40 +1,5 @@
-"""Round-15 invariants: per-row sf1 quiet bands (VERDICT r14 ask #2)
-and the relational-trainer oracle face machinery (ask #3)."""
-
-import bench
-
-
-def test_sf1_band_annotation_flags_movers():
-    """A row above 1.5x its calm floor self-flags (band_ok False); a
-    row inside its band passes; a row with no calm history carries a
-    null band instead of a false verdict; error strings are skipped."""
-    ann = bench._sf1_band_annotations(
-        {
-            "stream_value_drift": 10.3,  # the r14 final artifact's era row
-            "interpolate_hourly": 0.6,
-            "brand_new_row": 1.0,
-            "corpus_pipeline_error": "boom",
-        }
-    )
-    assert ann["stream_value_drift"]["band_ok"] is False
-    assert ann["interpolate_hourly"]["band_ok"] is True
-    assert ann["brand_new_row"]["band"] is None
-    assert ann["brand_new_row"]["band_ok"] is None
-    assert "corpus_pipeline_error" not in ann
-
-
-def test_sf1_bands_cover_every_headline_row():
-    """Every SF1_HEADLINE row (plus corpus_pipeline) has a committed
-    band, and each band obeys the published rule hi = 1.5 * lo."""
-    missing = [n for n in bench.SF1_HEADLINE if n not in bench._SF1_QUIET_BANDS]
-    assert not missing, f"sf1 rows without a quiet band: {missing}"
-    assert "corpus_pipeline" in bench._SF1_QUIET_BANDS
-    for name, (lo, hi) in bench._SF1_QUIET_BANDS.items():
-        assert lo > 0, name
-        assert abs(hi - round(1.5 * lo, 3)) < 1e-9, (
-            f"{name}: hi {hi} != 1.5*lo {round(1.5 * lo, 3)}"
-        )
-
+"""Round-15 invariants: the relational-trainer oracle face machinery
+(VERDICT r14 ask #3)."""
 
 def test_relational_step_bit_identical_on_touched_intersection(spark, sf_dir):
     """VERDICT r14 ask #3's cross-regime claim, pinned: the relational

@@ -67,55 +67,6 @@ def test_update_frame_ids_unique_within_frame(spark, kernel):
     assert checked > 0
 
 
-def test_era_retry_rows_replaces_only_calm_and_faster(spark):
-    """r16 bench measurement fix: `_era_retry_rows` retries a row whose
-    median read above its committed calm band, and replaces the first
-    median ONLY when the retry window probed calm AND the retry is
-    faster — a genuine regression reads the same both times and keeps
-    its first number. Both measurements stay in the artifact."""
-    import bench
-
-    bands = {"fast_row": (1.0, 1.5), "slow_row": (1.0, 1.5), "regressed": (1.0, 1.5)}
-    times = {"fast_row": 1.2, "slow_row": 4.0, "regressed": 4.0}
-    runs = {"fast_row": [1.2], "slow_row": [4.0], "regressed": [4.0]}
-    calls = []
-    fns = {
-        "slow_row": lambda: (calls.append("slow"), (1.1, [1.1, 1.2, 1.1]))[1],
-        "regressed": lambda: (calls.append("reg"), (4.1, [4.1, 4.0, 4.2]))[1],
-        "fast_row": lambda: (calls.append("fast"), (1.0, [1.0]))[1],
-    }
-    retries = bench._era_retry_rows(
-        spark, times, runs, bands, fns, 6, "test", enabled=True
-    )
-    # in-band row never retried
-    assert "fast" not in calls and "fast_row" not in retries
-    # above-band row with a faster calm retry: replaced, first kept
-    assert times["slow_row"] == 1.1 and runs["slow_row"] == [1.1, 1.2, 1.1]
-    assert runs["slow_row__first"] == [4.0]
-    assert retries["slow_row"]["first_median"] == 4.0
-    assert retries["slow_row"]["used"] == "retry"
-    # above-band row whose retry reads the same: first number kept
-    assert times["regressed"] == 4.0 and retries["regressed"]["used"] == "first"
-    # disabled (low-CPU scaling run): no suspects examined at all
-    t2 = {"slow_row": 4.0}
-    assert bench._era_retry_rows(spark, t2, {}, bands, fns, 6, "t", enabled=False) == {}
-    assert t2["slow_row"] == 4.0
-
-
-def test_headline_band_annotations():
-    """`_band_annotations` flags rows above 1.5× their calm floor and
-    passes rows without history as band: null."""
-    import bench
-
-    out = bench._band_annotations(
-        {"minhash_pairs_raw": 12.0, "pricing_summary": 0.6, "novel": 3.0},
-        bench._HEADLINE_QUIET_BANDS,
-    )
-    assert out["minhash_pairs_raw"]["band_ok"] is False
-    assert out["pricing_summary"]["band_ok"] is True
-    assert out["novel"]["band"] is None and out["novel"]["band_ok"] is None
-
-
 def test_pack_dense_ids_unique():
     """`_pack_dense` (the vectorized kernel's packer) emits
     ``np.nonzero`` of a boolean mask — unique and sorted by

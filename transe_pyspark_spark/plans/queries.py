@@ -9317,8 +9317,7 @@ _OVERFLOW_ORACLE = [
     "dup_ngram_docs",            # text: benchmark_decontaminate
                                  # (front) + oov_rate_docs (new)
                                  # keep the text family
-    "doc_keywords_lift",         # text: same; stays sf1-benched with
-                                 # the new normalized_sf1 ratios
+    "doc_keywords_lift",         # text: same; stays sf1-benched
     "reservoir_sample_docs",     # sampling: sample_per_lang_docs +
                                  # split_leakage_safe keep the family
     "weighted_sample_docs",      # sampling: same; PPS prefix-sum
