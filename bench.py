@@ -468,7 +468,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     sys.path.insert(0, os.path.join(HERE, "scripts"))
-    spark = get_spark("bench")
+    # The console progress bar redraws with \r and would share stderr lines
+    # with the "# <row>: median ..." progress lines.
+    spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
     # Warm the JVM + parquet footers so q1 doesn't pay session startup.
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 

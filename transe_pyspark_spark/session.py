@@ -55,6 +55,14 @@ _DEFAULT_CONF: dict[str, str] = {
     # ~0.2 core-s per task on CPython 3.10-3.12 (see _daemon.py).
     # Executors' Python must import this package, as the kernels already do.
     "spark.python.daemon.module": "transe_pyspark_spark._daemon",
+    # Spark's generated-code cache is an LRU of 100 classes by default. A
+    # loop whose step cycles through more distinct classes than that
+    # misses on every lookup, so each step re-runs Janino and re-JITs
+    # every class. Measured working sets: <=152 classes over
+    # kg_pipeline's two warm-up passes (~130 per step; 122-144 compiles
+    # per warm step at 100) and <=242 over query_mix's three. 1000 leaves
+    # >=4x headroom; warm steps then compile 0-4 classes.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
