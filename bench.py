@@ -561,8 +561,9 @@ def main() -> None:
     # headline queries at 10× the bench scale, NOT summed into
     # ``value`` (cross-round headline comparability). Linear-ish
     # scaling here is the measured evidence behind the PLANS.md
-    # "survives 100×" arguments; the executed-plan gate at sf1 lives in
-    # scripts/explain_plans.py --sf1. Timed with 1 warmup + 2 samples
+    # "survives 100×" arguments; the plan gate at sf1 is the sf1
+    # stability pass of scripts/explain_plans.py (every contract with
+    # sf1=True). Timed with 1 warmup + 2 samples
     # (the tables are 10× — the third sample buys little).
     sf1: dict[str, float] = {}
     if abs(sf - 0.1) < 1e-9:

@@ -1,2172 +1,315 @@
-"""Physical-plan quality gate: assert the scale-critical plan
-properties and write PLANS.md with the evidence.
+"""Physical-plan quality gate: check every registry query's declared
+plan contract (``QuerySpec.plan`` in ``plans/queries.py``) and write
+PLANS.md with the evidence.
 
-Every assertion here encodes a 100 TB design requirement: a filter
-that doesn't reach the parquet scan re-reads the table; a dimension
-join that isn't broadcast shuffles the fact table; a top-k window
-without WindowGroupLimit buffers whole partitions; an as-of join with
-more than one exchange shuffles twice.
+Each contract encodes a 100 TB design requirement: a filter that
+doesn't reach the parquet scan re-reads the table; a dimension join
+that isn't broadcast shuffles the fact table; a top-k window without
+WindowGroupLimit buffers whole partitions; an as-of join with more
+than one exchange shuffles twice. ``tests/test_oracle.py`` checks the
+same contracts at sf0.001. The gates below the contract loop stay
+here because they need the sf1 fixture (built by make_sf1 if absent),
+a V=2M entity table (~800 MB) or sf >= 0.01: the sf1 stability pass,
+the PassJoin skew probe, the four trainer-shape gates, and the skew
+demo (at sf0.001 AQE does not split its hot partition).
 
 Usage: python scripts/explain_plans.py [sf_dir] — exits 1 on any
-violated expectation.
+violation.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
-import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, ".")
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from transe_pyspark_spark.plans.contract import count_nodes, explain_text  # noqa: E402
 from transe_pyspark_spark.plans.queries import REGISTRY  # noqa: E402
 from transe_pyspark_spark.session import get_spark  # noqa: E402
 
-#: query → (must-contain markers, human rationale)
-EXPECTATIONS: dict[str, tuple[list[str], str]] = {
-    "pricing_summary": (
-        ["PushedFilters: [IsNotNull(l_shipdate)", "HashAggregate"],
-        "date filter reaches the parquet scan; partial+final hash agg",
-    ),
-    "filter_predicates": (
-        ["GreaterThanOrEqual(p_size,10)", "In(p_type,"],
-        "BETWEEN/IN/LIKE predicates all push into the scan",
-    ),
-    "region_revenue": (
-        ["BroadcastHashJoin"],
-        "dimension sides broadcast — lineitem never shuffles for a 25-row nation",
-    ),
-    "top_revenue_orders": (
-        ["BroadcastHashJoin"],
-        "filtered customer dim broadcasts into the orders/lineitem join",
-    ),
-    "top3_orders_per_customer": (
-        ["WindowGroupLimit"],
-        "per-partition partial top-k below the shuffle: O(k) state per group",
-    ),
-    "knn_brute_force": (
-        ["Broadcast"],
-        "query side broadcasts; candidate scan is never shuffled",
-    ),
-    "dict_encode_brands": (
-        ["HashAggregate", "Window"],
-        "distinct (hash agg), range-repartition by token, per-partition row_number + "
-        "broadcast partition offsets — no single-partition window at any vocab size",
-    ),
-    "benchmark_decontaminate": (
-        ["BroadcastHashJoin"],
-        "eval-set n-grams broadcast; the corpus n-gram stream is probed map-side, "
-        "never shuffled by gram — only the per-doc count aggregates exchange",
-    ),
-    "semi_anti_join_customers": (
-        ["LeftSemi", "LeftAnti"],
-        "EXISTS as a semi join, NOT EXISTS as an anti join (no row multiplication)",
-    ),
-    "priority_count_exists": (
-        ["LeftSemi"],
-        "correlated EXISTS decorrelated to a semi join, not a per-row subquery",
-    ),
-    "small_quantity_parts": (
-        ["HashAggregate"],
-        "correlated scalar subquery decorrelated to aggregate + join",
-    ),
-    "corpus_clean_pipeline": (
-        ["LeftSemi", "PushedFilters"],
-        "dedup as semi join; scan-level pruning intact through the pipeline",
-    ),
-    "jaccard3_near_pairs": (
-        ["HashAggregate"],
-        "inverted-index equi-join + count agg — exact Jaccard without touching all pairs",
-    ),
-    "jaccard_prefix_near_pairs": (
-        ["HashAggregate"],
-        "prefix-filtered candidate join; all shuffles hash-partitioned on shingle/pair keys",
-    ),
-    "weighted_jaccard_prefix_docs": (
-        ["HashAggregate"],
-        "occurrence-expanded PPJoin: weighted Jaccard rides the same "
-        "prefix-filtered candidate equi-join as the set path",
-    ),
-    "weighted_jaccard3_prefix_docs": (
-        ["HashAggregate"],
-        "3-gram occurrence-expanded PPJoin: the 10x-benched multiset "
-        "configuration keeps the same prefix equi-join shape",
-    ),
-    "tf_cosine_docs": (
-        ["HashAggregate"],
-        "inverted-index dot product: one BIGINT hash agg over per-term "
-        "posting pairs; norms ride the posting structs (no norm join)",
-    ),
-    "unigram_nll_docs": (
-        ["HashAggregate", "InMemoryTableScan"],
-        "one pinned (doc, token) tokenization pass feeds both the vocab "
-        "counts and the scoring join; the 1-row total broadcasts back",
-    ),
-    "pit_enrich_events": (
-        ["BroadcastHashJoin"],
-        "the SCD2 validity predicate rides the key equi-join as a "
-        "residual — the dim broadcasts, facts never shuffle",
-    ),
-    "bm25_topk_retrieval": (
-        ["WindowGroupLimit", "HashAggregate"],
-        "per-query top-k keeps O(k) pre-shuffle state (partial window "
-        "limit); one scored corpus pass shared across the query batch",
-    ),
-    "winnow_pairs_docs": (
-        ["HashAggregate"],
-        "winnowed fingerprints ride the inverted-index posting pattern "
-        "— one fp-keyed aggregate, pairs only from shared fingerprints",
-    ),
-    "psi_value_drift_events": (
-        ["HashAggregate"],
-        "bucket counts per side + bucket-cardinality full-outer join; "
-        "totals and the bucket count broadcast as 1-row aggregates",
-    ),
-    "edit_near_names_customers": (
-        ["Generate", "HashAggregate"],
-        "deletion-variant posting lists (codegen'd explode) feed an "
-        "equi-join; candidates dedup (hash agg) before one Levenshtein "
-        "verify per surviving pair — never the oracle's n² definition",
-    ),
-    "edit3_near_names_parts": (
-        ["Generate", "HashAggregate"],
-        "PassJoin segment/substring posting lists (codegen'd explodes) "
-        "feed the (seg_no, part_len, piece) equi-join; candidates dedup "
-        "(hash agg) before one Levenshtein verify per surviving pair — "
-        "the quadratic definition stays in the oracle",
-    ),
-    "multimodal_features": (
-        ["MapInPandas"],
-        "encode → exact-feature extraction are chained narrow Arrow "
-        "maps over the binary column",
-    ),
-    "multimodal_frames": (
-        ["MapInPandas"],
-        "encode → frame explode → checksum reduction are chained "
-        "narrow Arrow maps; the 1-row→N-rows explode happens inside "
-        "the Python worker, never via a shuffle",
-    ),
-    "hybrid_rrf_docs": (
-        ["WindowGroupLimit", "FullOuter"],
-        "both legs keep their own O(k) top-k contracts; the fusion "
-        "full-outer join and rank window touch only the two "
-        "output-sized lists",
-    ),
-    "multires_rollup_events": (
-        ["HashAggregate", "Union", "Scan ExistingRDD"],
-        "hour level materializes once (checkpointed partials); day and "
-        "week fold THOSE — the unioned plan re-reads the checkpoint, "
-        "never the raw table",
-    ),
-    "mutual_info_events": (
-        ["HashAggregate", "BroadcastHashJoin"],
-        "one joint |X·Y|-cell aggregate is the only corpus shuffle; "
-        "marginals re-aggregate the cells and broadcast back",
-    ),
-    "robust_outliers_events": (
-        ["HashAggregate", "__pid", "BroadcastHashJoin"],
-        "both medians ride the __pid distributed prefix-rank (no "
-        "per-group window funnel); |groups|-sized fences broadcast",
-    ),
-    "assoc_rules_parts": (
-        ["HashAggregate", "BroadcastHashJoin"],
-        "within-basket pair join keyed on the basket id (Σ|b|² bound); "
-        "item counts and the basket total broadcast back onto the "
-        "support-pruned, output-sized rule table",
-    ),
-    "eventually_follows_events": (
-        ["HashAggregate", "BroadcastHashJoin", "Scan ExistingRDD"],
-        "one (basket, type) min-ts aggregate is the only corpus "
-        "shuffle; the self-join and totals ride the checkpointed "
-        "first-occurrence frame, basket-keyed",
-    ),
-    "absent_followup_events": (
-        ["LeftAnti", "HashAggregate"],
-        "the NOT EXISTS decorrelates to a key-equi anti join carrying "
-        "the time window as a residual predicate",
-    ),
-    "tfidf_top_terms_docs": (
-        ["WindowGroupLimit", "BroadcastHashJoin", "InMemoryTableScan"],
-        "one (doc, term) tf aggregate is pinned for its two term-keyed "
-        "consumers; the vocab-sized idf broadcasts into the scoring "
-        "join; the per-doc rank is WindowGroupLimit-bounded O(k)",
-    ),
-    "ann_ivf_pq_neighbors": (
-        ["FlatMapGroupsInPandas"],
-        "ADC scoring runs as grouped Arrow batches per (query, cell); codes join on cell key only",
-    ),
-    "doc_chunks": (
-        ["Generate"],
-        "chunk starts explode map-side; the whole chunker pipelines with the scan",
-    ),
-    "scalar_udf_price_band": (
-        ["ArrowEvalPython", "HashAggregate"],
-        "scalar pandas UDF runs as Arrow batches feeding a partial+final agg",
-    ),
-    "transe_rank_eval_filtered": (
-        ["BroadcastHashJoin"],
-        "model-sized vector tables broadcast into the candidate scoring join",
-    ),
-    "pivot_status_priority": (
-        ["HashAggregate"],
-        "explicit pivot values compile to one conditional aggregation — no distinct pre-job",
-    ),
-    "gap_fill_hourly": (
-        ["Window", "Generate"],
-        "per-key grids generate map-side (explode of sequence); forward fill is a running window",
-    ),
-    "sessionize_events": (
-        ["Window", "HashAggregate"],
-        "lag→flag→running-sum windows and the session rollup share ONE user_id "
-        "hash partitioning (rollup keys are a superset of the window key)",
-    ),
-    "reservoir_sample_docs": (
-        ["TakeOrderedAndProject"],
-        "exactly-k sample as per-task O(k) heaps + driver merge — no global "
-        "sort, no window, no shuffle of the data",
-    ),
-    "dup_ngram_docs": (
-        ["Generate", "HashAggregate"],
-        "positioned grams explode map-side; the document-frequency table and "
-        "per-doc rollup are hash aggregates keyed on gram/doc",
-    ),
-    "bigram_familiarity_docs": (
-        ["Generate", "HashAggregate"],
-        "grams explode map-side; the corpus LM and per-doc rollups are "
-        "hash aggregates keyed on gram/doc (broadcast of the LM side is a "
-        "size-based choice Catalyst may revisit at scale — not gated)",
-    ),
-    "heavy_hitter_words": (
-        ["MapInPandas", "BroadcastHashJoin"],
-        "the Misra-Gries candidate pass runs as an Arrow map over the raw "
-        "token stream (never shuffled); the ≤⌈1/φ⌉-per-partition candidate "
-        "set broadcasts back as the semi-join filter at any corpus size",
-    ),
-    "approx_percentile_sketch": (
-        ["ObjectHashAggregate"],
-        "GK sketch state aggregates with map-side partials — bounded agg "
-        "memory however large the column",
-    ),
-    "equi_depth_prices_approx": (
-        ["approx_percentile", "BroadcastNestedLoopJoin"],
-        "sketch boundaries come from ONE bounded-state aggregate (k−1 "
-        "doubles), broadcast back as a 1-row build side; the r13 anchor's "
-        "rank counts are one more conditional-sum aggregate over the same "
-        "broadcast — kilobytes moved, no global ntile window",
-    ),
-    "token_budget_mix": (
-        ["__pid", "BroadcastHashJoin"],
-        "per-stratum cumsum via the distributed prefix-sum: windows key on "
-        "(stratum, __pid) — never on the stratum alone — with the exclusive "
-        "per-stratum offsets broadcast back; a stratum's rows spread over "
-        "every range partition instead of one task",
-    ),
-    "cohort_retention_weekly": (
-        ["HashAggregate", "BroadcastHashJoin"],
-        "first-event and cell rollups are partial+final hash aggs; the "
-        "weeks-cardinality cohort-size table broadcasts into the ratio "
-        "(the user-keyed activity join is size-based — broadcast here, "
-        "co-partitioned SMJ at scale)",
-    ),
-    "mad_outlier_values": (
-        ["ObjectHashAggregate", "BroadcastHashJoin"],
-        "each percentile pass is one bounded-group aggregate; the per-group "
-        "median/MAD statistics broadcast back between passes — the data is "
-        "never shuffled by anything but the group key",
-    ),
-    "cdc_apply_customers": (
-        ["WindowGroupLimit", "LeftAnti"],
-        "latest-change-per-key runs with the partial top-1 pushed below the "
-        "key shuffle (O(1) state per key); the snapshot is touched only by "
-        "one anti join on the key",
-    ),
-    "doc_keywords_lift": (
-        ["Generate", "WindowGroupLimit", "HashAggregate"],
-        "terms explode map-side; tf/df are keyed hash aggs; the per-doc "
-        "top-k window keeps O(k) per doc below the shuffle; the corpus "
-        "count N rides as a 1-row broadcast build side",
-    ),
-    "record_linkage_parts": (
-        ["TakeOrderedAndProject"],
-        "the block self-join is an equi-join (broadcast at this size, "
-        "shuffled-hash on the block key at scale); the length lower bound "
-        "prunes before the O(len²) levenshtein; top-200 merges per-task "
-        "heaps — no global sort",
-    ),
-    "containment_near_pairs": (
-        ["HashAggregate"],
-        "one-sided prefix filter: candidates come from A-prefix rows "
-        "equi-joined to the posting side, verified by a keyed intersection "
-        "count — never an all-pairs comparison",
-    ),
-    "pagerank_trading_graph": (
-        ["HashAggregate", "InMemoryTableScan"],
-        "each iteration is one node-keyed equi-join + one hash agg over "
-        "CACHED edge/degree leaves (r07: cache replaced localCheckpoint — "
-        "InMemoryRelation preserves the repartition-on-source, which a "
-        "checkpoint's LogicalRDD loses under AQE, so iterations reuse one "
-        "partitioning instead of re-Exchanging the edge table)",
-    ),
-    "ppr_copurchase_parts": (
-        ["HashAggregate", "InMemoryTableScan"],
-        "the restart-vector variant keeps pagerank's iteration shape "
-        "(node-keyed equi-joins + one destination hash agg over the "
-        "pinned edge/degree/seed-flag leaves); only NONZERO-rank nodes "
-        "join the edge table, so pre-spread iterations are "
-        "seed-ball-sized",
-    ),
-    "copurchase_parts": (
-        ["TakeOrderedAndProject", "HashAggregate"],
-        "candidates come from the basket-keyed self-equi-join (bounded by "
-        "basket size); pair counts hash-aggregate; top-k merges per-task "
-        "heaps, no global sort",
-    ),
-    "key_skew_lineitem": (
-        ["ObjectHashAggregate"],
-        "each key profile is one hash agg on the key + one single-row "
-        "rollup whose percentile state holds per-KEY counts, not rows",
-    ),
-    "weighted_sample_docs": (
-        ["__pid", "Window"],
-        "the running weight is the distributed prefix-sum: windows key on "
-        "__pid (range partitions) with broadcast exclusive offsets — no "
-        "single-partition global cumsum at any corpus size",
-    ),
-    "rolling_wau_events": (
-        ["Generate", "HashAggregate"],
-        "each (day, user) activity explodes map-side into its ≤7 trailing "
-        "windows over the ALREADY-DISTINCT day-user table; rolling "
-        "distincts are then plain two-phase aggs on the day key",
-    ),
-    "zorder_orders": (
-        ["Project"],
-        "the Morton value is a pure bit-interleave projection that "
-        "pipelines with the scan — no shuffle, no UDF",
-    ),
-    "interval_overlap_purchases": (
-        ["Generate", "HashAggregate"],
-        "intervals band map-side into every bucket they span (Generate; "
-        "≤2 each at this face's 12 h width — a pure cost knob, r07); "
-        "candidates come from the bucket EQUI-join; the exact overlap "
-        "predicate filters and one distinct collapses multi-bucket pairs",
-    ),
-    "triangle_stats_parts": (
-        ["HashAggregate", "InMemoryTableScan"],
-        "the canonical edge set is CACHED once for its four consumers "
-        "(degree/wedge×2/closing join); triangles come from the oriented "
-        "a<b<c wedge equi-join — degree-bounded candidates, each triangle "
-        "found once",
-    ),
-    "nearest_click_purchase": (
-        ["Window"],
-        "both nearest directions come from two frames of ONE key-"
-        "partitioned union-window sort — no correlated subquery, no "
-        "per-row join",
-    ),
-    "seasonal_anomaly_events": (
-        ["HashAggregate", "Window"],
-        "one (key, day) hash-agg over raw events, then the weekday "
-        "baselines as WINDOW aggregates over that day-level table "
-        "(r14: single consumer — the old groupBy + broadcast-join-back "
-        "re-executed the events agg per consumer); the raw events "
-        "shuffle once and the window touches only day-level rows",
-    ),
-    "split_leakage_safe": (
-        ["HashAggregate", "xxhash64"],
-        "one dedup hash-agg + the join back, BOTH keyed on xxhash64 of "
-        "the normalized text (r08) — the exchanges carry an 8-byte "
-        "fingerprint per row, never the document text — + a narrow "
-        "MINSTD projection",
-    ),
-    "exact_dedup_docs": (
-        ["HashAggregate", "xxhash64"],
-        "the one dedup exchange is keyed on xxhash64 of the normalized "
-        "text (r08): fixed-width keys at corpus scale, text never ships",
-    ),
-    "gini_customer_spend": (
-        ["HashAggregate", "Window"],
-        "per-group rank from the (group, __pid) distributed-prefix "
-        "window (group-only windows forbidden — dedicated gate); exact "
-        "decimal numerator in one rollup",
-    ),
-    "funnel_ordered_steps": (
-        ["In(event_type", "HashAggregate"],
-        "the step-type disjunction reaches the parquet scan; per-step "
-        "join/min-agg chains share one user-key partitioning",
-    ),
-    "decayed_user_scores": (
-        ["HashAggregate"],
-        "one max-day broadcast + ONE user hash-agg; the integer "
-        "half-life shift needs no window and no second shuffle",
-    ),
-    "top_event_paths": (
-        ["TakeOrderedAndProject", "Window"],
-        "one user-key window sort shared by every lag; global top-k is "
-        "TakeOrderedAndProject (per-task O(k) heaps) — no global sort",
-    ),
-    "cross_source_dup_matrix": (
-        ["xxhash64", "HashAggregate"],
-        "per-(group, source) counts keyed on the text fingerprint; the "
-        "self-join and rollup touch count rows only, never documents",
-    ),
-    "event_transitions": (
-        ["Window", "HashAggregate"],
-        "one user-key lag window over the log; the per-source totals "
-        "are a window over the |types|²-row aggregate — never a "
-        "second pass over the log",
-    ),
-    "dedup_bursts_events": (
-        ["Window", "Filter"],
-        "burst collapse is ONE key-partitioned lag window + a narrow "
-        "keep-filter — no self-join, no second shuffle",
-    ),
-    "interpolate_hourly": (
-        ["Window", "Generate"],
-        "per-key grids generate map-side; both interpolation neighbors "
-        "come from two frames of ONE key-partitioned window sort",
-    ),
-    "attribution_linear": (
-        ["Window", "HashAggregate"],
-        "the touch window rides the user-keyed equi-join; the credit "
-        "split is a conversion-keyed count window (full key cardinality) "
-        "and the rollup is ≤|channels| groups",
-    ),
-    "sample_per_lang_docs": (
-        ["WindowGroupLimit"],
-        "per-group exactly-k sampling keeps the partial top-k below the "
-        "shuffle — O(k) state per group per task",
-    ),
-    "trend_per_event_type": (
-        ["HashAggregate", "BroadcastHashJoin"],
-        "per-key t0 broadcasts back; the OLS moment sums are one "
-        "map-side-partial aggregate — regression as an agg, no "
-        "per-key collect",
-    ),
-    "value_drift_weeks": (
-        ["HashAggregate"],
-        "one bucket-keyed hash agg per side + a bucket-cardinality "
-        "full-outer join; totals ride as 1-row broadcast builds",
-    ),
-    "winsorize_values": (
-        ["ObjectHashAggregate"],
-        "one bounded-group percentile aggregate joined back + one exact "
-        "integer-cents rollup — clip bounds never leave the plan",
-    ),
-    "percent_rank_doc_length": (
-        ["Window", "BroadcastHashJoin"],
-        "the in-group rank rides the (group, __pid) distributed-prefix "
-        "windows with broadcast partition offsets — never one task per "
-        "group (the gini/dict-encode pattern)",
-    ),
-    "oov_rate_docs": (
-        ["TakeOrderedAndProject", "BroadcastHashJoin"],
-        "the top-k vocabulary is per-task O(k) heaps + driver merge (no "
-        "global sort of the token histogram) and broadcasts back as the "
-        "flag join — the corpus token stream is never joined by token "
-        "against itself",
-    ),
-    "pyds_triples_profile": (
-        ["BatchScan kg_triples", "HashAggregate"],
-        "the custom Python Data Source plans as a real BatchScan (one "
-        "task per InputPartition, executor-side generation — no driver "
-        "materialization, no parallelize) feeding partial+final aggs",
-    ),
-    "changeset_customers": (
-        ["FullOuter"],
-        "inverse CDC is ONE full-outer key equi-join with per-row op "
-        "classification — no aggregate at all, |changes|-sized output",
-    ),
-    "table_diff_customers": (
-        ["FullOuter", "HashAggregate"],
-        "ONE full-outer key equi-join feeds ONE conditional aggregate "
-        "— every metric incl. all per-column changed counts rides the "
-        "same agg, so N compare columns cost zero extra passes",
-    ),
-    "rfm_segments_customers": (
-        ["Window", "InMemoryTableScan", "BroadcastHashJoin"],
-        "one orders pass collapses to customer grain and is PINNED "
-        "(cache) for its four consumers; every rank window keys on "
-        "(group, __pid) with broadcast offsets — never a global ntile "
-        "window; the segment rollup is ≤125 groups",
-    ),
-    "ivm_summary_customers": (
-        ["Generate", "HashAggregate"],
-        "the delta pass EXPLODES each change row into its 1-2 signed "
-        "contributions (one scan of the batch, not a union-of-filters "
-        "double scan) into one hash-agg; the summary merge is one "
-        "null-safe key equi-join — the maintenance subplan never "
-        "rescans the base fact (pytest-pinned on parquet inputs)",
-    ),
-    "data_quality_audit": (
-        ["HashAggregate", "BroadcastHashJoin"],
-        "same-table checks BATCH into one aggregate per table (r09: "
-        "orders' three and customer's two checks share one pruned scan "
-        "each — 9 checks cost 9 scans across 4 tables, was 15); each "
-        "FK check is ONE job: child keys LEFT-join the parent's "
-        "broadcast distinct key set and a single aggregate counts rows "
-        "and orphans together (no second child scan)",
-    ),
-    "node_clustering_parts": (
-        ["InMemoryTableScan", "HashAggregate"],
-        "the oriented edge set is CACHED for its wedge/closing/degree "
-        "consumers (the triangle_stats plan); per-node triangle counts "
-        "come from one corner-explode hash agg, coefficients from exact "
-        "BIGINT division — no per-node neighborhood materialization",
-    ),
-    "pareto_frontier_parts": (
-        ["__pid", "BroadcastHashJoin", "LeftSemi"],
-        "the skyline staircase (per-x min + strict prefix-min on the "
-        "frozen-range-partition distributed prefix — r11: the x window "
-        "keys on __pid, never a pid-less global window, so a "
-        "CONTINUOUS x can't funnel through one task) broadcasts back "
-        "as a semi-join — the corpus is never self-joined",
-    ),
-    "bm25_docs": (
-        ["InMemoryTableScan", "BroadcastHashJoin"],
-        "the tokenized corpus pins ONCE (three consumers: corpus "
-        "stats, document frequencies, tf rows); idf is aggregate-sized "
-        "and broadcast back — no corpus-sized shuffle after the pin",
-    ),
-    "source_divergence_docs": (
-        ["InMemoryTableScan", "BroadcastHashJoin"],
-        "the (source, token) count aggregate pins ONCE (three "
-        "consumers: corpus token counts, per-source totals, scoring "
-        "join); totals broadcast back — the 1-row corpus-total NLJ is "
-        "the record_linkage precedent",
-    ),
-    "ks_value_drift_events": (
-        ["__pid", "BroadcastHashJoin"],
-        "the empirical CDFs ride the frozen-range-partition "
-        "distributed prefix (windows key on __pid, never a global "
-        "value-ordered window); per-partition offsets and the totals "
-        "broadcast back; the argmax is one exact decimal-128 "
-        "aggregate (pid-less-value-window absence is pytest-pinned)",
-    ),
-    "wasserstein_value_drift_events": (
-        ["__pid", "BroadcastHashJoin"],
-        "the CDF-gap area rides the same frozen-tile prefix as KS; "
-        "the next-value handoff joins the broadcast per-tile minima "
-        "(aggregate-sized), never a global value-ordered window",
-    ),
-    "chi2_lang_source_docs": (
-        ["HashAggregate", "Scan ExistingRDD", "BroadcastHashJoin"],
-        "one joint-cell corpus aggregate, checkpointed for its four "
-        "consumers; marginals re-aggregate the cells; the zero-filled "
-        "grid is the broadcast marginal×marginal product",
-    ),
-    "collocations_docs": (
-        ["Scan ExistingRDD", "BroadcastHashJoin"],
-        "the visible plan reads the CHECKPOINTED pair/unigram "
-        "aggregates (the tokenization pin + map-side slice/zip pair "
-        "build executed upstream of the truncation — "
-        "test_collocations_* pin that shape); scoring joins broadcast",
-    ),
-    "fd_violations_docs": (
-        ["HashAggregate"],
-        "two hash aggregates total — the (det, dep) cell count is the "
-        "only corpus shuffle and max(cnt) IS the mode",
-    ),
-    "mann_kendall_daily_events": (
-        ["Scan ExistingRDD", "HashAggregate"],
-        "S rides the DOCUMENTED bounded |days|² theta self-join over "
-        "the checkpointed calendar series (a deliberate BNLJ over "
-        "aggregate-sized-by-contract input — never a corpus join); "
-        "ties are one value aggregate",
-    ),
-    "runs_test_daily_events": (
-        ["Scan ExistingRDD", "Window", "HashAggregate"],
-        "the run-boundary lag window runs over the |days|-row "
-        "checkpointed series (bounded by contract); the discrete "
-        "median broadcasts as one row",
-    ),
-    "embedding_covariance_vecs": (
-        ["Scan ExistingRDD", "BroadcastHashJoin"],
-        "the visible plan assembles the CHECKPOINTED ≤2,145-row moment "
-        "aggregate (the Arrow QᵀQ partial pass + map-side combine "
-        "executed upstream of the truncation — "
-        "test_embedding_covariance_* pin the kernel bit-for-bit); "
-        "marginals broadcast",
-    ),
-    "quantile_normalize_docs": (
-        ["__pid", "Scan ExistingRDD", "HashAggregate"],
-        "both rank machines ride ONE frozen (value, id) tiling — "
-        "per-tile row_numbers + broadcast exclusive offsets (global "
-        "and per-group); the pooled-element lookup is an integer "
-        "equi-join; no pid-less window anywhere (probed)",
-    ),
-    "benford_totalprice_orders": (
-        ["HashAggregate", "Window"],
-        "one ≤9-group digit aggregate (map-side partials); the total "
-        "rides a window over the ≤9-row aggregate (r14: single "
-        "consumer — the old 1-row agg + cross join re-executed the "
-        "digit agg per consumer; the pid-less window is bounded BY "
-        "CONSTRUCTION to the 9 post-aggregate rows); digits come from "
-        "the BIGINT's decimal string, never a float log",
-    ),
-    "acf_daily_value_events": (
-        ["HashAggregate", "Generate", "BroadcastHashJoin", "Scan ExistingRDD"],
-        "one corpus day-aggregate; lags explode map-side onto the "
-        "checkpointed calendar-bounded series and match by the "
-        "t+k=t' hash equi-join; one ≤max_lag-group moment fold",
-    ),
-    "golden_record_docs": (
-        ["InMemoryTableScan", "HashAggregate", "BroadcastHashJoin"],
-        "the projected input pins once (min/max/count pass + one "
-        "cell pass per mode column); mode argmax is "
-        "min(struct(-count, value)) — no window, no sort; the "
-        "|groups|-sized pieces broadcast-join",
-    ),
-    "vocab_growth_sources": (
-        ["Scan ExistingRDD", "HashAggregate", "Window"],
-        "the checkpointed (source, term) aggregate serves both the "
-        "per-source totals and the first-seen regroup; the running "
-        "vocabulary window runs over the |sources|-row result "
-        "(bounded by contract)",
-    ),
-    "hits_copurchase_parts": (
-        ["Scan ExistingRDD"],
-        "the returned frame is the final checkpoint of the iterative "
-        "run (per-round truncation is the pagerank discipline); the "
-        "per-round dataflow is pinned by "
-        "test_hits_integer_matches_python_model",
-    ),
-    "km_conversion_events": (
-        ["__pid", "Scan ExistingRDD", "HashAggregate"],
-        "both KM passes (at-risk, log-survival) ride one frozen-tile "
-        "prefix; the between-pass frame is checkpointed "
-        "(duration-cardinality) and the per-duration aggregate is the "
-        "only subject-sized shuffle",
-    ),
-    "spearman_qty_price_lineitem": (
-        ["__pid", "InMemoryTableScan"],
-        "both rank maps ride the frozen-tile prefix off the shared "
-        "pair pin; the value→rank joins are EQUI-joins whose strategy "
-        "AQE picks per axis (the 50-value quantity map broadcasts, "
-        "the continuous price map sort-merges — never forced "
-        "broadcast, rank maps can be corpus-sized)",
-    ),
-    "mannwhitney_value_events": (
-        ["__pid", "BroadcastHashJoin"],
-        "the rank-sum fold rides the frozen-tile prefix — per-value "
-        "counts and cumsums only, no midrank window anywhere",
-    ),
-}
-
-def check_no_stratum_only_window(plan: str) -> list[str]:
-    """token_budget_mix: every window spec that partitions on the
-    stratum (lang) must ALSO partition on __pid — a window keyed on the
-    tiny-cardinality stratum alone is the one-task-per-stratum shape
-    VERDICT r05 flagged. Returns the violating plan lines."""
-    return [
-        line.strip()[:120]
-        for line in plan.splitlines()
-        if "windowspecdefinition(lang#" in line and "__pid#" not in line
-    ]
+#: plan lines quoted under each contract as evidence
+_FRAGMENT_KEYS = (
+    "PushedFilters", "BroadcastHashJoin", "WindowGroupLimit", "LeftSemi", "LeftAnti",
+    "Exchange", "HashAggregate",
+)
 
 
-def check_no_group_only_window(plan: str) -> list[str]:
-    """gini_customer_spend: the in-group rank must ride the (group,
-    __pid) distributed-prefix window, never a group-cardinality window
-    (one task per nation at any data size). Returns violating lines."""
-    return [
-        line.strip()[:120]
-        for line in plan.splitlines()
-        if "windowspecdefinition(__g#" in line and "__pid#" not in line
-    ]
+class Report:
+    """PLANS.md lines plus a per-kind gate tally."""
 
-#: plan nodes that must NOT appear (quadratic shapes the rewrite removed)
-FORBIDDEN: dict[str, tuple[list[str], str]] = {
-    "jaccard3_near_pairs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "exact Jaccard must never plan an all-pairs nested loop",
-    ),
-    "jaccard_prefix_near_pairs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "prefix filtering exists to keep the candidate join an equi-join",
-    ),
-    "weighted_jaccard_docs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "multiset Jaccard must never plan an all-pairs nested loop",
-    ),
-    "weighted_jaccard_prefix_docs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "the occurrence-expansion prefix filter exists to keep the "
-        "candidate join an equi-join",
-    ),
-    "weighted_jaccard3_prefix_docs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "the occurrence-expansion prefix filter exists to keep the "
-        "candidate join an equi-join",
-    ),
-    "tf_cosine_docs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "sparse cosine comes from the inverted index, never all pairs",
-    ),
-    "unigram_nll_docs": (
-        ["CartesianProduct"],
-        "the only non-equi join is the 1-row corpus-total broadcast "
-        "(fine); a Cartesian over doc/token rows is not",
-    ),
-    "pit_enrich_events": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "point-in-time lookup must stay a key equi-join with a "
-        "residual range filter, never a temporal nested loop",
-    ),
-    "winnow_pairs_docs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "fingerprint pairs come from posting lists, never all pairs",
-    ),
-    "edit_near_names_customers": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "edit-distance candidates come from deletion-variant equi-joins "
-        "only — the quadratic Levenshtein stays in the oracle",
-    ),
-    "edit3_near_names_parts": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "PassJoin candidates come from segment-signature equi-joins "
-        "only (incl. the short-string pass, a length-KEYED join) — "
-        "the quadratic Levenshtein stays in the oracle",
-    ),
-    "multimodal_features": (
-        ["Exchange"],
-        "feature extraction is a narrow map pipeline — a shuffle "
-        "anywhere means the binary column moved for no reason",
-    ),
-    "multimodal_frames": (
-        ["Exchange"],
-        "the frame explode is a narrow map pipeline — a shuffle "
-        "anywhere means the binary column moved for no reason",
-    ),
-    "hybrid_rrf_docs": (
-        ["CartesianProduct"],
-        "the fusion join is keyed on (query, doc); only the knn leg's "
-        "deliberate broadcast-of-3-queries NLJ is allowed upstream",
-    ),
-    "multires_rollup_events": (
-        ["Scan parquet", "BroadcastNestedLoopJoin", "CartesianProduct"],
-        "no raw-table scan may survive into the returned plan — every "
-        "level rides the checkpointed hourly partials",
-    ),
-    "mutual_info_events": (
-        ["CartesianProduct"],
-        "cells join marginals on their keys; only the 1-row totals "
-        "frame rides a deliberate broadcast NLJ",
-    ),
-    "robust_outliers_events": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "median/MAD/fence joins are all keyed on the group column",
-    ),
-    "assoc_rules_parts": (
-        ["CartesianProduct"],
-        "pairs come from the basket-keyed self-join only — never "
-        "across baskets; the 1-row basket total broadcasts",
-    ),
-    "eventually_follows_events": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "precedence pairs come from the basket-keyed first-occurrence "
-        "join only — never across baskets",
-    ),
-    "absent_followup_events": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the time-range predicate must stay a residual on the user "
-        "equi-key — never a temporal nested loop",
-    ),
-    "tfidf_top_terms_docs": (
-        ["CartesianProduct"],
-        "the scoring join is term-keyed and the rank window is per-doc "
-        "(the 1-row doc-count broadcast NLJ is fine; a Cartesian over "
-        "the tf table is not)",
-    ),
-    "gap_fill_hourly": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "grid generation must stay per-key explode, never a time-range cross join",
-    ),
-    "minhash_pairs_raw": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "LSH candidates come from band-bucket equi-joins only — never all pairs",
-    ),
-    "containment_near_pairs": (
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "containment candidates come from the prefix/posting equi-join — "
-        "never an all-pairs nested loop",
-    ),
-    "record_linkage_parts": (
-        ["CartesianProduct"],
-        "linkage candidates are bounded by the block equi-join, never a "
-        "cross join (the 1-row broadcast NLJ of scalar subqueries is fine; "
-        "a Cartesian over the entity table is not)",
-    ),
-    "cdc_apply_customers": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the merge is key equi-joins only",
-    ),
-    "pagerank_trading_graph": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "rank propagation is a node-keyed equi-join per iteration",
-    ),
-    "ppr_copurchase_parts": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-        "rank propagation is a node-keyed equi-join per iteration; the "
-        "seed flag rides a left join, never a window",
-    ),
-    "interval_overlap_purchases": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the overlap theta predicate must ride the bucket equi-join, "
-        "never plan as a nested-loop theta join",
-    ),
-    "copurchase_parts": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "pair generation must stay inside the basket equi-join",
-    ),
-    "triangle_stats_parts": (
-        ["CartesianProduct"],
-        "wedge/closing joins are equi-joins on node keys (the 1-row "
-        "base×tri broadcast NLJ is fine — the record_linkage precedent); "
-        "a Cartesian over the edge set is not",
-    ),
-    "nearest_click_purchase": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "nearest matching must ride the union window, never a theta "
-        "self-join",
-    ),
-    "node_clustering_parts": (
-        ["CartesianProduct"],
-        "wedge/closing joins stay node-keyed equi-joins — a Cartesian "
-        "over the edge set is never acceptable (triangle_stats rule)",
-    ),
-    "data_quality_audit": (
-        ["CartesianProduct"],
-        "every FK check joins on its key; nothing all-pairs",
-    ),
-    "table_diff_customers": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the diff is key equi-joins only",
-    ),
-    "ivm_summary_customers": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the null-safe group merge is an equi-join (EqualNullSafe "
-        "hash-partitions like any key); nothing all-pairs",
-    ),
-    "changeset_customers": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "HashAggregate"],
-        "no aggregate, no non-equi join — one classified full-outer "
-        "join is the whole plan",
-    ),
-    "rfm_segments_customers": (
-        ["CartesianProduct"],
-        "all joins are customer-key equi-joins over the pinned "
-        "customer-grain table (broadcast here; a shuffled equi-join at "
-        "scale is equally fine); the 1-row max-date broadcast NLJ is "
-        "the record_linkage precedent",
-    ),
-    "pareto_frontier_parts": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "the NOT-EXISTS quadratic definition is the oracle's statement "
-        "of intent, never the plan — the skyline must stay one agg + "
-        "one aggregate-sized window + one broadcast semi-join",
-    ),
-    "bm25_docs": (
-        ["CartesianProduct"],
-        "corpus stats ride 1-row broadcasts; scoring joins are "
-        "term-keyed equi-joins over the pinned tokenization",
-    ),
-    "source_divergence_docs": (
-        ["CartesianProduct"],
-        "everything after the pinned (source, token) aggregate is "
-        "aggregate-sized; joins are token/source equi-joins",
-    ),
-    "ks_value_drift_events": (
-        ["CartesianProduct"],
-        "the only non-equi joins are 1-row broadcast totals; the "
-        "per-value aggregate is the single corpus-sized shuffle",
-    ),
-    "wasserstein_value_drift_events": (
-        ["CartesianProduct"],
-        "the only non-equi joins are 1-row broadcast totals; the "
-        "per-value aggregate is the single corpus-sized shuffle",
-    ),
-    "mannwhitney_value_events": (
-        ["CartesianProduct"],
-        "the only non-equi joins are 1-row broadcast totals; the "
-        "per-value aggregate is the single corpus-sized shuffle",
-    ),
-    "chi2_lang_source_docs": (
-        ["CartesianProduct"],
-        "the marginal×marginal grid is a deliberate broadcast NLJ of "
-        "two aggregate-sized frames; a Cartesian over row-level data "
-        "is not allowed",
-    ),
-    "collocations_docs": (
-        ["CartesianProduct", "SortMergeJoin"],
-        "scoring joins ride the broadcast vocab table; pairs build "
-        "map-side from the pin — no position self-join",
-    ),
-    "fd_violations_docs": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin", "Window"],
-        "nothing but the two hash aggregates and the violator filter",
-    ),
-    "spearman_qty_price_lineitem": (
-        ["CartesianProduct"],
-        "the only non-equi joins are the 1-row broadcast totals; rank "
-        "maps join back on the value key",
-    ),
-    "km_conversion_events": (
-        ["CartesianProduct"],
-        "the only non-equi joins are the 1-row horizon/totals "
-        "broadcasts; cohort joins are user-keyed",
-    ),
-    "quantile_normalize_docs": (
-        ["CartesianProduct"],
-        "the only non-equi join is the 1-row total broadcast; rank "
-        "maps and the target lookup are keyed equi-joins",
-    ),
-    "mann_kendall_daily_events": (
-        ["SortMergeJoin", "Window"],
-        "nothing sorts: the bounded pair join broadcasts, aggregates "
-        "fold scalars",
-    ),
-    "runs_test_daily_events": (
-        ["SortMergeJoin", "CartesianProduct"],
-        "one bounded window + scalar aggregates only",
-    ),
-    "embedding_covariance_vecs": (
-        ["CartesianProduct", "SortMergeJoin", "Window"],
-        "assembly joins over the 2k-row aggregate broadcast; the "
-        "1-row count rides a broadcast NLJ",
-    ),
-    "benford_totalprice_orders": (
-        ["CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin"],
-        "nothing but the digit aggregate and the bounded ≤9-row total "
-        "window (r14: the Window replaced the 1-row NLJ so the digit "
-        "agg has a single consumer — no join of any kind remains)",
-    ),
-    "acf_daily_value_events": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "Window", "SortMergeJoin"],
-        "the lag match is a hash EQUI-join on t+k — never a "
-        "range/nested-loop pairing, never a window",
-    ),
-    "golden_record_docs": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-        "every join keys on the block; the mode argmax is an "
-        "aggregate, never a rank window",
-    ),
-    "vocab_growth_sources": (
-        ["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"],
-        "the per-source pieces are aggregate-sized and broadcast-join",
-    ),
-    "hits_copurchase_parts": (
-        ["CartesianProduct"],
-        "per-round joins are node-keyed; the normalization totals are "
-        "1-row broadcasts (inside the checkpointed rounds)",
-    ),
-}
-
-#: max Exchange *nodes* allowed (each extra exchange is a full shuffle);
-#: 0 = the operator must stay narrow end-to-end (pipelines with the scan)
-MAX_EXCHANGES = {
-    "asof_purchase_click": 1,
-    "pricing_summary": 1,
-    "top3_orders_per_customer": 1,
-    "window_order_seq": 1,
-    "doc_chunks": 0,
-    "gopher_quality_docs": 0,
-    "pii_scrub_docs": 0,
-    "stratified_sample_mix": 0,
-    "text_stats": 0,
-    "mapinarrow_name_stats": 0,
-    "repetition_ngrams": 2,
-    # one scan, one (multi-distinct) aggregate; melt is narrow
-    "table_profile": 2,
-    # one hash-agg of <= n_bins groups
-    "histogram_prices": 1,
-    # lead() window and the per-key agg share one hash partitioning
-    "time_weighted_avg_value": 1,
-    # lag/cumsum windows + session rollup: one user_id partitioning
-    "sessionize_events": 1,
-    # corpus LM hash-agg + per-doc rollup (gram join exchange-free while
-    # the LM side broadcasts)
-    "bigram_familiarity_docs": 2,
-    # candidate distinct + exact candidate count + total count; the raw
-    # token stream itself never exchanges
-    "heavy_hitter_words": 3,
-    # exactly-k sample: TakeOrderedAndProject merges per-task heaps at
-    # the driver — the data itself never exchanges
-    "reservoir_sample_docs": 0,
-    # gram DF hash-agg + gram-keyed join + per-doc rollup
-    "dup_ngram_docs": 3,
-    # one bounded-state sketch aggregate
-    "approx_percentile_sketch": 1,
-    # boundary sketch+exact+count agg + the anchor's rank-count agg +
-    # final single-row exchange (r13: the face became the exact-
-    # boundary ANCHOR, VERDICT r12 ask #7 — one more aggregate pass)
-    "equi_depth_prices_approx": 3,
-    # first-event agg + activity join + distinct-user cell rollup +
-    # cohort-size agg (the ratio join side broadcasts)
-    "cohort_retention_weekly": 5,
-    # one exchange per percentile pass; statistics broadcast back
-    "mad_outlier_values": 3,
-    # latest-change window + the applied-side exchange; the anti join
-    # broadcasts the batch at this size
-    "cdc_apply_customers": 2,
-    # tf agg + df agg + term join + per-doc top-k window
-    "doc_keywords_lift": 5,
-    # block self-join broadcasts at sf0.01 (0 exchanges); allow the
-    # shuffled-hash form the same join takes at scale
-    "record_linkage_parts": 2,
-    # doc-freq agg + rank window + candidate agg + verify agg; +6 in
-    # r15: `_spread_docs` round-robins the shingle-kernel input (the
-    # serial-scan fix), and the kernel subtree appears 6× in the
-    # printed tree (dfreq/pos/pa-pb/ea/eb consumers) — all 6 are the
-    # SAME canonical exchange, deduplicated to one ReusedExchange at
-    # runtime (the funnel_ordered_steps ReusedExchange gate pins that
-    # mechanism live), so the real shuffle budget is unchanged
-    "containment_near_pairs": 10,
-    # r07: cached partitioned leaves — the loop's only per-iteration
-    # shuffle is the contribution agg (+ the one-time repartition/degree
-    # builds inside the cached plans); was 13 with checkpointed leaves
-    "pagerank_trading_graph": 9,
-    # pagerank's 9 plus the co-purchase pair self-join and the pinned
-    # seed-flag leaf's printed cache-DEFINITION lineage (built once;
-    # explain counts definition nodes alongside the live plan)
-    "ppr_copurchase_parts": 16,
-    # distinct (basket, item) agg + pair-key agg + the self-join side
-    "copurchase_parts": 3,
-    # 3 key profiles × (per-key count agg + single-row rollup)
-    "key_skew_lineitem": 6,
-    # range-repartition + per-pid size agg + offsets window + total agg
-    "weighted_sample_docs": 4,
-    # (day,user) distinct + dau agg + wau agg (two-phase distincts)
-    "rolling_wau_events": 6,
-    # narrow bit-interleave projection over the scan
-    "zorder_orders": 0,
-    # two chained Arrow maps (encode → decode), no shuffle
-    "multimodal_audio": 0,
-    # encode → exact features: chained Arrow maps, no shuffle
-    "multimodal_features": 0,
-    # encode → frame explode → checksums: chained Arrow maps, no shuffle
-    "multimodal_frames": 0,
-    # seg/sub posting-list join (2) + candidate-pair distinct + the two
-    # name re-attach joins re-key the deduplicated pair set; the short
-    # path's length-keyed join broadcasts at any realistic slice —
-    # allow 8 for the shuffled-hash forms AQE may pick at scale
-    "edit3_near_names_parts": 8,
-    # bucket join (one side broadcasts at this size) + pair distinct
-    "interval_overlap_purchases": 3,
-    # obs bucket agg + grid/obs co-partitioning; both window frames
-    # share the key sort
-    "interpolate_hourly": 2,
-    # one key shuffle for the lag window
-    "dedup_bursts_events": 1,
-    # cached canonical + cached degree-ORIENTED edge sets (build
-    # exchanges counted once each, incl. the two degree joins of the
-    # orientation and the r08 repartition-on-u that feeds the oriented
-    # cache so the wedge self-join reads ONE u-partitioned relation
-    # from both sides) + closing-join re-keys + the 1-row aggregates;
-    # sf1 plans up to 16 when AQE keeps more joins shuffled
-    "triangle_stats_parts": 16,
-    # right-side (key, ts) collapse + the union-window key shuffle
-    "nearest_click_purchase": 2,
-    # r14 rewrite: single (key, dow)-partitioned window aggregate over
-    # the daily rollup — one (key, day) agg exchange + one (key, dow)
-    # window re-key; no baseline join remains (ADVICE r14: comment
-    # refreshed + budget tightened 3 → 2 to match the window plan)
-    "seasonal_anomaly_events": 2,
-    # normalized-text dedup agg; the join back reuses its partitioning
-    "split_leakage_safe": 2,
-    # r15 exact-quota stratified split: fp dedup agg (ONE consumer —
-    # the frozen leaf carries fp/group_size through the rank) + the
-    # leaf's offsets/sizes pair (tiny K-row frames) + the (stratum,
-    # pid) in-partition rank window + the doc-level join back —
-    # measured 4 at sf0.01, +1 headroom for AQE join-side re-keys
-    "stratified_split_docs": 5,
-    # r08 faces. gini: spend agg + range-repartition of the group rank
-    # + offsets + final rollup (customer dim broadcasts)
-    "gini_customer_spend": 4,
-    # per step: one pushed-filter scan + ONE user-key exchange (joins
-    # and min-aggs all reuse it — no per-step re-exchange of the key)
-    # + 3 single-partition count aggs; identical prev-step subtrees
-    # dedup at runtime (ReusedExchange gate below)
-    "funnel_ordered_steps": 9,
-    # max-day broadcast + one user hash-agg
-    "decayed_user_scores": 2,
-    # second r08 wave: the sequence-analytics faces
-    # one user-key lag window + pair agg + the tiny totals window over
-    # the post-aggregate (r08: the broadcast-join form re-executed the
-    # whole window subtree as the build job — 13.8 s -> 1.5 s at sf1)
-    "event_transitions": 3,
-    # per-user start agg + convert join/agg (user partitioning reused)
-    # + cohort percentile rollup
-    "time_to_convert_weekly": 4,
-    # two distinct-user aggs + arm rollup + the 1x1 statistic cross
-    "ab_conversion_ztest": 6,
-    # fingerprint-keyed (fp, source) agg + fp self-join + pair rollup
-    "cross_source_dup_matrix": 3,
-    # one user-key window sort + path agg; top-k is
-    # TakeOrderedAndProject (per-task heaps), NOT a global sort
-    "top_event_paths": 2,
-    # (type, day) agg + spine join + type window + stats/argmax
-    # rollups (the cum subtree appears twice statically; AQE stage
-    # reuse dedups it at runtime)
-    "cusum_change_events": 9,
-    # (day) conditional agg + spine + 1-row moment rollup
-    "daily_corr_view_purchase": 2,
-    # third r08 wave. percent_rank: length agg + range-repartition +
-    # in-partition rank windows + broadcast offsets join back
-    "percent_rank_doc_length": 4,
-    # token agg (one exchange) + broadcast vocab flags + doc rollup
-    "oov_rate_docs": 2,
-    # the triangle_stats cached-leaf budget + the corner explode agg
-    # (joins above the cached oriented edges re-sort per key-set)
-    "node_clustering_parts": 15,
-    # nine checks in six jobs (three batched per-table aggs + three
-    # fused FK jobs): one 1-row global agg exchange each + the parent
-    # distinct-key exchanges — every one trivial-width
-    "data_quality_audit": 12,
-    # one orders agg + three (offsets/sizes + rank-side) exchanges +
-    # the custkey join spine + the ≤125-group rollup — all but the
-    # first over customer-grain data
-    "rfm_segments_customers": 17,
-    # snapshot + CDC-applied sides into the diff join + the 1-row agg
-    "table_diff_customers": 5,
-    # changeset full-outer (2 sides) + delta agg + summary-side agg +
-    # the null-safe merge join (2 sides) — |changes|/|groups|-sized
-    "ivm_summary_customers": 7,
-    # snapshot + CDC-applied sides into the classified full-outer join
-    "changeset_customers": 4,
-    # the relation-key agg + the distinct-count expand — generation
-    # itself is narrow
-    "pyds_triples_profile": 2,
-}
-
-#: queries whose plans must be IDENTICAL in shape at sf1 (the 10×
-#: fixture scripts/make_sf1.py builds) — scale must not change the
-#: strategy. stream_tumbling_counts is benched at sf1 but its explain
-#: is a sink read, so it is gated by runtime behavior instead.
-SF1_STABLE = [
-    "jaccard_prefix_near_pairs",
-    "region_revenue",
-    "top_revenue_orders",
-    "minhash_pairs_raw",
-    # r06: the three shuffle-heavy r05 operators + the two approx
-    # percentile faces — 10× data must keep the same strategy
-    "sessionize_events",
-    "bigram_familiarity_docs",
-    "heavy_hitter_words",
-    "approx_percentile_sketch",
-    "equi_depth_prices_approx",
-    # r06 second wave: the two candidate-join dedup/linkage faces must
-    # keep their forbidden-node guarantees at 10× (no all-pairs shapes)
-    "containment_near_pairs",
-    "record_linkage_parts",
-    # r06 third wave: iterative + explode-heavy faces stay same-shape
-    "pagerank_trading_graph",
-    "doc_keywords_lift",
-    # r07 (VERDICT r06 ask #6): the remaining shuffle-heavy r06 faces
-    "interpolate_hourly",
-    "interval_overlap_purchases",
-    "dedup_bursts_events",
-    "cdc_apply_customers",
-    # r07 new faces with join-shape guarantees worth pinning at 10×
-    "triangle_stats_parts",
-    "nearest_click_purchase",
-    # r08 (VERDICT r07 ask #5): the late-r07 aggregate faces — 10×
-    # must keep the distributed prefix-rank (gini), the shared user
-    # partitioning across funnel steps, and the single-shuffle aggs
-    "gini_customer_spend",
-    "funnel_ordered_steps",
-    "decayed_user_scores",
-    "seasonal_anomaly_events",
-    # r08 second wave: the window-heavy sequence faces — 10x events
-    # must keep the single user-key window sort / top-k heap shapes
-    "event_transitions",
-    "top_event_paths",
-    "cusum_change_events",
-    # r08 third wave: the node-level triangle face keeps the cached
-    # oriented-wedge equi-join shape at 10×; rfm keeps the prefix-rank
-    # (no pid-less window sneaks in at 10×); the audit keeps its anti
-    # joins and pruned scans
-    "node_clustering_parts",
-    "rfm_segments_customers",
-    "data_quality_audit",
-    # the CDC pair keeps its single-full-outer-join shapes at 10×
-    "table_diff_customers",
-    "changeset_customers",
-    # r09: the IVM refresh keeps its explode→delta-agg→null-safe-join
-    # shape at 10× (the |changes|-sized path must not become a base
-    # table rescan)
-    "ivm_summary_customers",
-    # r10: the lazy-plan faces keep their shapes at 10× — the skyline
-    # keeps its broadcast LeftSemi staircase (never a NOT-EXISTS
-    # shape), bm25/source-divergence keep the single pinned
-    # tokenization + broadcast aggregate joins, KS keeps the __pid
-    # distributed prefix (no pid-less value window at 10×). The
-    # checkpoint-truncated r10 graph faces are covered by their
-    # round-stage gates above instead.
-    "pareto_frontier_parts",
-    "bm25_docs",
-    "source_divergence_docs",
-    "ks_value_drift_events",
-    # r11 widen: the weighted-Jaccard scale path (3-gram configuration,
-    # the sf1-benched face) keeps the occurrence-expanded prefix-filter
-    # equi-join shape at 10x (the guarded exact twins stay out -- their
-    # eager row guard raises at sf1 by design)
-    "weighted_jaccard3_prefix_docs",
-    # the NLL screen keeps its pinned-tokenization + broadcast-total
-    # shape at 10x (no corpus re-scan sneaks in)
-    "unigram_nll_docs",
-    # r11 third wave: the symmetric-delete join keeps its explode →
-    # posting-equi-join → dedup-agg shape at 10× (the quadratic
-    # Levenshtein stays in the oracle at every SF); hybrid RRF keeps
-    # both legs' O(k) contracts and the output-sized full-outer
-    # fusion; the rollup cascade keeps ZERO raw scans in the returned
-    # plan at 10× (every level rides the checkpointed hourly partials)
-    "edit_near_names_customers",
-    "hybrid_rrf_docs",
-    "multires_rollup_events",
-    # r12: PassJoin keeps its two-explode posting-equi-join +
-    # dedup-agg shape at 10× (quadratic Levenshtein stays in the
-    # oracle at every SF; output volume on the replicated sf1 part
-    # fixture is a fixture artifact, same caveat as
-    # edit_near_names_customers — plan gate here, not an sf1 bench
-    # row)
-    "edit3_near_names_parts",
-    # r11 fifth wave: MI keeps its single joint-cell corpus aggregate
-    # at 10× (marginals from cells, never a second pass); the robust
-    # screen keeps both medians on the __pid prefix-rank; assoc rules
-    # keep the basket-keyed pair join + broadcast count joins
-    "mutual_info_events",
-    "robust_outliers_events",
-    "assoc_rules_parts",
-    # r11 sixth wave: eventually-follows keeps its single min-ts
-    # corpus aggregate + basket-keyed join at 10×; absence keeps the
-    # residual-on-equi-key LeftAnti (no temporal nested loop at 10×)
-    "eventually_follows_events",
-    "absent_followup_events",
-    # r11 seventh wave: the TF-IDF keyword face keeps its single tf
-    # pin + broadcast idf + WindowGroupLimit shape at 10×; the two new
-    # two-sample screens keep the frozen-tile prefix (one per-value
-    # corpus aggregate, broadcast offsets/minima/totals) at 10×
-    "tfidf_top_terms_docs",
-    "wasserstein_value_drift_events",
-    "mannwhitney_value_events",
-    # chi² keeps MI's single joint-cell corpus aggregate at 10× (the
-    # grid is marginal-sized); collocations keep the one-pin/two-
-    # consumer token shape; the FD audit keeps its two-aggregate plan
-    "chi2_lang_source_docs",
-    "collocations_docs",
-    "fd_violations_docs",
-    # spearman keeps one pin + two prefix aggregates + two value-keyed
-    # rank joins at 10× (join strategy is AQE's per-axis call); KM
-    # keeps its one subject aggregate + two chained prefixes
-    "spearman_qty_price_lineitem",
-    "km_conversion_events",
-    # golden record keeps one pin + per-field aggregates at 10×;
-    # vocab growth keeps its single (source, term) corpus shuffle;
-    # HITS keeps two node-keyed joins + two aggregates per round
-    "golden_record_docs",
-    "vocab_growth_sources",
-    "hits_copurchase_parts",
-    # Benford keeps its single 9-group aggregate; ACF keeps one day
-    # aggregate + the calendar-bounded lag join; QN keeps one tiling
-    # + one integer equi-join
-    "benford_totalprice_orders",
-    "acf_daily_value_events",
-    "quantile_normalize_docs",
-    # covariance keeps one Arrow pass + a 2k-row shuffle at 10×;
-    # MK/runs ride the calendar-bounded daily series (the corpus cost
-    # is the one day-aggregate)
-    "embedding_covariance_vecs",
-    "mann_kendall_daily_events",
-    "runs_test_daily_events",
-]
-
-
-def plan_of(spark, name: str, sf_dir: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def count_exchange_nodes(plan: str) -> int:
-    # formatted explain lists each physical node as "(N) Exchange"
-    return sum(
-        1
-        for line in plan.splitlines()
-        if line.strip().split(") ")[-1] in ("Exchange", "Exchange [REUSED]")
-        and line.strip().startswith("(")
-    )
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("explain-plans")
-    failures = 0
-    lines = [
-        "# PLANS — physical-plan evidence for the scale-critical queries",
-        "",
-        f"Generated by `python scripts/explain_plans.py {sf_dir}`. Each",
-        "entry asserts the plan property that matters at 100 TB and shows",
-        "the relevant plan fragment.",
-        "",
-    ]
-    for name, (markers, why) in EXPECTATIONS.items():
-        plan = plan_of(spark, name, sf_dir)
-        missing = [m for m in markers if m not in plan]
-        status = "OK" if not missing else f"FAIL (missing {missing})"
-        if missing:
-            failures += 1
-        print(f"{status:40s} {name}")
-        lines += [f"## {name}", "", f"**Requirement:** {why}", f"**Status:** {status}", ""]
-        frags = [
-            line.strip()
-            for line in plan.splitlines()
-            if any(k in line for k in ("PushedFilters", "BroadcastHashJoin", "WindowGroupLimit", "LeftSemi", "LeftAnti", "Exchange", "HashAggregate"))
+    def __init__(self, sf_dir: str) -> None:
+        self.lines = [
+            "# PLANS — physical-plan evidence for the scale-critical queries",
+            "",
+            f"Generated by `python scripts/explain_plans.py {sf_dir}`. Each",
+            "entry asserts the plan property that matters at 100 TB and shows",
+            "the relevant plan fragment. The per-query contracts are declared",
+            "on `QuerySpec.plan` in `transe_pyspark_spark/plans/queries.py`.",
+            "",
         ]
-        lines += ["```", *frags[:12], "```", ""]
-    for name, (markers, why) in FORBIDDEN.items():
-        plan = plan_of(spark, name, sf_dir)
-        present = [m for m in markers if m in plan]
-        status = "OK" if not present else f"FAIL (contains {present})"
-        if present:
-            failures += 1
-        print(f"{status:40s} {name} (forbidden nodes)")
-        lines += [f"## {name} — forbidden nodes", "", f"**Requirement:** {why}", f"**Status:** {status}", ""]
-    # token_budget_mix: no window may partition on the stratum alone
-    viol = check_no_stratum_only_window(plan_of(spark, "token_budget_mix", sf_dir))
-    status = "OK" if not viol else f"FAIL (stratum-only windows: {viol})"
-    if viol:
-        failures += 1
-    print(f"{status:40s} token_budget_mix (no stratum-only window)")
-    lines += [
-        "## token_budget_mix — no stratum-cardinality window", "",
-        "**Requirement:** every cumsum window keys on (lang, __pid), never lang "
-        "alone — the distributed prefix-sum spreads each stratum over all range "
-        "partitions instead of one task",
-        f"**Status:** {status}", "",
-    ]
-    # gini: no group-cardinality window at any scale (r08) — the rank
-    # must come from the (group, __pid) distributed-prefix pattern
-    viol = check_no_group_only_window(plan_of(spark, "gini_customer_spend", sf_dir))
-    status = "OK" if not viol else f"FAIL (group-only windows: {viol})"
-    if viol:
-        failures += 1
-    print(f"{status:40s} gini_customer_spend (no group-only window)")
-    lines += [
-        "## gini_customer_spend — no group-cardinality window", "",
-        "**Requirement:** every rank window keys on (__g, __pid), never __g "
-        "alone — the distributed per-group prefix-rank spreads each group "
-        "over all range partitions instead of one task",
-        f"**Status:** {status}", "",
-    ]
-    # rfm: NO window anywhere in the plan may lack the __pid key —
-    # all three quintile ranks must ride the distributed prefix
-    # pattern, never a global ntile/row_number window
-    rfm_viol = [
-        line.strip()[:120]
-        for line in plan_of(spark, "rfm_segments_customers", sf_dir).splitlines()
-        if "windowspecdefinition(" in line and "__pid" not in line
-    ]
-    status = "OK" if not rfm_viol else f"FAIL (pid-less windows: {rfm_viol})"
-    if rfm_viol:
-        failures += 1
-    print(f"{status:40s} rfm_segments_customers (no global rank window)")
-    lines += [
-        "## rfm_segments_customers — no global rank window", "",
-        "**Requirement:** every quintile-rank window keys on (group, "
-        "__pid) — the three tilings spread over all range partitions; "
-        "a pid-less window would funnel the whole customer table "
-        "through one task",
-        f"**Status:** {status}", "",
-    ]
-    # audit scan-count gate (r09): nine checks over four tables must
-    # cost exactly nine pruned scans — three batched per-table
-    # aggregates (orders/customer/lineitem) + three fused FK jobs at
-    # two scans each. A regression to per-check jobs (15 scans) or a
-    # double-scanning FK (the r08 advisory) fails here.
-    audit_plan = plan_of(spark, "data_quality_audit", sf_dir)
-    audit_scans = sum(
-        1 for line in audit_plan.splitlines()
-        if "Scan parquet" in line and line.strip().startswith("(")
-    )
-    a_ok = audit_scans <= 9
-    if not a_ok:
-        failures += 1
-    status = "OK" if a_ok else f"FAIL ({audit_scans} scans > 9)"
-    print(f"{status:40s} data_quality_audit (scan budget)")
-    lines += [
-        "## data_quality_audit — scan budget", "",
-        "**Requirement:** 9 checks cost ≤ 9 table scans: same-table "
-        "checks batch into one aggregate per table and each FK check "
-        "reads its child exactly once.",
-        f"**Status:** {status}; {audit_scans} parquet scan(s), budget 9", "",
-    ]
-    # funnel shared-exchange gate (r08): the per-step branches must
-    # physically REUSE the one user-key shuffle of the event log —
-    # visible only in the EXECUTED plan (AQE stage-level reuse), so
-    # this gate runs the query at sf0.01 and asserts the marker.
-    fdf = REGISTRY["funnel_ordered_steps"].fn(spark, sf_dir)
-    fdf.collect()
-    fexec = fdf._jdf.queryExecution().executedPlan().toString()
-    f_ok = "ReusedExchange" in fexec
-    if not f_ok:
-        failures += 1
-    status = "OK" if f_ok else "FAIL (no ReusedExchange in executed plan)"
-    print(f"{status:40s} funnel_ordered_steps (prev-step stages reused)")
-    lines += [
-        "## funnel_ordered_steps — one user-key exchange per row, reused stages", "",
-        "**Requirement:** each step's rows cross the wire exactly once (a "
-        "pushed-filter scan into ONE user-key exchange; every join and "
-        "min-agg above it reuses that partitioning — no re-exchange of the "
-        "user key anywhere), and the identical prev-step subtrees (step "
-        "k's table feeds its own count AND step k+1's join) dedup at "
-        "runtime: the executed plan must show ReusedExchange.",
-        f"**Status:** {status}", "",
-    ]
-    for name, max_ex in MAX_EXCHANGES.items():
-        plan = plan_of(spark, name, sf_dir)
-        n = count_exchange_nodes(plan)
-        ok = n <= max_ex
-        if not ok:
-            failures += 1
-        print(f"{'OK' if ok else 'FAIL':40s} {name}: {n} exchange(s) (max {max_ex})")
-        lines += [f"## {name} — shuffle budget", "", f"{n} Exchange node(s), budget {max_ex}: {'OK' if ok else 'FAIL'}", ""]
-    # checkpoint-truncated operators: kcore_trading_graph and
-    # session_type_affinity eager-checkpoint their (tiny) results and
-    # release their cached leaves, so the REGISTRY plan is an opaque
-    # Scan ExistingRDD — gate the lazy (eager_cleanup=False) plan of
-    # the same construction instead. Building these plans executes the
-    # eager cache pins (rounds × count for kcore, one membership count
-    # for affinity) — seconds at the gate's sf.
-    from pyspark.sql import functions as _F
+        self.kinds: Counter[str] = Counter()
+        self.failures = 0
 
-    from transe_pyspark_spark.operators.graph import kcore_peel
-    from transe_pyspark_spark.operators.sequences import session_type_affinity
-    from transe_pyspark_spark.plans.queries import _T
+    def gate(self, label: str, kind: str, violations: list[str]) -> str:
+        self.kinds[kind] += 1
+        self.failures += bool(violations)
+        status = "OK" if not violations else f"FAIL ({'; '.join(violations)})"
+        print(f"{status:40s} {label} [{kind}]")
+        return status
 
-    _o = _T(spark, sf_dir, "orders")
-    _li = _T(spark, sf_dir, "lineitem")
-    _kedges = (
-        _o.join(_li, _F.col("l_orderkey") == _F.col("o_orderkey"))
-        .select(
-            _F.col("o_custkey").alias("src"),
-            (_F.lit(10000000) + _F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
-    from transe_pyspark_spark.operators.similarity import semantic_near_pairs
-    from transe_pyspark_spark.sources.readers import load_table as _lt
+    def section(self, title: str, requirement: str, violations: list[str], detail: str = "",
+                plan: str = "", keys: tuple[str, ...] = ()) -> None:
+        status = self.gate(title, "script", violations)
+        self.lines += [f"## {title}", "", f"**Requirement:** {requirement}",
+                       f"**Status:** {status}{detail}", ""]
+        self.fragments(plan, keys)
 
-    from transe_pyspark_spark.operators.graph import _lpa_round
+    def fragments(self, plan: str, keys: tuple[str, ...]) -> None:
+        frags = [ln.strip() for ln in plan.splitlines() if any(k in ln for k in keys)]
+        if frags:
+            self.lines += ["```", *frags[:12], "```", ""]
 
-    _lpa_adj = (
-        _kedges.select(
-            _F.explode(
-                _F.array(
-                    _F.struct(_F.col("src").alias("node"), _F.col("dst").alias("nbr")),
-                    _F.struct(_F.col("dst").alias("node"), _F.col("src").alias("nbr")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
-        .repartition(32, "nbr")
-        .cache()
-    )
-    _lpa_adj.count()
-    _lpa_labels0 = (
-        _lpa_adj.select("node").distinct()
-        .select("node", _F.col("node").alias("community"))
-    )
-    from transe_pyspark_spark.operators.dedup import _cc_round
-    from transe_pyspark_spark.operators.graph import _bfs_frontier
 
-    _cc_sel = (
-        _li.filter((_F.col("l_partkey") % 10 == 0) & (_F.col("l_quantity") >= 35))
-        .select(_F.col("l_orderkey").alias("ok"), _F.col("l_partkey").cast("long").alias("pk"))
-    )
-    _cc_pairs = (
-        _cc_sel.select("ok", _F.col("pk").alias("pa"))
-        .join(_cc_sel.select("ok", _F.col("pk").alias("pb")), "ok")
-        .filter(_F.col("pa") < _F.col("pb"))
-        .select("pa", "pb")
-        .distinct()
-    )
-    _cc_edges = (
-        _cc_pairs.select(
-            _F.explode(
-                _F.array(
-                    _F.struct(_F.col("pa").alias("src"), _F.col("pb").alias("dst")),
-                    _F.struct(_F.col("pb").alias("src"), _F.col("pa").alias("dst")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
-        .distinct()
-        .repartition(32, "dst")
-        .cache()
-    )
-    _cc_edges.count()
-    _cc_labels0 = (
-        _cc_edges.select(_F.col("src").alias("id"))
-        .distinct()
-        .select("id", _F.col("id").alias("component"))
-    )
-    _bfs_adj = (
-        _kedges.select(
-            _F.explode(
-                _F.array(
-                    _F.struct(_F.col("src").alias("node"), _F.col("dst").alias("nbr")),
-                    _F.struct(_F.col("dst").alias("node"), _F.col("src").alias("nbr")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
-        .repartition(32, "node")
-        .cache()
-    )
-    _bfs_adj.count()
-    _bfs_seeds = (
-        _T(spark, sf_dir, "supplier")
-        .filter(_F.col("s_nationkey") < 5)
-        .select((_F.lit(10000000) + _F.col("s_suppkey")).cast("long").alias("node"))
-        .distinct()
-        .withColumn("hops", _F.lit(0).cast("long"))
-        .repartition(32, "node")
-        .cache()
-    )
-    _bfs_seeds.count()
-    from transe_pyspark_spark.operators.graph import _sssp_relax, degree_assortativity
+def check_contracts(spark, sf_dir: str, rep: Report) -> None:
+    for name, spec in REGISTRY.items():
+        c = spec.plan
+        if c is None:
+            continue
+        df = c.stage(spark, sf_dir) if c.stage else spec.fn(spark, sf_dir)
+        plan = explain_text(df)
+        why = c.why
+        if c.stage:
+            why += (". The registered face's plan is checkpoint-truncated (Scan "
+                    "ExistingRDD), so this gates the pre-checkpoint stage frame")
+        rep.lines += [f"## {name}", "", f"**Requirement:** {why}", ""]
+        counts = {"exchanges": ("Exchange", c.max_exchanges), "scans": ("Scan parquet", c.max_scans)}
+        for kind, viol in c.gates(df, plan).items():
+            status = rep.gate(name, kind, viol)
+            if kind == "markers":
+                what = "must contain " + ", ".join(f"`{m}`" for m in c.markers)
+            elif kind == "forbidden":
+                what = "must not contain " + ", ".join(f"`{m}`" for m in c.forbidden)
+            elif kind == "check":
+                what = f"plan check `{c.check.__name__}`"
+            else:
+                node, limit = counts[kind]
+                what = f"{count_nodes(plan, node)} {node} node(s), budget {limit}"
+            rep.lines.append(f"- {what}: {status}")
+        rep.lines.append("")
+        rep.fragments(plan, _FRAGMENT_KEYS)
 
-    _ss_sel = (
-        _li.filter((_F.col("l_partkey") % 10 == 0) & (_F.col("l_quantity") >= 35))
-        .select(_F.col("l_orderkey").alias("ok"), _F.col("l_partkey").cast("long").alias("pk"))
-        .distinct()
-    )
-    _ss_ew = (
-        _ss_sel.select("ok", _F.col("pk").alias("pa"))
-        .join(_ss_sel.select("ok", _F.col("pk").alias("pb")), "ok")
-        .filter(_F.col("pa") < _F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(_F.count(_F.lit(1)).cast("long").alias("__nb"))
-        .select(
-            _F.col("pa").alias("a"), _F.col("pb").alias("b"),
-            _F.expr("CAST(1000000 AS BIGINT) div __nb").alias("w"),
-        )
-    )
-    _ss_adj = (
-        _ss_ew.select(
-            _F.explode(
-                _F.array(
-                    _F.struct(_F.col("a").alias("node"), _F.col("b").alias("nbr"), _F.col("w")),
-                    _F.struct(_F.col("b").alias("node"), _F.col("a").alias("nbr"), _F.col("w")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
-        .repartition(32, "node")
-        .cache()
-    )
-    _ss_adj.count()
-    _ss_dist0 = (
-        _ss_sel.filter(_F.col("pk") % 40 == 0)
-        .select(_F.col("pk").alias("node"))
-        .distinct()
-        .withColumn("cost", _F.lit(0).cast("long"))
-        .repartition(32, "node")
-        .cache()
-    )
-    _ss_dist0.count()
-    # r11 (VERDICT r10 ask #5): the DENSE trading-graph SSSP face —
-    # the weighted bfs_hops_trading construction (familiarity weights
-    # 1 + 1000 div n_orders), seeded at the nation<5 supplier cohort
-    _st_ew = (
-        _o.join(_li, _F.col("l_orderkey") == _F.col("o_orderkey"))
-        .groupBy(
-            _F.col("o_custkey").cast("long").alias("a"),
-            (_F.lit(10000000) + _F.col("l_suppkey")).cast("long").alias("b"),
-        )
-        .agg(_F.count(_F.lit(1)).cast("long").alias("__c"))
-        .select(
-            "a", "b", (_F.lit(1) + _F.expr("1000 div __c")).cast("long").alias("w")
-        )
-    )
-    _st_adj = (
-        _st_ew.select(
-            _F.explode(
-                _F.array(
-                    _F.struct(_F.col("a").alias("node"), _F.col("b").alias("nbr"), _F.col("w")),
-                    _F.struct(_F.col("b").alias("node"), _F.col("a").alias("nbr"), _F.col("w")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.*")
-        .repartition(32, "node")
-        .cache()
-    )
-    _st_adj.count()
-    _st_dist0 = (
-        _T(spark, sf_dir, "supplier")
-        .filter(_F.col("s_nationkey") < 5)
-        .select((_F.lit(10000000) + _F.col("s_suppkey")).cast("long").alias("node"))
-        .distinct()
-        .withColumn("cost", _F.lit(0).cast("long"))
-        .repartition(32, "node")
-        .cache()
-    )
-    _st_dist0.count()
-    lazy_gates = [
-        (
-            "semantic_dedup_recall (pair stage)",
-            semantic_near_pairs(
-                _lt(spark, sf_dir, "embeddings"), threshold=0.4, n_cells=8,
-                n_assign=2, eager_cleanup=False,
-            ),
-            ["MapInPandas", "InMemoryTableScan"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin"],
-            3,
-            "cell assignment is a NARROW Arrow kernel that runs ONCE: the "
-            "exploded assignment is pinned (repartition-on-cell + cache) "
-            "and BOTH sides of the cell equi-join read the cache — never "
-            "corpus all-pairs, never a per-side re-execution of the "
-            "assignment matmul; the only exchanges are the cell "
-            "repartition and the pair-dedup hash-agg",
-        ),
-        (
-            "lpa_communities_trading (round stage)",
-            _lpa_round(_lpa_adj, _lpa_labels0),
-            ["InMemoryTableScan", "HashAggregate"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-            7,
-            "each LPA round is one neighbor-keyed equi-join over the "
-            "PINNED doubled adjacency + two hash aggregates — the "
-            "min-label tie-break rides max_by(label,(count,-label)), "
-            "never a per-node window; the registered face's final plan "
-            "is an opaque cached generation, so this gates the "
-            "per-round shape",
-        ),
-        (
-            "kcore_trading_graph",
-            kcore_peel(_kedges, k=10, rounds=3, eager_cleanup=False),
-            ["LeftSemi", "InMemoryTableScan"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin"],
-            17,
-            "each round is one degree agg + two node-keyed SEMI joins "
-            "over the repartition+cache-pinned surviving edge set — "
-            "nothing quadratic, no broadcast of the edge table",
-        ),
-        (
-            "session_type_affinity",
-            session_type_affinity(_T(spark, sf_dir, "events"), eager_cleanup=False),
-            ["Window", "InMemoryTableScan"],
-            ["CartesianProduct"],
-            10,
-            "the scan→window→distinct membership subtree evaluates ONCE "
-            "(pinned); all four consumers read the cache — the 1-row "
-            "session-total broadcast NLJ is fine",
-        ),
-        (
-            "connected_components_parts (round stage)",
-            _cc_round(_cc_edges, _cc_labels0),
-            ["InMemoryTableScan", "HashAggregate"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-            9,
-            "each min-label round is one dst-keyed equi-join over the "
-            "PINNED doubled edge set + one min-neighbor hash aggregate "
-            "+ one node-keyed left join folding it back — the converged "
-            "face plan is an opaque localCheckpoint, so this gates the "
-            "per-round shape (the lpa_communities precedent; the budget "
-            "includes the pinned edge cache's printed DEFINITION "
-            "lineage — 6 of the 9 exchanges build the cache once)",
-        ),
-        (
-            "bfs_hops_trading (frontier stage)",
-            _bfs_frontier(_bfs_adj, _bfs_seeds, _bfs_seeds, 1),
-            ["InMemoryTableScan", "LeftAnti"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin"],
-            7,
-            "each hop is one FRONTIER-sized equi-join against the "
-            "pinned adjacency + a distinct + one anti-join against the "
-            "visited set — never a whole-graph pass; the face plan is "
-            "an opaque localCheckpoint, so this gates the per-hop shape "
-            "(4 of the 7 exchanges are the printed cache-definition "
-            "lineage, built once)",
-        ),
-        (
-            "sssp_copurchase_parts (relax stage)",
-            _sssp_relax(_ss_adj, _ss_dist0, _ss_dist0),
-            ["InMemoryTableScan", "HashAggregate"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-            12,
-            "each Bellman-Ford round is one FRONTIER-sized equi-join "
-            "against the pinned weighted adjacency + one min "
-            "hash-aggregate + one node-keyed full-outer fold — never a "
-            "whole-graph pass once the frontier shrinks; the face plan "
-            "is an opaque localCheckpoint, so this gates the per-round "
-            "shape (most of the 12-exchange budget is the printed "
-            "cache-definition lineage, built once)",
-        ),
-        (
-            "sssp_trading_graph (relax stage)",
-            _sssp_relax(_st_adj, _st_dist0, _st_dist0),
-            ["InMemoryTableScan", "HashAggregate"],
-            ["CartesianProduct", "BroadcastNestedLoopJoin", "Window"],
-            12,
-            "the DENSE-graph regime of the relax stage (r11, the "
-            "sf1-benched weighted face): identical per-round shape to "
-            "the co-purchase gate — frontier equi-join against the "
-            "pinned familiarity-weighted trading adjacency, min "
-            "hash-agg, node-keyed full-outer fold — with "
-            "corpus-proportional frontiers instead of the qty>=35 "
-            "sliver",
-        ),
-        (
-            "assortativity_trading (moment stage)",
-            degree_assortativity(_kedges, eager_cleanup=False),
-            ["InMemoryTableScan", "HashAggregate"],
-            ["CartesianProduct", "Window"],
-            9,
-            "degrees hash-agg once over the pinned canonical edge set; "
-            "M/Σx/Σx² are pure degree-power aggregates (no edge join at "
-            "all) and Σxy joins the CANONICAL half-sized edge set with "
-            "two node-keyed equi-joins; the two 1-row frames meet in a "
-            "broadcast NLJ (the record_linkage precedent) and the "
-            "moment products ride decimal(38,0) — nothing quadratic, "
-            "no window, no sqrt",
-        ),
-    ]
-    for name, lazy_df, markers, forb, max_ex, why in lazy_gates:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            lazy_df.explain("formatted")
-        plan = buf.getvalue()
-        missing = [m for m in markers if m not in plan]
-        present = [m for m in forb if m in plan]
-        n = count_exchange_nodes(plan)
-        scans = sum(1 for line in plan.splitlines() if "Scan parquet" in line and line.strip().startswith("("))
-        # kcore reads its two join tables; the semantic pair stage is a
-        # self-join (both sides scan the embedding table once each); the
-        # CC/BFS round stages read ONLY pinned caches at runtime, but
-        # explain prints each InMemoryRelation's DEFINITION lineage, so
-        # the count sees the co-purchase self-join's two lineitem scans
-        # (CC) / orders+lineitem+supplier (BFS) inside the cache
-        # definitions
-        _scan_allowance = {
-            "kcore_trading_graph": 2,
-            "semantic_dedup_recall (pair stage)": 2,
-            "lpa_communities_trading (round stage)": 2,
-            "connected_components_parts (round stage)": 2,
-            "bfs_hops_trading (frontier stage)": 3,
-            "sssp_copurchase_parts (relax stage)": 3,
-            "sssp_trading_graph (relax stage)": 3,
-            "assortativity_trading (moment stage)": 2,
-        }
-        one_scan_ok = scans <= _scan_allowance.get(name, 1)
-        shared_ok = True
-        if name.startswith("semantic_dedup_recall"):
-            # one assignment subtree, read from cache by both join
-            # sides: exactly one distinct MapInPandas node number and
-            # >=2 distinct InMemoryTableScan node numbers
-            n_mip = len(set(re.findall(r"\((\d+)\) MapInPandas", plan)))
-            n_imts = len(set(re.findall(r"\((\d+)\) InMemoryTableScan", plan)))
-            shared_ok = n_mip == 1 and n_imts >= 2
-        ok = not missing and not present and n <= max_ex and one_scan_ok and shared_ok
-        if not ok:
-            failures += 1
-        status = "OK" if ok else (
-            f"FAIL (missing {missing}, forbidden {present}, "
-            f"{n} exchanges > {max_ex}" + ("" if one_scan_ok else f", {scans} parquet scans")
-            + ("" if shared_ok else ", assignment subtree not shared") + ")"
-        )
-        print(f"{status:40s} {name} (lazy plan)")
-        lines += [
-            f"## {name} — lazy (eager_cleanup=False) plan", "",
-            f"**Requirement:** {why}. The registered face's executed plan "
-            "is checkpoint-truncated (Scan ExistingRDD) because the "
-            "operator releases its cached leaves eagerly; this gate pins "
-            "the pre-checkpoint shape.",
-            f"**Status:** {status}; {n} Exchange node(s), budget {max_ex}; "
-            f"{scans} parquet scan(s)", "",
-        ]
-    # corpus pipeline composition gate (r09, VERDICT r08 ask #4):
-    # per-operator plans are gated above, but COMPOSITION is where
-    # multi-consumer re-execution bites (transition totals, affinity
-    # membership, r06 PageRank). The one-action pipeline must read the
-    # documents parquet exactly TWICE (the batched ingest audit + the
-    # exact-dedup cache build) — every other corpus-sized subtree is
-    # pinned and its consumers must read InMemoryTableScan.
-    from transe_pyspark_spark.operators.pipeline import corpus_pipeline_report
 
-    rep, pipe_pins = corpus_pipeline_report(_T(spark, sf_dir, "documents"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        rep.explain("formatted")
-    pplan = buf.getvalue()
-    p_nodes = [ln.strip() for ln in pplan.splitlines() if ln.strip().startswith("(")]
-    p_scans = sum(1 for ln in p_nodes if "Scan parquet" in ln)
-    p_inmem = sum(1 for ln in p_nodes if "InMemoryTableScan" in ln)
-    p_forb = [m for m in ("CartesianProduct", "BroadcastNestedLoopJoin") if m in pplan]
-    p_ok = p_scans <= 2 and p_inmem >= 6 and not p_forb
-    if not p_ok:
-        failures += 1
-    status = "OK" if p_ok else (
-        f"FAIL ({p_scans} parquet scans > 2, {p_inmem} cache scans < 6, "
-        f"forbidden {p_forb})"
-    )
-    print(f"{status:40s} corpus_pipeline (composition)")
-    lines += [
-        "## corpus_pipeline — one-action composition", "",
-        "**Requirement:** ingest audit → exact dedup → near dedup → "
-        "quality gate → decontaminate → PII scrub → mix → chunk → pack "
-        "→ split → mixture report as ONE lazy plan: ≤2 parquet scans of "
-        "documents (audit + dedup cache build); the three fan-out "
-        "frames (post-dedup, post-gate, post-mix) are pinned so every "
-        "downstream consumer reads InMemoryTableScan — no corpus-sized "
-        "subtree executes twice.",
-        f"**Status:** {status}; {p_scans} parquet scan(s), "
-        f"{p_inmem} InMemoryTableScan consumer(s)", "",
-    ]
-    for p in pipe_pins:
-        p.unpersist()
-    # sf1 plan stability: 10× the data must not change the strategy —
-    # the same marker/forbidden-node gates re-run against the sf1
-    # fixture (built lazily by make_sf1 if absent)
+def check_sf1(spark, rep: Report) -> str:
     import make_sf1
 
     sf1_dir = make_sf1.ensure_sf1(spark)
-    lines += ["## sf1 plan stability (10× scale, same plans)", ""]
-    for name in SF1_STABLE:
-        plan = plan_of(spark, name, sf1_dir)
-        missing = [m for m in EXPECTATIONS[name][0] if m not in plan] if name in EXPECTATIONS else []
-        present = [m for m in FORBIDDEN[name][0] if m in plan] if name in FORBIDDEN else []
-        n_ex = count_exchange_nodes(plan)
-        ok = not missing and not present
-        if not ok:
-            failures += 1
-        status = "OK" if ok else f"FAIL (missing {missing}, forbidden {present})"
-        print(f"{status:40s} {name} @ sf1")
-        lines += [f"- `{name}` @ sf1: {status}; {n_ex} Exchange node(s)"]
-    lines += [""]
+    rep.lines += ["## sf1 plan stability (10× scale, same plans)", ""]
+    for name, spec in REGISTRY.items():
+        if spec.plan is None or not spec.plan.sf1:
+            continue
+        df = spec.fn(spark, sf1_dir)
+        plan = explain_text(df)
+        viol = [v for vs in spec.plan.gates(df, plan, at_sf1=True).values() for v in vs]
+        status = rep.gate(f"{name} @ sf1", "sf1", viol)
+        rep.lines.append(f"- `{name}` @ sf1: {status}; {count_nodes(plan, 'Exchange')} Exchange node(s)")
+    rep.lines.append("")
+    return sf1_dir
 
-    # PassJoin hot-piece skew evidence @ sf1 (r13, VERDICT r12 ask #6):
-    # the module names piece selectivity as the honest dial — this row
-    # MEASURES it on the edit3 face's own sf1 input, in both regimes.
-    # The r13 name-space restructure exists because the row-space
-    # numbers were found degenerate on the duplicate-heavy sf1 fixture
-    # (10 copies of every name): posting lists scale with rows and
-    # candidates with rows², so the gates pin (a) the collapse is real
-    # (name-space candidate volume ≤ 1/10 of row-space) and (b) no
-    # single piece dominates the name-space join (hot-key share < 50%
-    # — ordinary AQE-splittable skew, not a one-key join).
-    from pyspark.sql import functions as F  # noqa: N812
 
+def check_passjoin_skew(spark, sf1_dir: str, rep: Report) -> None:
+    """PassJoin candidate volume on the edit3 face's own sf1 input, in
+    both regimes. The sf1 fixture holds 10 copies of every name, so the
+    row-space numbers are degenerate by construction: the gate pins that
+    the name-space join collapses them >= 10x and that no single piece
+    carries half the candidate volume."""
     from transe_pyspark_spark.operators.linkage import passjoin_posting_stats
     from transe_pyspark_spark.sources.readers import load_table
 
-    part_sf1 = load_table(spark, sf1_dir, "part").select(
+    part = load_table(spark, sf1_dir, "part").select(
         "p_partkey",
-        F.concat_ws(
-            "", F.col("p_name"), F.lit(" "), F.col("p_brand"),
-            F.lit("-"), F.col("p_size").cast("string"),
-        ).alias("nm"),
+        F.concat_ws("", F.col("p_name"), F.lit(" "), F.col("p_brand"), F.lit("-"),
+                    F.col("p_size").cast("string")).alias("nm"),
     )
-    skew_name = passjoin_posting_stats(
-        part_sf1, "p_partkey", "nm", 3, count_pairs=False
-    ).collect()[0].asDict()
-    skew_row = passjoin_posting_stats(
-        part_sf1, "p_partkey", "nm", 3, distinct_names=False, count_pairs=False
-    ).collect()[0].asDict()
-    collapse_ok = (
-        skew_name["candidates_pre_dedup"] * 10 <= skew_row["candidates_pre_dedup"]
-    )
-    hot_ok = skew_name["hot_key_share_nano"] < 500_000_000
-    skew_ok = collapse_ok and hot_ok
-    if not skew_ok:
-        failures += 1
-    status = "OK" if skew_ok else (
-        f"FAIL ({'collapse not >=10x ' if not collapse_ok else ''}"
-        f"{'hot key >=50% ' if not hot_ok else ''})"
-    )
-    print(f"{status:40s} passjoin hot-piece skew @ sf1")
-    lines += [
-        "## passjoin hot-piece skew @ sf1 (measured, VERDICT r12 ask #6)", "",
-        "**Requirement:** PassJoin candidate volume must scale with DISTINCT",
-        "strings, not rows (the r13 name-space core), and the hottest",
-        "(seg_no, part_len, piece) key must stay ordinary-skew-sized (<50%",
-        "of candidate volume — AQE skew-split / salting territory, not a",
-        "one-key join).",
-        f"**Status:** {status}", "",
-        f"- sf1 input: {part_sf1.count():,} rows, "
-        f"{part_sf1.select('nm').distinct().count():,} distinct names",
-        f"- row-space (pre-r13 regime): max seg/sub posting "
-        f"{skew_row['max_seg_posting']:,}/{skew_row['max_sub_posting']:,}, "
-        f"candidates pre-dedup {skew_row['candidates_pre_dedup']:,}, "
-        f"hot-key share {skew_row['hot_key_share_nano']/1e7:.1f}%",
-        f"- name-space (what `passjoin_pairs` joins since r13): max seg/sub "
-        f"posting {skew_name['max_seg_posting']:,}/{skew_name['max_sub_posting']:,}, "
-        f"candidates pre-dedup {skew_name['candidates_pre_dedup']:,} "
-        f"({skew_row['candidates_pre_dedup'] / max(1, skew_name['candidates_pre_dedup']):.0f}× collapse), "
-        f"hot-key share {skew_name['hot_key_share_nano']/1e7:.1f}%",
-        "",
-    ]
+    name = passjoin_posting_stats(part, "p_partkey", "nm", 3, count_pairs=False).collect()[0]
+    row = passjoin_posting_stats(
+        part, "p_partkey", "nm", 3, distinct_names=False, count_pairs=False
+    ).collect()[0]
+    viol = []
+    if name["candidates_pre_dedup"] * 10 > row["candidates_pre_dedup"]:
+        viol.append("collapse not >= 10x")
+    if name["hot_key_share_nano"] >= 500_000_000:
+        viol.append("hot key >= 50%")
 
-    # deterministic-step kernel transport gate (r14, VERDICT r13 asks
-    # #2/#5): each per-partition kernel job of the partitioned
-    # merge faces must be exactly repartition(1) -> ONE Arrow map —
-    # one SinglePartition exchange, no extra shuffle, no
-    # driver-invisible second Python stage. Built from the same API
-    # shape `sgd_step_deterministic` dispatches per parity class.
-    from pyspark.sql import functions as _Fk
+    def regime(r) -> str:
+        return (f"max seg/sub posting {r['max_seg_posting']:,}/{r['max_sub_posting']:,}, "
+                f"candidates pre-dedup {r['candidates_pre_dedup']:,}, "
+                f"hot-key share {r['hot_key_share_nano'] / 1e7:.1f}%")
 
-    _ktr = spark.range(50).select(
-        _Fk.col("id").alias("h"),
-        (_Fk.col("id") % 10).alias("l"),
-        ((_Fk.col("id") * 7 + 3) % 97).alias("t"),
+    collapse = row["candidates_pre_dedup"] / max(1, name["candidates_pre_dedup"])
+    rep.section(
+        "passjoin hot-piece skew @ sf1 (measured)",
+        "PassJoin candidate volume must scale with DISTINCT strings, not rows (the "
+        "name-space core), and the hottest (seg_no, part_len, piece) key must stay "
+        "ordinary-skew-sized (<50% of candidate volume — AQE skew-split / salting "
+        "territory, not a one-key join).",
+        viol,
+        f"\n\n- sf1 input: {part.count():,} rows, {part.select('nm').distinct().count():,} "
+        f"distinct names\n- row-space: {regime(row)}\n- name-space (what `passjoin_pairs` "
+        f"joins): {regime(name)} ({collapse:.0f}× collapse)",
     )
 
-    def _noop_kernel(batches):
-        for b in batches:
-            yield b
 
-    _kjob = (
-        _ktr.filter((_Fk.col("h") % 2) == 0)
-        .repartition(1)
-        .mapInPandas(_noop_kernel, schema="h long, l long, t long")
+def _outer_plan_text(df) -> str:
+    """Executed-plan text with every InMemoryRelation SUBPLAN stripped
+    (lines indented deeper than the relation line): the cached child
+    always textually contains the pin repartition's Exchange, which is
+    the one sanctioned entity-sized movement per batch, not a per-join
+    cost."""
+    out, skip_indent = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if skip_indent is not None:
+            if indent > skip_indent:
+                continue
+            skip_indent = None
+        if "InMemoryRelation" in line:
+            skip_indent = indent
+        out.append(line)
+    return "\n".join(out)
+
+
+def _shuffled_not_broadcast(plan: str) -> list[str]:
+    viol = ["BroadcastExchange in plan"] if "BroadcastExchange" in plan else []
+    if "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan:
+        viol.append("no shuffled equi-join")
+    return viol
+
+
+def check_trainer_shapes(spark, rep: Report) -> None:
+    from transe_pyspark_spark.transe.train_relational import (
+        RelationalTransETrainer,
+        deterministic_corrupt_frame,
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        _kjob.explain("formatted")
-    _kplan = buf.getvalue()
-    # formatted explain lists each node twice (tree + details) —
-    # count node HEADERS for the exchange budget
-    _n_ex = len(re.findall(r"\(\d+\) Exchange", _kplan))
-    _has_arrow = ("MapInPandas" in _kplan) or ("ArrowEvalPython" in _kplan)
-    _k_ok = _n_ex == 1 and "SinglePartition" in _kplan and _has_arrow
-    if not _k_ok:
-        failures += 1
-    status = "OK" if _k_ok else (
-        f"FAIL (exchanges={_n_ex} want 1 SinglePartition, arrow={_has_arrow})"
+
+    # each parity-class kernel job of the partitioned merge faces, built
+    # from the API shape `sgd_step_deterministic` dispatches
+    tr = spark.range(50).select(
+        F.col("id").alias("h"), (F.col("id") % 10).alias("l"), ((F.col("id") * 7 + 3) % 97).alias("t")
     )
-    print(f"{status:40s} sgd deterministic-step kernel job (1 exchange, Arrow map)")
-    lines += [
-        "## sgd deterministic-step kernel job — transport shape (r14)", "",
-        "**Requirement:** the partitioned merge faces "
-        "(`transe_sgd_step_merged`/`_lastwriter`, the two-step chain) "
-        "dispatch each parity class as repartition(1) → one Arrow "
-        "mapInPandas: exactly ONE SinglePartition exchange and one "
-        "Python stage per kernel job — the whole-frame-as-one-batch "
-        "contract has no room for a hidden extra shuffle or a second "
-        "Python eval between the filter and the kernel.",
-        f"**Status:** {status} ({_n_ex} exchange(s))", "",
-    ] + ["```"] + [
-        line.strip() for line in _kplan.splitlines()
-        if "Exchange" in line or "MapInPandas" in line or "ArrowEvalPython" in line
-    ][:6] + ["```", ""]
+    kjob = tr.filter(F.col("h") % 2 == 0).repartition(1).mapInPandas(
+        lambda batches: batches, schema="h long, l long, t long"
+    )
+    kplan = explain_text(kjob)
+    n_ex = count_nodes(kplan, "Exchange")
+    viol = [] if n_ex == 1 and "SinglePartition" in kplan else [f"{n_ex} exchanges, want 1 SinglePartition"]
+    if "MapInPandas" not in kplan and "ArrowEvalPython" not in kplan:
+        viol.append("no Arrow map")
+    rep.section(
+        "sgd deterministic-step kernel job — transport shape",
+        "the partitioned merge faces (`transe_sgd_step_merged`/`_lastwriter`, the two-step "
+        "chain) dispatch each parity class as repartition(1) → one Arrow mapInPandas: "
+        "exactly ONE SinglePartition exchange and one Python stage per kernel job.",
+        viol, f" ({n_ex} exchange(s))", kplan, ("Exchange", "MapInPandas", "ArrowEvalPython"),
+    )
 
-    # relational-trainer beyond-broadcast gate (r07, VERDICT r06 ask #1):
-    # at V=2,000,000, k=50 the entity table is ~800 MB — 6.25× the
-    # broadcast-model limit — so the gather join must SHUFFLE on the
-    # entity id (SortMergeJoin/ShuffledHashJoin), never broadcast the
-    # entity side. The plan is built from the trainer's own _gather at
-    # the real shape: the entity init is a LAZY mapInPandas over
-    # range(V) (explain never executes it) and the batch side is an
-    # eager-checkpointed 500k-row frame — the same LogicalRDD + size
-    # fit produces at the big-bench shape (a smaller batch legitimately
-    # broadcasts the BATCH side; the entity side must shuffle in every
-    # regime).
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from transe_pyspark_spark.transe.train_relational import RelationalTransETrainer
-
+    # V=2M, k=50: the entity table is ~800 MB, 6.25× the broadcast-model
+    # limit. The entity init is a lazy mapInPandas over range(V); the
+    # batch side is an eager-checkpointed 500k-row frame, the LogicalRDD
+    # fit() produces at the big-bench shape.
     big_v = 2_000_000
-    tr = RelationalTransETrainer(k=50)
-    tr._broadcast_model = big_v * tr.k * 8 <= tr.broadcast_model_limit
-    assert not tr._broadcast_model
-    ent_big = tr._init_embeddings(spark, big_v, tr.k, tr.seed, normalize=True)
-    c_big = spark.range(500_000).select(
+    trainer = RelationalTransETrainer(k=50)
+    trainer._broadcast_model = big_v * trainer.k * 8 <= trainer.broadcast_model_limit
+    assert not trainer._broadcast_model
+    ent = trainer._init_embeddings(spark, big_v, trainer.k, trainer.seed, normalize=True)
+    batch = spark.range(500_000).select(
         (F.col("id") % big_v).alias("h"),
         F.lit(0).alias("l"),
         ((F.col("id") * 7 + 1) % big_v).alias("t"),
         ((F.col("id") * 13 + 3) % big_v).alias("ch"),
         ((F.col("id") * 17 + 5) % big_v).alias("ct"),
     ).localCheckpoint(eager=True)
-    g_big = tr._gather(c_big, ent_big)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        g_big.explain("formatted")
-    big_plan = buf.getvalue()
-    big_bad = "BroadcastExchange" in big_plan
-    big_missing = not ("SortMergeJoin" in big_plan or "ShuffledHashJoin" in big_plan)
-    big_ok = not big_bad and not big_missing
-    if not big_ok:
-        failures += 1
-    status = "OK" if big_ok else (
-        f"FAIL ({'entity side broadcast' if big_bad else ''}"
-        f"{' no shuffled equi-join' if big_missing else ''})"
+    gplan = explain_text(trainer._gather(batch, ent))
+    rep.section(
+        "relational trainer gather — beyond-broadcast regime (V=2M, k=50)",
+        "at an ~800 MB entity table (6.25× the 128 MB broadcast-model limit, auto-detected "
+        "by the size check — nothing force-enabled) the melt-gather joins the entity table "
+        "with a shuffled equi-join on the id and restores triplet adjacency with the "
+        "(__rid, __role) repartition+sort; the entity side is NEVER a broadcast build side.",
+        _shuffled_not_broadcast(gplan), "", gplan, ("Join", "Exchange", "Sort "),
     )
-    print(f"{status:40s} relational gather @ V=2M (beyond-broadcast)")
-    lines += [
-        "## relational trainer gather — beyond-broadcast regime (V=2M, k=50)", "",
-        "**Requirement:** at an ~800 MB entity table (6.25× the 128 MB "
-        "broadcast-model limit, auto-detected by the size check — nothing "
-        "force-enabled) the melt-gather joins the entity table with a "
-        "shuffled equi-join on the id and restores triplet adjacency with "
-        "the (__rid, __role) repartition+sort; the entity side is NEVER a "
-        "broadcast build side. The update join follows the same "
-        "_broadcast_model flag.",
-        f"**Status:** {status}", "",
-        "```",
-        *[l.strip()[:110] for l in big_plan.splitlines()
-          if any(k in l for k in ("Join", "Exchange", "Sort "))][:10],
-        "```", "",
-    ]
 
-    # steady-state-batch gate (r08, VERDICT r07 ask #1): with the
-    # entity state PINNED the way fit() pins it in the shuffled regime
-    # (repartition-on-id + sortWithinPartitions + cache —
-    # InMemoryRelation preserves partitioning/ordering where a
-    # localCheckpoint's LogicalRDD reports UnknownPartitioning under
-    # AQE), the per-batch plans must carry NO full entity-side
-    # Exchange: the gather's only Exchanges are the melted probe side
-    # + the (__rid) reassembly repartition (exactly 2), and the update
-    # join's only Exchange is the folded-delta side (exactly 1). The
-    # cache is registered lazily, so the gate never materializes the
-    # V=2M table — the plan substitution is visible at explain time.
-    def _outer_plan_text(df) -> str:
-        """Physical-plan text with every InMemoryRelation SUBPLAN
-        stripped (lines indented deeper than the relation line): the
-        cached child always textually contains the pin repartition's
-        Exchange, which is the one sanctioned entity-sized movement
-        per batch, not a per-join cost."""
-        txt = df._jdf.queryExecution().executedPlan().toString()
-        out, skip_indent = [], None
-        for line in txt.splitlines():
-            indent = len(line) - len(line.lstrip(" :+-"))
-            if skip_indent is not None:
-                if indent > skip_indent:
-                    continue
-                skip_indent = None
-            if "InMemoryRelation" in line:
-                skip_indent = indent
-            out.append(line)
-        return "\n".join(out)
-
+    # entity state pinned the way fit() pins it in the shuffled regime.
+    # count() materializes the ~800 MB cache: InMemoryRelation reports
+    # its partitioning only once built (fit()'s _pin_entity does the
+    # same); it is unpersisted before the next gate.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ent_pinned = (
-        ent_big.repartition(n_part, "id").sortWithinPartitions("id").cache()
-    )
+    pinned = ent.repartition(n_part, "id").sortWithinPartitions("id").cache()
     try:
-        # the cache must MATERIALIZE before InMemoryRelation reports
-        # its partitioning (an unfinalized AQE child is Unknown) —
-        # exactly why fit()'s _pin_entity runs count() eagerly
-        ent_pinned.count()
-        g_ss = tr._gather(c_big, ent_pinned)
-        ss_plan = _outer_plan_text(g_ss)
-        n_ex_g = ss_plan.count("Exchange")
-        delta_df = spark.range(100_000).select(
+        pinned.count()
+        ss_plan = _outer_plan_text(trainer._gather(batch, pinned))
+        delta = spark.range(100_000).select(
             "id", F.expr("array_repeat(0.001d, 50)").alias("delta")
         ).localCheckpoint(eager=True)
-        upd = ent_pinned.join(delta_df, "id", "left")
-        up_plan = _outer_plan_text(upd)
-        n_ex_u = up_plan.count("Exchange")
-        ss_ok = (
-            "InMemoryTableScan" in ss_plan and n_ex_g == 2
-            and "InMemoryTableScan" in up_plan and n_ex_u <= 1
-            and "BroadcastExchange" not in ss_plan
-        )
+        up_plan = _outer_plan_text(pinned.join(delta, "id", "left"))
     finally:
-        ent_pinned.unpersist()
-    if not ss_ok:
-        failures += 1
-    status = "OK" if ss_ok else (
-        f"FAIL (gather Exchanges={n_ex_g} want 2, update Exchanges={n_ex_u} want 1)"
-    )
-    print(f"{status:40s} relational steady-state batch (pinned entity, no entity Exchange)")
-    lines += [
-        "## relational trainer steady-state batch — pinned entity state (r08)", "",
-        "**Requirement:** with the entity table pinned as fit() pins it in "
-        "the shuffled regime (repartition-on-id + sortWithinPartitions + "
-        "cache), the gather SortMergeJoin and the update join read the "
-        "entity side straight from InMemoryTableScan with no Exchange and "
-        "no Sort: gather plan = exactly 2 Exchanges (melted probe + __rid "
-        "reassembly), update plan = exactly 1 Exchange (folded delta side). "
-        "The only entity-sized per-batch movement is the single repartition "
-        "feeding the next cache generation.",
-        f"**Status:** {status} (gather Exchanges={n_ex_g}, update Exchanges={n_ex_u})", "",
-    ]
-
-    # deterministic relational-step gate (r15, VERDICT r14 ask #3):
-    # the oracle-checked `relational_sgd_step_deterministic` claims the
-    # beyond-broadcast dataflow — compose its corrupt → melt-gather
-    # plan at the SAME V=2M shape (closed-form corruption over a
-    # 500k-triple lazy trainset, entity table ~800 MB) and assert the
-    # honest shape: the gather equi-join shuffles (SortMergeJoin/
-    # ShuffledHashJoin), the entity side is NEVER a broadcast build
-    # side, and the (__rid, __role) reassembly repartition is present.
-    # The face itself runs at fixture scale where AQE may legitimately
-    # broadcast; THIS is the 100 TB-shape evidence.
-    from transe_pyspark_spark.transe.train_relational import (
-        deterministic_corrupt_frame,
+        pinned.unpersist()
+    n_g, n_u = ss_plan.count("Exchange"), up_plan.count("Exchange")
+    ok = ("InMemoryTableScan" in ss_plan and n_g == 2 and "InMemoryTableScan" in up_plan
+          and n_u <= 1 and "BroadcastExchange" not in ss_plan)
+    rep.section(
+        "relational trainer steady-state batch — pinned entity state",
+        "with the entity table pinned as fit() pins it (repartition-on-id + "
+        "sortWithinPartitions + cache), the gather and update joins read the entity side "
+        "straight from InMemoryTableScan with no Exchange and no Sort: gather plan = exactly "
+        "2 Exchanges (melted probe + __rid reassembly), update plan = at most 1 (folded "
+        "delta side).",
+        [] if ok else [f"gather Exchanges={n_g} want 2, update Exchanges={n_u} want <= 1"],
+        f" (gather Exchanges={n_g}, update Exchanges={n_u})",
     )
 
     # 2M triples: past the ~10 MB broadcast estimate, so even the
-    # rejection anti-join shuffles — at a 500k-triple trainset Catalyst
-    # legitimately broadcasts the 24 B/row rejection table (the
-    # trainer's own broadcast_rejection_limit regime); the gate pins
-    # the FULLY-shuffled plan of the 100 TB-KG shape.
-    train_big = spark.range(2_000_000).select(
-        (F.col("id") % big_v).alias("h"),
-        (F.col("id") % 10).alias("l"),
+    # rejection anti-join shuffles — the fully-shuffled 100 TB-KG shape
+    train = spark.range(2_000_000).select(
+        (F.col("id") % big_v).alias("h"), (F.col("id") % 10).alias("l"),
         ((F.col("id") * 7 + 3) % big_v).alias("t"),
     )
-    picked_big = deterministic_corrupt_frame(train_big, train_big, big_v)
-    g_step = tr._gather(picked_big, ent_big)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        g_step.explain("formatted")
-    step_plan = buf.getvalue()
-    step_bad = "BroadcastExchange" in step_plan
-    step_missing = not (
-        "SortMergeJoin" in step_plan or "ShuffledHashJoin" in step_plan
+    splan = explain_text(trainer._gather(deterministic_corrupt_frame(train, train, big_v), ent))
+    rep.section(
+        "deterministic relational SGD step — beyond-broadcast shape",
+        "the oracle-checked relational step face (transe_sgd_step_relational) routes through "
+        "deterministic_corrupt_frame + RelationalTransETrainer._gather; at V=2M / 2M triples "
+        "the composed corrupt→gather plan must contain a shuffled equi-join and NO "
+        "BroadcastExchange anywhere.",
+        _shuffled_not_broadcast(splan), "", splan, ("Join", "Exchange", "Sort "),
     )
-    step_ok = not step_bad and not step_missing
-    if not step_ok:
-        failures += 1
-    status = "OK" if step_ok else (
-        f"FAIL ({'broadcast in plan' if step_bad else ''}"
-        f"{' no shuffled equi-join' if step_missing else ''})"
-    )
-    print(f"{status:40s} deterministic relational step @ V=2M (beyond-broadcast)")
-    lines += [
-        "## deterministic relational SGD step — beyond-broadcast shape (r15)", "",
-        "**Requirement:** the oracle-checked relational step face "
-        "(transe_sgd_step_relational) routes through deterministic_corrupt_frame "
-        "+ RelationalTransETrainer._gather; at V=2M / 2M triples the "
-        "composed corrupt→gather plan must contain a shuffled equi-join and "
-        "NO BroadcastExchange anywhere (shuffled rejection anti-join, "
-        "shuffled gather, __rid reassembly).",
-        f"**Status:** {status}", "",
-        "```",
-        *[l.strip()[:110] for l in step_plan.splitlines()
-          if any(k in l for k in ("Join", "Exchange", "Sort "))][:12],
-        "```", "",
-    ]
 
-    # skewed-join demonstration (AQE split vs salting) — executed-plan
-    # evidence, not just explain: the skew=true marker only exists on
-    # the finalized adaptive plan after a run
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    spark = get_spark("explain-plans")
+    rep = Report(sf_dir)
+    check_contracts(spark, sf_dir, rep)
+    sf1_dir = check_sf1(spark, rep)
+    check_passjoin_skew(spark, sf1_dir, rep)
+    check_trainer_shapes(spark, rep)
+    # executed-plan evidence: the skew=true marker only exists on the
+    # finalized adaptive plan after a run
     import skew_demo
 
     _, skew_lines, skew_failures = skew_demo.demo(spark, sf_dir)
-    failures += skew_failures
-    print(f"{'OK' if not skew_failures else 'FAIL':40s} skewed join (AQE skew=true + salted)")
-    lines += skew_lines
+    rep.gate("skewed join (AQE skew=true + salted)", "script",
+             [f"{skew_failures} failure(s)"] if skew_failures else [])
+    rep.lines += skew_lines
 
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(lines))
-    print(f"\n{failures} plan violations; PLANS.md written")
-    return 1 if failures else 0
+        f.write("\n".join(rep.lines))
+    tally = ", ".join(f"{k} {n}" for k, n in sorted(rep.kinds.items()))
+    print(f"\n{sum(rep.kinds.values())} gates ({tally}); {rep.failures} plan violations; "
+          "PLANS.md written")
+    return 1 if rep.failures else 0
 
 
 if __name__ == "__main__":

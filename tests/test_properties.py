@@ -243,9 +243,7 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
     """Joining two tables bucketed on the join key must plan ZERO
     exchanges — the co-location argument for paying the shuffle once at
     write time (100 TB fact⨝fact joins)."""
-    import contextlib
-    import io
-
+    from transe_pyspark_spark.plans.contract import explain_text
     from transe_pyspark_spark.sources.readers import write_bucketed
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
@@ -259,10 +257,7 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
             spark.table("o_bucketed"),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
+        plan = explain_text(joined)
         assert "SortMergeJoin" in plan
         exchange_nodes = [
             line for line in plan.splitlines()
@@ -738,11 +733,7 @@ def test_ivf_persisted_matches_inline_and_prunes(spark, sf_dir):
     assert a == b and a
     # partition pruning: the postings scan must carry a filter on the
     # cell partition column (dynamic pruning from the probe join)
-    import contextlib
-    import io
+    from transe_pyspark_spark.plans.contract import explain_text
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        persisted.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain_text(persisted)
     assert "PartitionFilters" in plan and "dynamicpruning" in plan.lower(), plan[:2000]

@@ -345,19 +345,14 @@ def test_semantic_near_pairs_no_cross_cluster_join(spark):
     """The pair join is a cell EQUI-join — the plan must contain no
     CartesianProduct / BroadcastNestedLoopJoin (never corpus
     all-pairs)."""
-    import contextlib
-    import io
-
     from transe_pyspark_spark.operators.similarity import semantic_near_pairs
+    from transe_pyspark_spark.plans.contract import explain_text
     from transe_pyspark_spark.sources.readers import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     pairs = semantic_near_pairs(e, threshold=0.4, n_cells=8, n_assign=2,
                                 eager_cleanup=False)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pairs.explain("formatted")
-    plan = buf.getvalue()
+    plan = explain_text(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" in plan  # the cell equi-join is there
@@ -371,23 +366,18 @@ def test_corpus_pipeline_one_action_composition(spark, sf_dir):
     documents (audit + dedup cache build), fan-out frames pinned
     (their consumers read InMemoryTableScan), and the metric rows are
     internally consistent."""
-    import contextlib
-    import io
-
     from transe_pyspark_spark.operators.pipeline import corpus_pipeline_report
+    from transe_pyspark_spark.plans.contract import count_nodes, explain_text
     from transe_pyspark_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     rep, pins = corpus_pipeline_report(docs)
     try:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            rep.explain("formatted")
-        plan = buf.getvalue()
-        nodes = [ln.strip() for ln in plan.splitlines() if ln.strip().startswith("(")]
-        assert sum(1 for ln in nodes if "Scan parquet" in ln) <= 2
-        assert sum(1 for ln in nodes if "InMemoryTableScan" in ln) >= 6
+        plan = explain_text(rep)
+        assert count_nodes(plan, "Scan parquet") <= 2
+        assert count_nodes(plan, "InMemoryTableScan") >= 6
         assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
         m = {r["metric"]: r["value"] for r in rep.collect()}
         assert m["audit_violations:unique:doc_id"] == 0
@@ -529,14 +519,12 @@ def test_ivm_maintenance_never_scans_base(spark, tmp_path):
     """The refresh plan must read ONLY the persisted summary and the
     change batch — never the base fact table (the whole point at
     100 TB)."""
-    import contextlib
-    import io
-
     from transe_pyspark_spark.operators.relational import (
         build_group_summary,
         maintain_group_summary,
         snapshot_changeset_images,
     )
+    from transe_pyspark_spark.plans.contract import count_nodes, explain_text
 
     base = spark.range(0, 1000).selectExpr(
         "id AS k", "CAST(id % 7 AS STRING) AS g", "id % 13 AS v"
@@ -558,12 +546,8 @@ def test_ivm_maintenance_never_scans_base(spark, tmp_path):
         "g",
         ["v"],
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        refreshed.explain("formatted")
-    plan = buf.getvalue()
-    nodes = [ln.strip() for ln in plan.splitlines() if ln.strip().startswith("(")]
-    assert sum(1 for ln in nodes if "Scan parquet" in ln) == 2
+    plan = explain_text(refreshed)
+    assert count_nodes(plan, "Scan parquet") == 2
     # and neither scan is the base table (the two are summary + changes)
     assert f"{os.sep}base" not in plan
 
@@ -699,11 +683,10 @@ def test_interval_islands_matches_python_model(spark):
     """Random intervals (overlaps, nesting, exact touches, duplicates)
     must merge exactly like a sequential sweep; touching intervals
     merge; bad intervals raise; the whole plan rides ONE key shuffle."""
-    import contextlib
-    import io
     import random
 
     from transe_pyspark_spark.operators.asof import interval_islands
+    from transe_pyspark_spark.plans.contract import count_nodes, explain_text
 
     rng = random.Random(13)
     rows = []
@@ -745,15 +728,7 @@ def test_interval_islands_matches_python_model(spark):
     assert ("nest", 0, 100, 2) in got
 
     # single key shuffle: windows + rollup share the partitioning
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        interval_islands(df, "k", "s", "e").explain("formatted")
-    plan = buf.getvalue()
-    import re
-    n_ex = sum(
-        1 for ln in plan.splitlines()
-        if re.match(r"\(\d+\) Exchange", ln.strip())
-    )
+    n_ex = count_nodes(explain_text(interval_islands(df, "k", "s", "e")), "Exchange")
     assert n_ex == 1, f"expected one Exchange, saw {n_ex}"
 
     bad = spark.createDataFrame([("u", 10, 5)], "k string, s long, e long")

@@ -514,17 +514,12 @@ def test_bm25_topk_plan_uses_window_group_limit(spark):
     """The per-query top-k must plan the partial WindowGroupLimit —
     O(k) state per partition before the shuffle, never a full sort of
     a query's candidate list."""
-    import contextlib
-    import io
-
     from transe_pyspark_spark.functions.text import bm25_topk
+    from transe_pyspark_spark.plans.contract import explain_text
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     df = bm25_topk(docs, {"q": ["hash"]}, k=3, eager_cleanup=False)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    assert "WindowGroupLimit" in buf.getvalue()
+    assert "WindowGroupLimit" in explain_text(df)
 
 
 # ------------------------------------ winnowing fingerprints — r11 widen

@@ -36,6 +36,7 @@ from transe_pyspark_spark.operators import multimodal as MM
 from transe_pyspark_spark.operators import relational as R
 from transe_pyspark_spark.operators import similarity as S
 from transe_pyspark_spark.operators.asof import asof_join, range_join_count
+from transe_pyspark_spark.plans.contract import PlanContract, count_nodes
 from transe_pyspark_spark.sources.readers import load_table
 
 
@@ -45,14 +46,17 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     tags: tuple[str, ...] = field(default=())
+    plan: PlanContract | None = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def _register(name: str, oracle: str | None, tags: tuple[str, ...] = ()):
+def _register(
+    name: str, oracle: str | None, tags: tuple[str, ...] = (), plan: PlanContract | None = None
+):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(name, fn, oracle, tags)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, tags, plan)
         return fn
 
     return deco
@@ -73,6 +77,131 @@ def _cents(col, scale: int = 100):
 
 
 _T = load_table  # brevity
+
+
+def _pid_windows(spec_prefix: str):
+    """Plan check: every window whose partition spec starts with
+    ``spec_prefix`` also keys on ``__pid`` — the distributed prefix
+    pattern spreads a group over every range partition; a window keyed
+    on the group alone runs one task per group at any data size."""
+
+    def windows_keyed_on_pid(df: DataFrame, plan: str) -> list[str]:
+        return [
+            f"window without __pid: {line.strip()[:120]}"
+            for line in plan.splitlines()
+            if f"windowspecdefinition({spec_prefix}" in line and "__pid#" not in line
+        ]
+
+    return windows_keyed_on_pid
+
+
+def _reuses_exchange(df: DataFrame, plan: str) -> list[str]:
+    """Plan check on the EXECUTED plan: identical subtrees dedup at
+    runtime (AQE stage reuse) — visible only after a run, so this
+    executes ``df``."""
+    df.collect()
+    if "ReusedExchange" in df._jdf.queryExecution().executedPlan().toString():
+        return []
+    return ["no ReusedExchange in executed plan"]
+
+
+def _trade_lines(spark: SparkSession, sf_dir: str, long_ids: bool = False) -> DataFrame:
+    """The customer↔supplier trading graph's edges, one row per order
+    line: ``src`` = customer key, ``dst`` = 10000000 + supplier key
+    (disjoint id ranges). ``long_ids`` casts both to BIGINT."""
+    o = _T(spark, sf_dir, "orders")
+    li = _T(spark, sf_dir, "lineitem")
+    src, dst = F.col("o_custkey"), F.lit(10000000) + F.col("l_suppkey")
+    if long_ids:
+        src, dst = src.cast("long"), dst.cast("long")
+    return o.join(li, F.col("l_orderkey") == F.col("o_orderkey")).select(
+        src.alias("src"), dst.alias("dst")
+    )
+
+
+def _trade_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted trading graph: (src, dst, w) per traded pair with
+    the familiarity weight ``w = 1 + 1000 div n_orders`` — many trades
+    make a hop cheap."""
+    return (
+        _trade_lines(spark, sf_dir, long_ids=True)
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
+        .select("src", "dst", (F.lit(1) + F.expr("1000 div __c")).cast("long").alias("w"))
+    )
+
+
+def _supplier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The nation<5 supplier cohort as trading-graph node ids — a seed
+    set non-empty at every fixture scale factor."""
+    return (
+        _T(spark, sf_dir, "supplier")
+        .filter(F.col("s_nationkey") < 5)
+        .select((F.lit(10000000) + F.col("s_suppkey")).cast("long").alias("node"))
+    )
+
+
+def _copurchase_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase graph's input slice: (order ``ok``, part ``pk``)
+    for every line of a ``partkey % 10 == 0`` part bought 35+ at a
+    time — small at every scale factor."""
+    li = _T(spark, sf_dir, "lineitem")
+    return li.filter((F.col("l_partkey") % 10 == 0) & (F.col("l_quantity") >= 35)).select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").cast("long").alias("pk")
+    )
+
+
+def _copurchase_pairs(sel: DataFrame) -> DataFrame:
+    """Distinct part pairs (pa < pb) bought in one order."""
+    return (
+        sel.select("ok", F.col("pk").alias("pa"))
+        .join(sel.select("ok", F.col("pk").alias("pb")), "ok")
+        .filter(F.col("pa") < F.col("pb"))
+        .select("pa", "pb")
+        .distinct()
+    )
+
+
+def _copurchase_weights(sel: DataFrame) -> DataFrame:
+    """The weighted co-purchase graph: (src, dst, w) per part pair with
+    the rarity cost ``w = 1000000 div n_baskets``."""
+    return (
+        sel.select("ok", F.col("pk").alias("pa"))
+        .join(sel.select("ok", F.col("pk").alias("pb")), "ok")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).cast("long").alias("__nb"))
+        .select(
+            F.col("pa").alias("src"),
+            F.col("pb").alias("dst"),
+            F.expr("CAST(1000000 AS BIGINT) div __nb").alias("w"),
+        )
+    )
+
+
+def _both_ways(edges: DataFrame, a: str, b: str, names=("node", "nbr"), *extra) -> DataFrame:
+    """Every edge (a, b) listed both ways as ``names`` (+ ``extra``
+    columns), exploded in-plan from one pass over ``edges``."""
+    x, y = names
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(x), F.col(b).alias(y), *extra),
+                F.struct(F.col(b).alias(x), F.col(a).alias(y), *extra),
+            )
+        ).alias("__e")
+    ).select("__e.*")
+
+
+def _pinned(df: DataFrame, key: str) -> DataFrame:
+    """``df`` repartitioned on ``key``, cached and materialized — the
+    iterative operators' pinned-leaf shape, for the stage builders.
+    Explain prints a cached leaf's definition lineage, so a stage's
+    Exchange and scan budgets include these one-time builds."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    out = df.repartition(n_part, key).cache()
+    out.count()
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -96,6 +225,11 @@ _T = load_table  # brevity
     GROUP BY l_returnflag, l_linestatus
     """,
     tags=("scan", "filter", "agg"),
+    plan=PlanContract(
+        "date filter reaches the parquet scan; partial+final hash agg",
+        markers=("PushedFilters: [IsNotNull(l_shipdate)", "HashAggregate"),
+        max_exchanges=1,
+    ),
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: pushdown-able timestamp filter, 2-key hash agg.
@@ -127,6 +261,11 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
     tags=("join", "agg", "topk"),
+    plan=PlanContract(
+        "filtered customer dim broadcasts into the orders/lineitem join",
+        markers=("BroadcastHashJoin",),
+        sf1=True,
+    ),
 )
 def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → fact joins → top-k.
@@ -160,6 +299,11 @@ def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r_name, n_name
     """,
     tags=("join", "agg", "broadcast"),
+    plan=PlanContract(
+        "dimension sides broadcast — lineitem never shuffles for a 25-row nation",
+        markers=("BroadcastHashJoin",),
+        sf1=True,
+    ),
 )
 def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: snowflake join. Dimension sides are explicitly
@@ -195,6 +339,10 @@ def q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND p_brand IS NOT NULL
     """,
     tags=("filter",),
+    plan=PlanContract(
+        "BETWEEN/IN/LIKE predicates all push into the scan",
+        markers=("GreaterThanOrEqual(p_size,10)", "In(p_type,"),
+    ),
 )
 def q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R4 filter surface: BETWEEN / IN / LIKE / comparison / null-check,
@@ -220,6 +368,11 @@ def q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT DISTINCT p_brand AS token FROM part) t
     """,
     tags=("dict-encode", "window"),
+    plan=PlanContract(
+        "distinct (hash agg), range-repartition by token, per-partition row_number + "
+        "broadcast partition offsets — no single-partition window at any vocab size",
+        markers=("HashAggregate", "Window"),
+    ),
 )
 def q_dict_encode_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic dense-ID assignment (replaces ``zipWithIndex`` at
@@ -241,6 +394,10 @@ def q_dict_encode_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
     tags=("join",),
+    plan=PlanContract(
+        "EXISTS as a semi join, NOT EXISTS as an anti join (no row multiplication)",
+        markers=("LeftSemi", "LeftAnti"),
+    ),
 )
 def q_semi_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi + left-anti joins in one verified result (tagged per
@@ -430,6 +587,10 @@ def q_cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
     tags=("window",),
+    plan=PlanContract(
+        "at most 1 Exchange node(s): each extra Exchange is a full shuffle",
+        max_exchanges=1,
+    ),
 )
 def q_window_order_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R12 window surface: row_number / running sum / lag / lead /
@@ -459,6 +620,11 @@ def q_window_order_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank_in_group <= 3
     """,
     tags=("window", "topk"),
+    plan=PlanContract(
+        "per-partition partial top-k below the shuffle: O(k) state per group",
+        markers=("WindowGroupLimit",),
+        max_exchanges=1,
+    ),
 )
 def q_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group (R11); Spark plans a partial WindowGroupLimit
@@ -706,6 +872,10 @@ def q_mod_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
     tags=("join", "subquery"),
+    plan=PlanContract(
+        "correlated EXISTS decorrelated to a semi join, not a per-row subquery",
+        markers=("LeftSemi",),
+    ),
 )
 def q_priority_count_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS with an extra non-key
@@ -740,6 +910,10 @@ def q_priority_count_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l.l_partkey
     """,
     tags=("join", "subquery", "agg"),
+    plan=PlanContract(
+        "correlated scalar subquery decorrelated to aggregate + join",
+        markers=("HashAggregate",),
+    ),
 )
 def q_small_quantity_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: rows below 20% of their group's average —
@@ -1047,6 +1221,10 @@ def q_grouped_agg_price_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b GROUP BY price_band
     """,
     tags=("udf", "scalar"),
+    plan=PlanContract(
+        "scalar pandas UDF runs as Arrow batches feeding a partial+final agg",
+        markers=("ArrowEvalPython", "HashAggregate"),
+    ),
 )
 def q_scalar_udf_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R20 SCALAR pandas UDF face: a per-row Arrow-vectorized banding
@@ -1141,6 +1319,10 @@ def q_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank <= 10
     """,
     tags=("vector", "knn"),
+    plan=PlanContract(
+        "query side broadcasts; candidate scan is never shuffled",
+        markers=("Broadcast",),
+    ),
 )
 def q_knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force top-10 by squared-L2 (R16), relational form:
@@ -1182,6 +1364,11 @@ def q_cosine_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))
     """,
     tags=("dedup",),
+    plan=PlanContract(
+        "the one dedup exchange is keyed on xxhash64 of the normalized text (r08): "
+        "fixed-width keys at corpus scale, text never ships",
+        markers=("HashAggregate", "xxhash64"),
+    ),
 )
 def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dup_groups(_T(spark, sf_dir, "documents"))
@@ -1363,6 +1550,12 @@ def q_near_dedup_keep_lsh_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM s WHERE jaccard >= 0.6
     """,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "inverted-index equi-join + count agg — exact Jaccard without touching all pairs; "
+        "exact Jaccard must never plan an all-pairs nested loop",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_jaccard3_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram (word trigram) Jaccard near-dup — the n-gram
@@ -1388,6 +1581,13 @@ def q_jaccard3_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_a, doc_b, round(jaccard, 6) AS jaccard FROM s WHERE jaccard >= 0.6
     """,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "prefix-filtered candidate join; all shuffles hash-partitioned on shingle/pair "
+        "keys; prefix filtering exists to keep the candidate join an equi-join",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        sf1=True,
+    ),
 )
 def q_jaccard_prefix_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard via PREFIX FILTERING (AllPairs/PPJoin) —
@@ -1462,7 +1662,17 @@ def q_minhash_pairs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["minhash_pairs_raw"] = QuerySpec("minhash_pairs_raw", q_minhash_pairs_raw, None, ("dedup",))
+REGISTRY["minhash_pairs_raw"] = QuerySpec(
+    "minhash_pairs_raw",
+    q_minhash_pairs_raw,
+    None,
+    ("dedup",),
+    PlanContract(
+        "LSH candidates come from band-bucket equi-joins only — never all pairs",
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        sf1=True,
+    ),
+)
 
 
 # simhash_near_pairs (rows-only raw pairs, r01) RETIRED in r13
@@ -1544,7 +1754,17 @@ def q_ann_ivf_pq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ann_ivf_pq(e.filter(F.col("vec_id") < 5), e, k=10)
 
 
-REGISTRY["ann_ivf_pq_neighbors"] = QuerySpec("ann_ivf_pq_neighbors", q_ann_ivf_pq_neighbors, None, ("knn",))
+REGISTRY["ann_ivf_pq_neighbors"] = QuerySpec(
+    "ann_ivf_pq_neighbors",
+    q_ann_ivf_pq_neighbors,
+    None,
+    ("knn",),
+    PlanContract(
+        "ADC scoring runs as grouped Arrow batches per (query, cell); codes join on cell "
+        "key only",
+        markers=("FlatMapGroupsInPandas",),
+    ),
+)
 
 
 def q_ann_ivf_persisted_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1713,6 +1933,10 @@ def q_ann_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     """,
     tags=("text",),
+    plan=PlanContract(
+        "narrow end to end: the operator pipelines with the scan, no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R19/north-star text analysis: word & BPE-ish token counts,
@@ -1820,6 +2044,11 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(ws) > 0
     """,
     tags=("text", "chunk"),
+    plan=PlanContract(
+        "chunk starts explode map-side; the whole chunker pipelines with the scan",
+        markers=("Generate",),
+        max_exchanges=0,
+    ),
 )
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents → overlapping 32-token training sequences (stride 24,
@@ -1859,6 +2088,10 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("text", "quality"),
+    plan=PlanContract(
+        "narrow end to end: the operator pipelines with the scan, no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_gopher_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rules (Rae et al. 2021, Appendix A1.1,
@@ -1900,6 +2133,10 @@ def q_gopher_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM aug
     """,
     tags=("text", "pii"),
+    plan=PlanContract(
+        "narrow end to end: the operator pipelines with the scan, no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII audit + scrub over the corpus. The synthetic docs carry no
@@ -1935,6 +2172,10 @@ def q_pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id % 100 < CASE lang WHEN 'en' THEN 50 WHEN 'zh' THEN 20 ELSE 10 END
     """,
     tags=("sample", "text"),
+    plan=PlanContract(
+        "narrow end to end: the operator pipelines with the scan, no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_stratified_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixing stratified sample: keep 50% of English, 20% of
@@ -1992,6 +2233,14 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
     """,
     tags=("agg", "approx", "percentile"),
+    plan=PlanContract(
+        "GK sketch state aggregates with map-side partials — bounded agg memory however "
+        "large the column",
+        markers=("ObjectHashAggregate",),
+        # one bounded-state sketch aggregate
+        max_exchanges=1,
+        sf1=True,
+    ),
 )
 def q_approx_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile (Greenwald-Khanna sketch — the percentile that
@@ -2041,6 +2290,12 @@ def q_approx_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j
     """,
     tags=("asof", "timeseries"),
+    plan=PlanContract(
+        "per-key grids generate map-side (explode of sequence); forward fill is a running "
+        "window; grid generation must stay per-key explode, never a time-range cross join",
+        markers=("Window", "Generate"),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap-fill + resample (TimescaleDB
@@ -2067,6 +2322,10 @@ def q_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderstatus
     """,
     tags=("agg", "pivot"),
+    plan=PlanContract(
+        "explicit pivot values compile to one conditional aggregation — no distinct pre-job",
+        markers=("HashAggregate",),
+    ),
 )
 def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 pivot: long→wide via ``groupBy().pivot()`` with EXPLICIT
@@ -2263,6 +2522,10 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn = 1
     """,
     tags=("text", "quality"),
+    plan=PlanContract(
+        "at most 2 Exchange node(s): each extra Exchange is a full shuffle",
+        max_exchanges=2,
+    ),
 )
 def q_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram repetition signal (the Gopher rules' actual top-n-gram
@@ -2304,6 +2567,10 @@ def q_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     """,
     tags=("udf", "arrow"),
+    plan=PlanContract(
+        "narrow end to end: the operator pipelines with the scan, no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_mapinarrow_name_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R20's fifth face: ``mapInArrow`` — the UDF surface below pandas
@@ -2412,6 +2679,10 @@ REGISTRY["tfidf_docs"] = QuerySpec("tfidf_docs", q_tfidf_docs, None, ("text", "m
     WHERE s.quality >= 0.7
     """,
     tags=("pipeline", "dedup", "text"),
+    plan=PlanContract(
+        "dedup as semi join; scan-level pruning intact through the pipeline",
+        markers=("LeftSemi", "PushedFilters"),
+    ),
 )
 def q_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed training-corpus cleaning pipeline (the north-star
@@ -2488,6 +2759,14 @@ def q_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, session_seq
     """,
     tags=("timeseries", "window", "sessionize"),
+    plan=PlanContract(
+        "lag→flag→running-sum windows and the session rollup share ONE user_id hash "
+        "partitioning (rollup keys are a superset of the window key)",
+        markers=("Window", "HashAggregate"),
+        # lag/cumsum windows + session rollup: one user_id partitioning
+        max_exchanges=1,
+        sf1=True,
+    ),
 )
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization of the event stream: per-user sessions cut
@@ -2546,6 +2825,18 @@ FROM (SELECT unnest(range(1, 8)) AS idx) i, b, n
     "equi_depth_prices_approx",
     oracle=_EQUI_DEPTH_ANCHOR_ORACLE,
     tags=("agg", "approx", "histogram", "percentile"),
+    plan=PlanContract(
+        "sketch boundaries come from ONE bounded-state aggregate (k−1 doubles), broadcast "
+        "back as a 1-row build side; the r13 anchor's rank counts are one more "
+        "conditional-sum aggregate over the same broadcast — kilobytes moved, no global "
+        "ntile window",
+        markers=("approx_percentile", "BroadcastNestedLoopJoin"),
+        # boundary sketch+exact+count agg + the anchor's rank-count agg +
+        # final single-row exchange (r13: the face became the exact-
+        # boundary ANCHOR, VERDICT r12 ask #7 — one more aggregate pass)
+        max_exchanges=3,
+        sf1=True,
+    ),
 )
 def q_equi_depth_prices_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB door of ``equi_depth_prices`` — UPGRADED from a
@@ -2639,6 +2930,16 @@ def q_equi_depth_prices_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) > 0.005 * (SELECT n FROM tot)
     """,
     tags=("agg", "sketch", "text"),
+    plan=PlanContract(
+        "the Misra-Gries candidate pass runs as an Arrow map over the raw token stream "
+        "(never shuffled); the ≤⌈1/φ⌉-per-partition candidate set broadcasts back as the "
+        "semi-join filter at any corpus size",
+        markers=("MapInPandas", "BroadcastHashJoin"),
+        # candidate distinct + exact candidate count + total count; the raw
+        # token stream itself never exchanges
+        max_exchanges=3,
+        sf1=True,
+    ),
 )
 def q_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 0.5%-heavy-hitter words of the corpus at sketch cost: a
@@ -2677,6 +2978,15 @@ def q_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   WHEN 'zh' THEN 2000 WHEN 'fr' THEN 2000 END
     """,
     tags=("sampling", "pipeline", "mixture"),
+    plan=PlanContract(
+        "per-stratum cumsum via the distributed prefix-sum: windows key on (stratum, "
+        "__pid) — never on the stratum alone — with the exclusive per-stratum offsets "
+        "broadcast back; a stratum's rows spread over every range partition instead of one "
+        "task",
+        markers=("__pid", "BroadcastHashJoin"),
+        # every cumsum window keys on (lang, __pid), never lang alone
+        check=_pid_windows("lang#"),
+    ),
 )
 def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget mixture sampling — fill per-language TOKEN budgets
@@ -2716,6 +3026,16 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     """,
     tags=("text", "quality", "lm"),
+    plan=PlanContract(
+        "grams explode map-side; the corpus LM and per-doc rollups are hash aggregates "
+        "keyed on gram/doc (broadcast of the LM side is a size-based choice Catalyst may "
+        "revisit at scale — not gated)",
+        markers=("Generate", "HashAggregate"),
+        # corpus LM hash-agg + per-doc rollup (gram join exchange-free while
+        # the LM side broadcasts)
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_bigram_familiarity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-based LM familiarity per document: mean corpus frequency
@@ -2739,6 +3059,14 @@ def q_bigram_familiarity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY h, doc_id LIMIT 50
     """,
     tags=("sampling", "reservoir"),
+    plan=PlanContract(
+        "exactly-k sample as per-task O(k) heaps + driver merge — no global sort, no "
+        "window, no shuffle of the data",
+        markers=("TakeOrderedAndProject",),
+        # exactly-k sample: TakeOrderedAndProject merges per-task heaps at
+        # the driver — the data itself never exchanges
+        max_exchanges=0,
+    ),
 )
 def q_reservoir_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-50 deterministic uniform document sample (the
@@ -2772,6 +3100,13 @@ def q_reservoir_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id
     """,
     tags=("text", "dedup", "quality"),
+    plan=PlanContract(
+        "positioned grams explode map-side; the document-frequency table and per-doc "
+        "rollup are hash aggregates keyed on gram/doc",
+        markers=("Generate", "HashAggregate"),
+        # gram DF hash-agg + gram-keyed join + per-doc rollup
+        max_exchanges=3,
+    ),
 )
 def q_dup_ngram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated 5-gram audit — the exact-substring-dedup
@@ -2923,6 +3258,10 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     """,
     tags=("timeseries", "window", "agg"),
+    plan=PlanContract(
+        "lead() window and the per-key agg share one hash partitioning",
+        max_exchanges=1,
+    ),
 )
 def q_time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average of event value per user (LOCF weighting —
@@ -2969,6 +3308,10 @@ def q_time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base
     """,
     tags=("agg", "profile"),
+    plan=PlanContract(
+        "one scan, one (multi-distinct) aggregate; melt is narrow",
+        max_exchanges=2,
+    ),
 )
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profile of lineitem (R9 family — the data-quality sweep
@@ -2993,6 +3336,10 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("agg", "histogram"),
+    plan=PlanContract(
+        "one hash-agg of <= n_bins groups",
+        max_exchanges=1,
+    ),
 )
 def q_histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of part.p_retailprice: 20 bins over
@@ -3112,6 +3459,11 @@ REGISTRY["incremental_neardedup_raw"] = QuerySpec(
     GROUP BY c.doc_id
     """,
     tags=("text", "pipeline", "decontamination"),
+    plan=PlanContract(
+        "eval-set n-grams broadcast; the corpus n-gram stream is probed map-side, never "
+        "shuffled by gram — only the per-doc count aggregates exchange",
+        markers=("BroadcastHashJoin",),
+    ),
 )
 def q_benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (the eval-leak audit every training
@@ -3209,6 +3561,10 @@ def q_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events p WHERE p.event_type = 'purchase'
     """,
     tags=("asof", "join"),
+    plan=PlanContract(
+        "at most 1 Exchange node(s): each extra Exchange is a full shuffle",
+        max_exchanges=1,
+    ),
 )
 def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (R8): each purchase matched to the user's most recent
@@ -3309,6 +3665,10 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p
     """,
     tags=("multimodal", "audio"),
+    plan=PlanContract(
+        "two chained Arrow maps (encode → decode), no shuffle",
+        max_exchanges=0,
+    ),
 )
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode from bytes, no audio library: payloads are
@@ -3360,6 +3720,15 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bins
     """,
     tags=("multimodal",),
+    plan=PlanContract(
+        "encode → exact-feature extraction are chained narrow Arrow maps over the binary "
+        "column; feature extraction is a narrow map pipeline — a shuffle anywhere means "
+        "the binary column moved for no reason",
+        markers=("MapInPandas",),
+        forbidden=("Exchange",),
+        # encode → exact features: chained Arrow maps, no shuffle
+        max_exchanges=0,
+    ),
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over binary payloads (byte histogram +
@@ -3409,6 +3778,16 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     """,
     tags=("multimodal",),
+    plan=PlanContract(
+        "encode → frame explode → checksum reduction are chained narrow Arrow maps; the "
+        "1-row→N-rows explode happens inside the Python worker, never via a shuffle; the "
+        "frame explode is a narrow map pipeline — a shuffle anywhere means the binary "
+        "column moved for no reason",
+        markers=("MapInPandas",),
+        forbidden=("Exchange",),
+        # encode → frame explode → checksums: chained Arrow maps, no shuffle
+        max_exchanges=0,
+    ),
 )
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling (1-row→N-rows explode through mapInPandas) for
@@ -3545,6 +3924,10 @@ FROM ranks
     "transe_rank_eval_filtered",
     oracle=_TRANSE_EVAL_FILTERED_ORACLE,
     tags=("transe", "knn"),
+    plan=PlanContract(
+        "model-sized vector tables broadcast into the candidate scoring join",
+        markers=("BroadcastHashJoin",),
+    ),
 )
 def q_transe_rank_eval_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED-protocol link prediction (Bordes et al. §4 — beyond the
@@ -4513,6 +4896,15 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.cohort_week, a.age_weeks, c.n_cohort
     """,
     tags=("timeseries", "agg", "analytics"),
+    plan=PlanContract(
+        "first-event and cell rollups are partial+final hash aggs; the weeks-cardinality "
+        "cohort-size table broadcasts into the ratio (the user-keyed activity join is "
+        "size-based — broadcast here, co-partitioned SMJ at scale)",
+        markers=("HashAggregate", "BroadcastHashJoin"),
+        # first-event agg + activity join + distinct-user cell rollup +
+        # cohort-size agg (the ratio join side broadcasts)
+        max_exchanges=5,
+    ),
 )
 def q_cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort-retention matrix over the event log: users join
@@ -4547,6 +4939,14 @@ def q_cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.event_type
     """,
     tags=("agg", "quality"),
+    plan=PlanContract(
+        "each percentile pass is one bounded-group aggregate; the per-group median/MAD "
+        "statistics broadcast back between passes — the data is never shuffled by anything "
+        "but the group key",
+        markers=("ObjectHashAggregate", "BroadcastHashJoin"),
+        # one exchange per percentile pass; statistics broadcast back
+        max_exchanges=3,
+    ),
 )
 def q_mad_outlier_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier screen on event values: median/MAD rule
@@ -4587,6 +4987,17 @@ def q_mad_outlier_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_nationkey, acctbal_cents FROM latest WHERE op <> 'D'
     """,
     tags=("warehouse", "join", "cdc"),
+    plan=PlanContract(
+        "latest-change-per-key runs with the partial top-1 pushed below the key shuffle "
+        "(O(1) state per key); the snapshot is touched only by one anti join on the key; "
+        "the merge is key equi-joins only",
+        markers=("WindowGroupLimit", "LeftAnti"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # latest-change window + the applied-side exchange; the anti join
+        # broadcasts the batch at this size
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_cdc_apply_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC merge (SCD1 + deletes) on the customer snapshot: a change
@@ -4654,6 +5065,15 @@ def q_cdc_apply_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rk WHERE kw_rank <= 3
     """,
     tags=("text", "topk"),
+    plan=PlanContract(
+        "terms explode map-side; tf/df are keyed hash aggs; the per-doc top-k window keeps "
+        "O(k) per doc below the shuffle; the corpus count N rides as a 1-row broadcast "
+        "build side",
+        markers=("Generate", "WindowGroupLimit", "HashAggregate"),
+        # tf agg + df agg + term join + per-doc top-k window
+        max_exchanges=5,
+        sf1=True,
+    ),
 )
 def q_doc_keywords_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 keywords per document by TF-IDF-style lift
@@ -4682,6 +5102,19 @@ def q_doc_keywords_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY distance, id_a, id_b LIMIT 200
     """,
     tags=("join", "linkage"),
+    plan=PlanContract(
+        "the block self-join is an equi-join (broadcast at this size, shuffled-hash on the "
+        "block key at scale); the length lower bound prunes before the O(len²) "
+        "levenshtein; top-200 merges per-task heaps — no global sort; linkage candidates "
+        "are bounded by the block equi-join, never a cross join (the 1-row broadcast NLJ "
+        "of scalar subqueries is fine; a Cartesian over the entity table is not)",
+        markers=("TakeOrderedAndProject",),
+        forbidden=("CartesianProduct",),
+        # block self-join broadcasts at sf0.01 (0 exchanges); allow the
+        # shuffled-hash form the same join takes at scale
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_record_linkage_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy entity linkage on part names: block on the name's first
@@ -4723,6 +5156,23 @@ def q_record_linkage_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s WHERE containment >= 0.5
     """,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "one-sided prefix filter: candidates come from A-prefix rows equi-joined to the "
+        "posting side, verified by a keyed intersection count — never an all-pairs "
+        "comparison; containment candidates come from the prefix/posting equi-join — never "
+        "an all-pairs nested loop",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        # doc-freq agg + rank window + candidate agg + verify agg; +6 in
+        # r15: `_spread_docs` round-robins the shingle-kernel input (the
+        # serial-scan fix), and the kernel subtree appears 6× in the
+        # printed tree (dfreq/pos/pa-pb/ea/eb consumers) — all 6 are the
+        # SAME canonical exchange, deduplicated to one ReusedExchange at
+        # runtime (the funnel_ordered_steps ReusedExchange gate pins that
+        # mechanism live), so the real shuffle budget is unchanged
+        max_exchanges=10,
+        sf1=True,
+    ),
 )
 def q_containment_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric 3-gram containment |A∩B|/|A| ≥ 0.5 — the
@@ -4789,6 +5239,20 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, r AS rank_micro FROM r3
     """,
     tags=("graph", "join", "iterative"),
+    plan=PlanContract(
+        "each iteration is one node-keyed equi-join + one hash agg over CACHED edge/degree "
+        "leaves (r07: cache replaced localCheckpoint — InMemoryRelation preserves the "
+        "repartition-on-source, which a checkpoint's LogicalRDD loses under AQE, so "
+        "iterations reuse one partitioning instead of re-Exchanging the edge table); rank "
+        "propagation is a node-keyed equi-join per iteration",
+        markers=("HashAggregate", "InMemoryTableScan"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # r07: cached partitioned leaves — the loop's only per-iteration
+        # shuffle is the contribution agg (+ the one-time repartition/degree
+        # builds inside the cached plans); was 13 with checkpointed leaves
+        max_exchanges=9,
+        sf1=True,
+    ),
 )
 def q_pagerank_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three iterations of EXACT-INTEGER PageRank over the bidirectional
@@ -4800,16 +5264,7 @@ def q_pagerank_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is one node-keyed join + one hash agg."""
     from transe_pyspark_spark.operators.graph import pagerank_integer
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    fwd = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
+    fwd = _trade_lines(spark, sf_dir).distinct()
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -4830,6 +5285,15 @@ def q_pagerank_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_baskets DESC, item_a, item_b LIMIT 50
     """,
     tags=("join", "agg", "topk", "mining"),
+    plan=PlanContract(
+        "candidates come from the basket-keyed self-equi-join (bounded by basket size); "
+        "pair counts hash-aggregate; top-k merges per-task heaps, no global sort; pair "
+        "generation must stay inside the basket equi-join",
+        markers=("TakeOrderedAndProject", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # distinct (basket, item) agg + pair-key agg + the self-join side
+        max_exchanges=3,
+    ),
 )
 def q_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 co-purchased part pairs (2-itemset support counts) —
@@ -4872,6 +5336,13 @@ def q_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c3
     """,
     tags=("agg", "diagnostics"),
+    plan=PlanContract(
+        "each key profile is one hash agg on the key + one single-row rollup whose "
+        "percentile state holds per-KEY counts, not rows",
+        markers=("ObjectHashAggregate",),
+        # 3 key profiles × (per-key count agg + single-row rollup)
+        max_exchanges=6,
+    ),
 )
 def q_key_skew_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnosis of lineitem's three join keys in one
@@ -4899,6 +5370,14 @@ def q_key_skew_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE pts IS NULL OR epoch_us(ts) - epoch_us(pts) > 300000000
     """,
     tags=("dedup", "timeseries", "window"),
+    plan=PlanContract(
+        "burst collapse is ONE key-partitioned lag window + a narrow keep-filter — no "
+        "self-join, no second shuffle",
+        markers=("Window", "Filter"),
+        # one key shuffle for the lag window
+        max_exchanges=1,
+        sf1=True,
+    ),
 )
 def q_dedup_bursts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal duplicate suppression: per (user, type), events within
@@ -4933,6 +5412,11 @@ def q_dedup_bursts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.event_type
     """,
     tags=("agg", "quality", "stats"),
+    plan=PlanContract(
+        "one bounded-group percentile aggregate joined back + one exact integer-cents "
+        "rollup — clip bounds never leave the plan",
+        markers=("ObjectHashAggregate",),
+    ),
 )
 def q_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type winsorization report: clip bounds at p01/p99, tail
@@ -4965,6 +5449,11 @@ def q_winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j, ta, tb
     """,
     tags=("agg", "quality", "drift"),
+    plan=PlanContract(
+        "one bucket-keyed hash agg per side + a bucket-cardinality full-outer join; totals "
+        "ride as 1-row broadcast builds",
+        markers=("HashAggregate",),
+    ),
 )
 def q_value_drift_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution drift of event values between the first and second
@@ -5010,6 +5499,11 @@ def q_value_drift_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a
     """,
     tags=("agg", "stats", "timeseries"),
+    plan=PlanContract(
+        "per-key t0 broadcasts back; the OLS moment sums are one map-side-partial "
+        "aggregate — regression as an agg, no per-key collect",
+        markers=("HashAggregate", "BroadcastHashJoin"),
+    ),
 )
 def q_trend_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type least-squares value trend (metric-drift detection as
@@ -5038,6 +5532,11 @@ def q_trend_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE sample_rank <= 20
     """,
     tags=("sampling", "topk"),
+    plan=PlanContract(
+        "per-group exactly-k sampling keeps the partial top-k below the shuffle — O(k) "
+        "state per group per task",
+        markers=("WindowGroupLimit",),
+    ),
 )
 def q_sample_per_lang_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-20-per-language deterministic document sample — the
@@ -5072,6 +5571,12 @@ def q_sample_per_lang_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n GROUP BY 1
     """,
     tags=("join", "timeseries", "analytics"),
+    plan=PlanContract(
+        "the touch window rides the user-keyed equi-join; the credit split is a "
+        "conversion-keyed count window (full key cardinality) and the rollup is "
+        "≤|channels| groups",
+        markers=("Window", "HashAggregate"),
+    ),
 )
 def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every purchase's cents split
@@ -5128,6 +5633,15 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n
     """,
     tags=("asof", "timeseries"),
+    plan=PlanContract(
+        "per-key grids generate map-side; both interpolation neighbors come from two "
+        "frames of ONE key-partitioned window sort",
+        markers=("Window", "Generate"),
+        # obs bucket agg + grid/obs co-partitioning; both window frames
+        # share the key sort
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-interpolation resample (TimescaleDB ``interpolate()``
@@ -5155,6 +5669,18 @@ def q_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON a.s < b.e AND b.s < a.e AND a.event_id < b.event_id
     """,
     tags=("join", "timeseries", "interval"),
+    plan=PlanContract(
+        "intervals band map-side into every bucket they span (Generate; ≤2 each at this "
+        "face's 12 h width — a pure cost knob, r07); candidates come from the bucket "
+        "EQUI-join; the exact overlap predicate filters and one distinct collapses "
+        "multi-bucket pairs; the overlap theta predicate must ride the bucket equi-join, "
+        "never plan as a nested-loop theta join",
+        markers=("Generate", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # bucket join (one side broadcasts at this size) + pair distinct
+        max_exchanges=3,
+        sf1=True,
+    ),
 )
 def q_interval_overlap_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap self-join: purchase 'activity windows' (each
@@ -5205,6 +5731,13 @@ _ZORDER_SQL = R.z_order_value_sql(["o_custkey", "d"], bits=24)
     SELECT o_orderkey, CAST({_ZORDER_SQL} AS BIGINT) AS zval FROM t
     """,
     tags=("layout", "scan"),
+    plan=PlanContract(
+        "the Morton value is a pure bit-interleave projection that pipelines with the scan "
+        "— no shuffle, no UDF",
+        markers=("Project",),
+        # narrow bit-interleave projection over the scan
+        max_exchanges=0,
+    ),
 )
 def q_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering value over (custkey, order epoch-day)
@@ -5242,6 +5775,14 @@ def q_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE (cum * 100) // tot > ((cum - n_chars) * 100) // tot
     """,
     tags=("sampling", "pipeline"),
+    plan=PlanContract(
+        "the running weight is the distributed prefix-sum: windows key on __pid (range "
+        "partitions) with broadcast exclusive offsets — no single-partition global cumsum "
+        "at any corpus size",
+        markers=("__pid", "Window"),
+        # range-repartition + per-pid size agg + offsets window + total agg
+        max_exchanges=4,
+    ),
 )
 def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic PPS (weight-proportional) systematic sample of
@@ -5274,6 +5815,14 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM wau w LEFT JOIN dau ON w.day = dau.day
     """,
     tags=("timeseries", "agg", "analytics"),
+    plan=PlanContract(
+        "each (day, user) activity explodes map-side into its ≤7 trailing windows over the "
+        "ALREADY-DISTINCT day-user table; rolling distincts are then plain two-phase aggs "
+        "on the day key",
+        markers=("Generate", "HashAggregate"),
+        # (day,user) distinct + dau agg + wau agg (two-phase distincts)
+        max_exchanges=6,
+    ),
 )
 def q_rolling_wau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day active users per day (DAU/WAU + stickiness): the
@@ -5309,6 +5858,23 @@ def q_rolling_wau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base, tri
     """,
     tags=("graph", "analytics"),
+    plan=PlanContract(
+        "the canonical edge set is CACHED once for its four consumers "
+        "(degree/wedge×2/closing join); triangles come from the oriented a<b<c wedge "
+        "equi-join — degree-bounded candidates, each triangle found once; wedge/closing "
+        "joins are equi-joins on node keys (the 1-row base×tri broadcast NLJ is fine — the "
+        "record_linkage precedent); a Cartesian over the edge set is not",
+        markers=("HashAggregate", "InMemoryTableScan"),
+        forbidden=("CartesianProduct",),
+        # cached canonical + cached degree-ORIENTED edge sets (build
+        # exchanges counted once each, incl. the two degree joins of the
+        # orientation and the r08 repartition-on-u that feeds the oriented
+        # cache so the wedge self-join reads ONE u-partitioned relation
+        # from both sides) + closing-join re-keys + the 1-row aggregates;
+        # sf1 plans up to 16 when AQE keeps more joins shuffled
+        max_exchanges=16,
+        sf1=True,
+    ),
 )
 def q_triangle_stats_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the part co-occurrence graph (parts sharing
@@ -5349,6 +5915,16 @@ def q_triangle_stats_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p
     """,
     tags=("asof", "timeseries", "join"),
+    plan=PlanContract(
+        "both nearest directions come from two frames of ONE key-partitioned union-window "
+        "sort — no correlated subquery, no per-row join; nearest matching must ride the "
+        "union window, never a theta self-join",
+        markers=("Window",),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # right-side (key, ts) collapse + the union-window key shuffle
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_nearest_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-in-time join: each purchase matched to the user's
@@ -5384,6 +5960,19 @@ def q_nearest_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d2 JOIN base USING (key, dow)
     """,
     tags=("agg", "timeseries", "analytics"),
+    plan=PlanContract(
+        "one (key, day) hash-agg over raw events, then the weekday baselines as WINDOW "
+        "aggregates over that day-level table (r14: single consumer — the old groupBy + "
+        "broadcast-join-back re-executed the events agg per consumer); the raw events "
+        "shuffle once and the window touches only day-level rows",
+        markers=("HashAggregate", "Window"),
+        # r14 rewrite: single (key, dow)-partitioned window aggregate over
+        # the daily rollup — one (key, day) agg exchange + one (key, dow)
+        # window re-key; no baseline join remains (ADVICE r14: comment
+        # refreshed + budget tightened 3 → 2 to match the window plan)
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_seasonal_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal baseline + per-day deviation ratio per
@@ -5415,6 +6004,14 @@ def q_seasonal_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM h2
     """,
     tags=("sampling", "dedup", "pipeline"),
+    plan=PlanContract(
+        "one dedup hash-agg + the join back, BOTH keyed on xxhash64 of the normalized text "
+        "(r08) — the exchanges carry an 8-byte fingerprint per row, never the document "
+        "text — + a narrow MINSTD projection",
+        markers=("HashAggregate", "xxhash64"),
+        # normalized-text dedup agg; the join back reuses its partitioning
+        max_exchanges=2,
+    ),
 )
 def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: byte-identical (normalized)
@@ -5451,6 +6048,13 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n JOIN r USING (nm)
     """,
     tags=("sampling", "dedup", "pipeline"),
+    plan=PlanContract(
+        "r15 exact-quota stratified split: fp dedup agg (ONE consumer — the frozen leaf "
+        "carries fp/group_size through the rank) + the leaf's offsets/sizes pair (tiny "
+        "K-row frames) + the (stratum, pid) in-partition rank window + the doc-level join "
+        "back — measured 4 at sf0.01, +1 headroom for AQE join-side re-keys",
+        max_exchanges=5,
+    ),
 )
 def q_stratified_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT-quota per-language train/val/test split with the leakage
@@ -5492,6 +6096,20 @@ def q_stratified_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 2, 'purchase', count(*) FROM s2
     """,
     tags=("events", "funnel", "analytics"),
+    plan=PlanContract(
+        "the step-type disjunction reaches the parquet scan; per-step join/min-agg chains "
+        "share one user-key partitioning",
+        markers=("In(event_type", "HashAggregate"),
+        # per step: one pushed-filter scan + ONE user-key exchange (joins
+        # and min-aggs all reuse it — no per-step re-exchange of the key)
+        # + 3 single-partition count aggs; identical prev-step subtrees
+        # dedup at runtime (ReusedExchange gate below)
+        max_exchanges=9,
+        # step k's table feeds its own count AND step k+1's join: the
+        # identical prev-step subtrees must dedup at runtime
+        check=_reuses_exchange,
+        sf1=True,
+    ),
 )
 def q_funnel_ordered_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE ordered funnel (view → click → purchase): step k completes
@@ -5525,6 +6143,17 @@ def q_funnel_ordered_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r GROUP BY nationkey
     """,
     tags=("agg", "analytics"),
+    plan=PlanContract(
+        "per-group rank from the (group, __pid) distributed-prefix window (group-only "
+        "windows forbidden — dedicated gate); exact decimal numerator in one rollup",
+        markers=("HashAggregate", "Window"),
+        # r08 faces. gini: spend agg + range-repartition of the group rank
+        # + offsets + final rollup (customer dim broadcasts)
+        max_exchanges=4,
+        # every rank window keys on (__g, __pid), never __g alone
+        check=_pid_windows("__g#"),
+        sf1=True,
+    ),
 )
 def q_gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation Gini concentration of customer order spend — exact
@@ -5559,6 +6188,14 @@ def q_gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c GROUP BY key
     """,
     tags=("agg", "timeseries", "analytics"),
+    plan=PlanContract(
+        "one max-day broadcast + ONE user hash-agg; the integer half-life shift needs no "
+        "window and no second shuffle",
+        markers=("HashAggregate",),
+        # max-day broadcast + one user hash-agg
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_decayed_user_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted per-user engagement score with EXACT integer
@@ -5586,6 +6223,17 @@ def q_decayed_user_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c JOIN t USING (from_type)
     """,
     tags=("events", "sequence", "analytics"),
+    plan=PlanContract(
+        "one user-key lag window over the log; the per-source totals are a window over the "
+        "|types|²-row aggregate — never a second pass over the log",
+        markers=("Window", "HashAggregate"),
+        # second r08 wave: the sequence-analytics faces
+        # one user-key lag window + pair agg + the tiny totals window over
+        # the post-aggregate (r08: the broadcast-join form re-executed the
+        # whole window subtree as the build job — 13.8 s -> 1.5 s at sf1)
+        max_exchanges=3,
+        sf1=True,
+    ),
 )
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of the event stream: exact
@@ -5618,6 +6266,11 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pu GROUP BY 1
     """,
     tags=("events", "sequence", "timeseries", "analytics"),
+    plan=PlanContract(
+        "per-user start agg + convert join/agg (user partitioning reused) + cohort "
+        "percentile rollup",
+        max_exchanges=4,
+    ),
 )
 def q_time_to_convert_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion-latency report per weekly first-view cohort: exact-µs
@@ -5653,6 +6306,10 @@ def q_time_to_convert_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM k
     """,
     tags=("events", "analytics", "agg"),
+    plan=PlanContract(
+        "two distinct-user aggs + arm rollup + the 1x1 statistic cross",
+        max_exchanges=6,
+    ),
 )
 def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion experiment readout (arm = user_id mod 2): exact
@@ -5686,6 +6343,13 @@ def q_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p GROUP BY 1, 2 HAVING sum(pr) > 0
     """,
     tags=("dedup", "pipeline"),
+    plan=PlanContract(
+        "per-(group, source) counts keyed on the text fingerprint; the self-join and "
+        "rollup touch count rows only, never documents",
+        markers=("xxhash64", "HashAggregate"),
+        # fingerprint-keyed (fp, source) agg + fp self-join + pair rollup
+        max_exchanges=3,
+    ),
 )
 def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-provenance duplication matrix: exact duplicate-PAIR
@@ -5709,6 +6373,14 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_source_dup_matrix(corpus, eager_cleanup=False)
 
 
+def _stage_kcore_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The peel's lazy (eager_cleanup=False) plan: the face returns an
+    opaque checkpoint. Building it runs the rounds' eager cache pins."""
+    from transe_pyspark_spark.operators.graph import kcore_peel
+
+    return kcore_peel(_trade_lines(spark, sf_dir).distinct(), k=10, rounds=3, eager_cleanup=False)
+
+
 @_register(
     "kcore_trading_graph",
     oracle="""
@@ -5730,6 +6402,16 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT a AS n FROM e3 UNION ALL SELECT b FROM e3) GROUP BY 1
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "each round is one degree agg + two node-keyed SEMI joins over the "
+        "repartition+cache-pinned surviving edge set — nothing quadratic, no broadcast of "
+        "the edge table",
+        markers=("LeftSemi", "InMemoryTableScan"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        max_exchanges=17,
+        max_scans=2,
+        stage=_stage_kcore_trading_graph,
+    ),
 )
 def q_kcore_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three peeling rounds of the 10-core over the customer↔supplier
@@ -5740,17 +6422,16 @@ def q_kcore_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned separately by the path-graph pytest."""
     from transe_pyspark_spark.operators.graph import kcore_peel
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
-    return kcore_peel(edges, k=10, rounds=3)
+    return kcore_peel(_trade_lines(spark, sf_dir).distinct(), k=10, rounds=3)
+
+
+def _stage_lpa_communities_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One label-propagation round over the pinned doubled adjacency."""
+    from transe_pyspark_spark.operators.graph import _lpa_round
+
+    adj = _pinned(_both_ways(_trade_lines(spark, sf_dir).distinct(), "src", "dst"), "nbr")
+    labels0 = adj.select("node").distinct().select("node", F.col("node").alias("community"))
+    return _lpa_round(adj, labels0)
 
 
 @_register(
@@ -5783,6 +6464,17 @@ def q_kcore_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM l3
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "each LPA round is one neighbor-keyed equi-join over the PINNED doubled adjacency "
+        "+ two hash aggregates — the min-label tie-break rides "
+        "max_by(label,(count,-label)), never a per-node window; the registered face's "
+        "final plan is an opaque cached generation, so this gates the per-round shape",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        max_exchanges=7,
+        max_scans=2,
+        stage=_stage_lpa_communities_trading,
+    ),
 )
 def q_lpa_communities_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three synchronous label-propagation rounds over the
@@ -5794,17 +6486,7 @@ def q_lpa_communities_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     which-customers-cluster-around-which-suppliers signal."""
     from transe_pyspark_spark.operators.graph import lpa_communities
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).alias("dst"),
-        )
-        .distinct()
-    )
-    return lpa_communities(edges, rounds=3)
+    return lpa_communities(_trade_lines(spark, sf_dir).distinct(), rounds=3)
 
 
 @_register(
@@ -5834,6 +6516,10 @@ def q_lpa_communities_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("events", "agg", "analytics"),
+    plan=PlanContract(
+        "(day) conditional agg + spine + 1-row moment rollup",
+        max_exchanges=2,
+    ),
 )
 def q_daily_corr_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation between daily view and purchase counts over
@@ -5862,6 +6548,15 @@ def q_daily_corr_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY n DESC, path LIMIT 10
     """,
     tags=("events", "sequence", "analytics"),
+    plan=PlanContract(
+        "one user-key window sort shared by every lag; global top-k is "
+        "TakeOrderedAndProject (per-task O(k) heaps) — no global sort",
+        markers=("TakeOrderedAndProject", "Window"),
+        # one user-key window sort + path agg; top-k is
+        # TakeOrderedAndProject (per-task heaps), NOT a global sort
+        max_exchanges=2,
+        sf1=True,
+    ),
 )
 def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 most common 3-event consecutive paths across users under
@@ -5909,6 +6604,12 @@ def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM stats JOIN chg ON stats.t = chg.t
     """,
     tags=("events", "timeseries", "analytics"),
+    plan=PlanContract(
+        "(type, day) agg + spine join + type window + stats/argmax rollups (the cum "
+        "subtree appears twice statically; AQE stage reuse dedups it at runtime)",
+        max_exchanges=9,
+        sf1=True,
+    ),
 )
 def q_cusum_change_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type CUSUM level-shift screen over the daily count series:
@@ -5934,6 +6635,15 @@ def q_cusum_change_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r
     """,
     tags=("agg", "window", "ml-features"),
+    plan=PlanContract(
+        "the in-group rank rides the (group, __pid) distributed-prefix windows with "
+        "broadcast partition offsets — never one task per group (the gini/dict-encode "
+        "pattern)",
+        markers=("Window", "BroadcastHashJoin"),
+        # third r08 wave. percent_rank: length agg + range-repartition +
+        # in-partition rank windows + broadcast offsets join back
+        max_exchanges=4,
+    ),
 )
 def q_percent_rank_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized in-language rank of document length — the rank-based
@@ -5966,6 +6676,14 @@ def q_percent_rank_doc_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     tags=("text", "pipeline"),
+    plan=PlanContract(
+        "the top-k vocabulary is per-task O(k) heaps + driver merge (no global sort of the "
+        "token histogram) and broadcasts back as the flag join — the corpus token stream "
+        "is never joined by token against itself",
+        markers=("TakeOrderedAndProject", "BroadcastHashJoin"),
+        # token agg (one exchange) + broadcast vocab flags + doc rollup
+        max_exchanges=2,
+    ),
 )
 def q_oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document OOV rate against the corpus's own top-1000 word
@@ -5976,6 +6694,13 @@ def q_oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from transe_pyspark_spark.functions.text import oov_rates
 
     return oov_rates(_T(spark, sf_dir, "documents"), vocab_size=1000)
+
+
+def _stage_session_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The operator's lazy (eager_cleanup=False) plan, membership pinned."""
+    from transe_pyspark_spark.operators.sequences import session_type_affinity
+
+    return session_type_affinity(_T(spark, sf_dir, "events"), eager_cleanup=False)
 
 
 @_register(
@@ -6009,6 +6734,15 @@ def q_oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN pt pb ON pb.event_type = pr.type_b
     """,
     tags=("events", "sequence", "sessions", "analytics"),
+    plan=PlanContract(
+        "the scan→window→distinct membership subtree evaluates ONCE (pinned); all four "
+        "consumers read the cache — the 1-row session-total broadcast NLJ is fine",
+        markers=("Window", "InMemoryTableScan"),
+        forbidden=("CartesianProduct",),
+        max_exchanges=10,
+        max_scans=1,
+        stage=_stage_session_type_affinity,
+    ),
 )
 def q_session_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity with sessions as baskets: per unordered
@@ -6049,6 +6783,19 @@ def q_session_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg LEFT JOIN tn ON tn.node = deg.n
     """,
     tags=("graph", "agg"),
+    plan=PlanContract(
+        "the oriented edge set is CACHED for its wedge/closing/degree consumers (the "
+        "triangle_stats plan); per-node triangle counts come from one corner-explode hash "
+        "agg, coefficients from exact BIGINT division — no per-node neighborhood "
+        "materialization; wedge/closing joins stay node-keyed equi-joins — a Cartesian "
+        "over the edge set is never acceptable (triangle_stats rule)",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct",),
+        # the triangle_stats cached-leaf budget + the corner explode agg
+        # (joins above the cached oriented edges re-sort per key-set)
+        max_exchanges=15,
+        sf1=True,
+    ),
 )
 def q_node_clustering_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node local clustering coefficients of the part co-purchase
@@ -6131,6 +6878,25 @@ def q_node_clustering_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
               (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey))
     """,
     tags=("quality", "agg"),
+    plan=PlanContract(
+        "same-table checks BATCH into one aggregate per table (r09: orders' three and "
+        "customer's two checks share one pruned scan each — 9 checks cost 9 scans across 4 "
+        "tables, was 15); each FK check is ONE job: child keys LEFT-join the parent's "
+        "broadcast distinct key set and a single aggregate counts rows and orphans "
+        "together (no second child scan); every FK check joins on its key; nothing "
+        "all-pairs",
+        markers=("HashAggregate", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        # nine checks in six jobs (three batched per-table aggs + three
+        # fused FK jobs): one 1-row global agg exchange each + the parent
+        # distinct-key exchanges — every one trivial-width
+        max_exchanges=12,
+        # 9 checks over 4 tables cost <= 9 pruned scans: three batched
+        # per-table aggregates + three fused FK jobs at two scans each (a
+        # regression to per-check jobs reads 15)
+        max_scans=9,
+        sf1=True,
+    ),
 )
 def q_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse constraint audit (dbt-test style): not-null, key
@@ -6194,6 +6960,24 @@ def q_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     """,
     tags=("agg", "sampling"),
+    plan=PlanContract(
+        "one orders pass collapses to customer grain and is PINNED (cache) for its four "
+        "consumers; every rank window keys on (group, __pid) with broadcast offsets — "
+        "never a global ntile window; the segment rollup is ≤125 groups; all joins are "
+        "customer-key equi-joins over the pinned customer-grain table (broadcast here; a "
+        "shuffled equi-join at scale is equally fine); the 1-row max-date broadcast NLJ is "
+        "the record_linkage precedent",
+        markers=("Window", "InMemoryTableScan", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        # one orders agg + three (offsets/sizes + rank-side) exchanges +
+        # the custkey join spine + the ≤125-group rollup — all but the
+        # first over customer-grain data
+        max_exchanges=17,
+        # every quintile-rank window keys on __pid: a pid-less window would
+        # funnel the whole customer table through one task
+        check=_pid_windows(""),
+        sf1=True,
+    ),
 )
 def q_rfm_segments_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation of the orders table: per-customer recency /
@@ -6296,6 +7080,16 @@ def q_stream_quality_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                   THEN 1 ELSE 0 END) AS BIGINT) FROM j
     """,
     tags=("warehouse", "quality", "cdc"),
+    plan=PlanContract(
+        "ONE full-outer key equi-join feeds ONE conditional aggregate — every metric incl. "
+        "all per-column changed counts rides the same agg, so N compare columns cost zero "
+        "extra passes; the diff is key equi-joins only",
+        markers=("FullOuter", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # snapshot + CDC-applied sides into the diff join + the 1-row agg
+        max_exchanges=5,
+        sf1=True,
+    ),
 )
 def q_table_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff of the customer table against its CDC-applied
@@ -6360,6 +7154,16 @@ def q_table_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR o.acctbal_cents IS DISTINCT FROM a.acctbal_cents
     """,
     tags=("warehouse", "cdc"),
+    plan=PlanContract(
+        "inverse CDC is ONE full-outer key equi-join with per-row op classification — no "
+        "aggregate at all, |changes|-sized output; no aggregate, no non-equi join — one "
+        "classified full-outer join is the whole plan",
+        markers=("FullOuter",),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "HashAggregate"),
+        # snapshot + CDC-applied sides into the classified full-outer join
+        max_exchanges=4,
+        sf1=True,
+    ),
 )
 def q_changeset_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inverse of the CDC face: derive the change batch between
@@ -6430,6 +7234,20 @@ def _ivm_customer_fixture(spark: SparkSession, sf_dir: str):
     FROM nxt GROUP BY 1
     """,
     tags=("warehouse", "ivm", "agg"),
+    plan=PlanContract(
+        "the delta pass EXPLODES each change row into its 1-2 signed contributions (one "
+        "scan of the batch, not a union-of-filters double scan) into one hash-agg; the "
+        "summary merge is one null-safe key equi-join — the maintenance subplan never "
+        "rescans the base fact (pytest-pinned on parquet inputs); the null-safe group "
+        "merge is an equi-join (EqualNullSafe hash-partitions like any key); nothing "
+        "all-pairs",
+        markers=("Generate", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        # changeset full-outer (2 sides) + delta agg + summary-side agg +
+        # the null-safe merge join (2 sides) — |changes|/|groups|-sized
+        max_exchanges=7,
+        sf1=True,
+    ),
 )
 def q_ivm_summary_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance: a per-nation count/sum rollup of
@@ -6629,6 +7447,15 @@ def q_interval_islands_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tr GROUP BY l
     """,
     tags=("source", "agg"),
+    plan=PlanContract(
+        "the custom Python Data Source plans as a real BatchScan (one task per "
+        "InputPartition, executor-side generation — no driver materialization, no "
+        "parallelize) feeding partial+final aggs",
+        markers=("BatchScan kg_triples", "HashAggregate"),
+        # the relation-key agg + the distinct-count expand — generation
+        # itself is narrow
+        max_exchanges=2,
+    ),
 )
 def q_pyds_triples_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python Data Source (Spark 4 ``pyspark.sql.datasource``
@@ -6755,6 +7582,25 @@ def q_tsv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stage_semantic_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The semantic pair stage's lazy (eager_cleanup=False) plan."""
+    from transe_pyspark_spark.operators.similarity import semantic_near_pairs
+
+    return semantic_near_pairs(
+        _T(spark, sf_dir, "embeddings"), threshold=0.4, n_cells=8, n_assign=2, eager_cleanup=False
+    )
+
+
+def _one_shared_assignment(df: DataFrame, plan: str) -> list[str]:
+    """Plan check: the cell assignment runs once (one MapInPandas node)
+    and both sides of the cell join read its cache (>= 2
+    InMemoryTableScan nodes)."""
+    n_map, n_cache = count_nodes(plan, "MapInPandas"), count_nodes(plan, "InMemoryTableScan")
+    if n_map == 1 and n_cache >= 2:
+        return []
+    return [f"assignment subtree not shared ({n_map} MapInPandas, {n_cache} cache scans)"]
+
+
 @_register(
     "semantic_dedup_recall",
     oracle=f"""
@@ -6774,6 +7620,19 @@ def q_tsv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     """,
     tags=("vector", "dedup", "approx"),
+    plan=PlanContract(
+        "cell assignment is a NARROW Arrow kernel that runs ONCE: the exploded assignment "
+        "is pinned (repartition-on-cell + cache) and BOTH sides of the cell equi-join read "
+        "the cache — never corpus all-pairs, never a per-side re-execution of the "
+        "assignment matmul; the only exchanges are the cell repartition and the pair-dedup "
+        "hash-agg",
+        markers=("MapInPandas", "InMemoryTableScan"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        max_exchanges=3,
+        max_scans=2,
+        check=_one_shared_assignment,
+        stage=_stage_semantic_dedup_recall,
+    ),
 )
 def q_semantic_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style SEMANTIC dedup (r09 — the embedding-level
@@ -6851,6 +7710,16 @@ def q_semantic_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- r10 wave
 
 
+def _stage_connected_components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One min-label round over the pinned doubled co-purchase edges."""
+    from transe_pyspark_spark.operators.dedup import _cc_round
+
+    pairs = _copurchase_pairs(_copurchase_lines(spark, sf_dir))
+    edges = _pinned(_both_ways(pairs, "pa", "pb", ("src", "dst")).distinct(), "dst")
+    labels0 = edges.select(F.col("src").alias("id")).distinct()
+    return _cc_round(edges, labels0.select("id", F.col("id").alias("component")))
+
+
 @_register(
     "connected_components_parts",
     oracle="""
@@ -6868,6 +7737,18 @@ def q_semantic_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM reach GROUP BY node
     """,
     tags=("graph", "iterative", "dedup"),
+    plan=PlanContract(
+        "each min-label round is one dst-keyed equi-join over the PINNED doubled edge set "
+        "+ one min-neighbor hash aggregate + one node-keyed left join folding it back — "
+        "the converged face plan is an opaque localCheckpoint, so this gates the per-round "
+        "shape (the lpa_communities precedent; the budget includes the pinned edge cache's "
+        "printed DEFINITION lineage — 6 of the 9 exchanges build the cache once)",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        max_exchanges=9,
+        max_scans=2,
+        stage=_stage_connected_components_parts,
+    ),
 )
 def q_connected_components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the SPARSE part co-purchase graph
@@ -6885,21 +7766,21 @@ def q_connected_components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter-bounded, early exit on a no-change round)."""
     from transe_pyspark_spark.operators.dedup import connected_components
 
-    li = _T(spark, sf_dir, "lineitem")
-    sel = li.filter(
-        (F.col("l_partkey") % 10 == 0) & (F.col("l_quantity") >= 35)
-    ).select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").cast("long").alias("pk")
-    )
-    a = sel.select("ok", F.col("pk").alias("pa"))
-    b = sel.select("ok", F.col("pk").alias("pb"))
-    pairs = (
-        a.join(b, "ok").filter(F.col("pa") < F.col("pb")).select("pa", "pb").distinct()
-    )
+    pairs = _copurchase_pairs(_copurchase_lines(spark, sf_dir))
     return connected_components(pairs, id_a="pa", id_b="pb").select(
         F.col("id").cast("long").alias("node"),
         F.col("component").cast("long").alias("component"),
     )
+
+
+def _stage_bfs_hops_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The first BFS hop from the pinned seed set over the pinned adjacency."""
+    from transe_pyspark_spark.operators.graph import _bfs_frontier
+
+    adj = _pinned(_both_ways(_trade_lines(spark, sf_dir).distinct(), "src", "dst"), "node")
+    seeds = _supplier_seeds(spark, sf_dir).distinct().withColumn("hops", F.lit(0).cast("long"))
+    seeds = _pinned(seeds, "node")
+    return _bfs_frontier(adj, seeds, seeds, 1)
 
 
 @_register(
@@ -6920,6 +7801,17 @@ def q_connected_components_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, CAST(min(hops) AS BIGINT) AS hops FROM walk GROUP BY node
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "each hop is one FRONTIER-sized equi-join against the pinned adjacency + a "
+        "distinct + one anti-join against the visited set — never a whole-graph pass; the "
+        "face plan is an opaque localCheckpoint, so this gates the per-hop shape (4 of the "
+        "7 exchanges are the printed cache-definition lineage, built once)",
+        markers=("InMemoryTableScan", "LeftAnti"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        max_exchanges=7,
+        max_scans=3,
+        stage=_stage_bfs_hops_trading,
+    ),
 )
 def q_bfs_hops_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS over the customer<->supplier trading graph:
@@ -6934,21 +7826,8 @@ def q_bfs_hops_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     a whole-graph pass), `operators/graph.py:bfs_hops`."""
     from transe_pyspark_spark.operators.graph import bfs_hops
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    s = _T(spark, sf_dir, "supplier")
-    edges = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    seeds = s.filter(F.col("s_nationkey") < 5).select(
-        (F.lit(10000000) + F.col("s_suppkey")).cast("long").alias("node")
-    )
-    return bfs_hops(edges, seeds, max_hops=3)
+    edges = _trade_lines(spark, sf_dir, long_ids=True).distinct()
+    return bfs_hops(edges, _supplier_seeds(spark, sf_dir), max_hops=3)
 
 
 @_register(
@@ -6966,6 +7845,17 @@ def q_bfs_hops_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND (q.price_cents < p.price_cents OR q.p_size < p.p_size))
     """,
     tags=("relational", "skyline"),
+    plan=PlanContract(
+        "the skyline staircase (per-x min + strict prefix-min on the "
+        "frozen-range-partition distributed prefix — r11: the x window keys on __pid, "
+        "never a pid-less global window, so a CONTINUOUS x can't funnel through one task) "
+        "broadcasts back as a semi-join — the corpus is never self-joined; the NOT-EXISTS "
+        "quadratic definition is the oracle's statement of intent, never the plan — the "
+        "skyline must stay one agg + one aggregate-sized window + one broadcast semi-join",
+        markers=("__pid", "BroadcastHashJoin", "LeftSemi"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        sf1=True,
+    ),
 )
 def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto frontier of parts minimizing (size, price) — the
@@ -7013,6 +7903,15 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c GROUP BY doc_id
     """,
     tags=("text", "ranking"),
+    plan=PlanContract(
+        "the tokenized corpus pins ONCE (three consumers: corpus stats, document "
+        "frequencies, tf rows); idf is aggregate-sized and broadcast back — no "
+        "corpus-sized shuffle after the pin; corpus stats ride 1-row broadcasts; scoring "
+        "joins are term-keyed equi-joins over the pinned tokenization",
+        markers=("InMemoryTableScan", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_bm25_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 relevance of every document against the fixed query
@@ -7035,6 +7934,22 @@ def q_bm25_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _relax_stage(weights: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The first Bellman-Ford relaxation over the pinned doubled
+    weighted adjacency, from the pinned seed distances."""
+    from transe_pyspark_spark.operators.graph import _sssp_relax
+
+    adj = _pinned(_both_ways(weights, "src", "dst", ("node", "nbr"), F.col("w")), "node")
+    dist0 = _pinned(seeds.distinct().withColumn("cost", F.lit(0).cast("long")), "node")
+    return _sssp_relax(adj, dist0, dist0)
+
+
+def _stage_sssp_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sel = _copurchase_lines(spark, sf_dir).distinct()
+    seeds = sel.filter(F.col("pk") % 40 == 0).select(F.col("pk").alias("node"))
+    return _relax_stage(_copurchase_weights(sel), seeds)
+
+
 @_register(
     "sssp_copurchase_parts",
     oracle="""
@@ -7053,6 +7968,18 @@ def q_bm25_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, CAST(min(cost) AS BIGINT) AS cost FROM walk GROUP BY node
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "each Bellman-Ford round is one FRONTIER-sized equi-join against the pinned "
+        "weighted adjacency + one min hash-aggregate + one node-keyed full-outer fold — "
+        "never a whole-graph pass once the frontier shrinks; the face plan is an opaque "
+        "localCheckpoint, so this gates the per-round shape (most of the 12-exchange "
+        "budget is the printed cache-definition lineage, built once)",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        max_exchanges=12,
+        max_scans=3,
+        stage=_stage_sssp_copurchase_parts,
+    ),
 )
 def q_sssp_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded multi-source shortest-path costs over the sparse part
@@ -7066,29 +7993,16 @@ def q_sssp_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `min(total_cost)` walk with `hops < 4`; costs exact BIGINTs."""
     from transe_pyspark_spark.operators.graph import sssp_rounds
 
-    li = _T(spark, sf_dir, "lineitem")
-    sel = (
-        li.filter((F.col("l_partkey") % 10 == 0) & (F.col("l_quantity") >= 35))
-        .select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").cast("long").alias("pk")
-        )
-        .distinct()
-    )
-    a = sel.select("ok", F.col("pk").alias("pa"))
-    b = sel.select("ok", F.col("pk").alias("pb"))
-    ew = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("__nb"))
-        .select(
-            F.col("pa").alias("src"),
-            F.col("pb").alias("dst"),
-            F.expr("CAST(1000000 AS BIGINT) div __nb").alias("w"),
-        )
-    )
+    sel = _copurchase_lines(spark, sf_dir).distinct()
     seeds = sel.filter(F.col("pk") % 40 == 0).select(F.col("pk").alias("node")).distinct()
-    return sssp_rounds(ew, seeds, rounds=4)
+    return sssp_rounds(_copurchase_weights(sel), seeds, rounds=4)
+
+
+def _stage_assortativity_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The moment stage's lazy (eager_cleanup=False) plan."""
+    from transe_pyspark_spark.operators.graph import degree_assortativity
+
+    return degree_assortativity(_trade_lines(spark, sf_dir).distinct(), eager_cleanup=False)
 
 
 @_register(
@@ -7115,6 +8029,18 @@ def q_sssp_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("graph", "stats"),
+    plan=PlanContract(
+        "degrees hash-agg once over the pinned canonical edge set; M/Σx/Σx² are pure "
+        "degree-power aggregates (no edge join at all) and Σxy joins the CANONICAL "
+        "half-sized edge set with two node-keyed equi-joins; the two 1-row frames meet in "
+        "a broadcast NLJ (the record_linkage precedent) and the moment products ride "
+        "decimal(38,0) — nothing quadratic, no window, no sqrt",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct", "Window"),
+        max_exchanges=9,
+        max_scans=2,
+        stage=_stage_assortativity_trading,
+    ),
 )
 def q_assortativity_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the trading graph (Newman's r over the
@@ -7126,17 +8052,7 @@ def q_assortativity_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     `operators/graph.py:degree_assortativity`."""
     from transe_pyspark_spark.operators.graph import degree_assortativity
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    return degree_assortativity(edges)
+    return degree_assortativity(_trade_lines(spark, sf_dir, long_ids=True).distinct())
 
 
 @_register(
@@ -7166,6 +8082,15 @@ def q_assortativity_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sc GROUP BY src, ns, nd
     """,
     tags=("text", "stats"),
+    plan=PlanContract(
+        "the (source, token) count aggregate pins ONCE (three consumers: corpus token "
+        "counts, per-source totals, scoring join); totals broadcast back — the 1-row "
+        "corpus-total NLJ is the record_linkage precedent; everything after the pinned "
+        "(source, token) aggregate is aggregate-sized; joins are token/source equi-joins",
+        markers=("InMemoryTableScan", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_source_divergence_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram entropy + KL divergence vs the whole-corpus
@@ -7200,6 +8125,16 @@ def q_source_divergence_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d, t
     """,
     tags=("agg", "stats", "drift"),
+    plan=PlanContract(
+        "the empirical CDFs ride the frozen-range-partition distributed prefix (windows "
+        "key on __pid, never a global value-ordered window); per-partition offsets and the "
+        "totals broadcast back; the argmax is one exact decimal-128 aggregate "
+        "(pid-less-value-window absence is pytest-pinned); the only non-equi joins are "
+        "1-row broadcast totals; the per-value aggregate is the single corpus-sized shuffle",
+        markers=("__pid", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_ks_value_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov D between the 'view' and
@@ -7314,6 +8249,10 @@ def q_pareto_frontier_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pareto_frontier_2d(li, "price_cents", "qty")
 
 
+def _stage_sssp_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _relax_stage(_trade_weights(spark, sf_dir), _supplier_seeds(spark, sf_dir))
+
+
 @_register(
     "sssp_trading_graph",
     oracle="""
@@ -7347,6 +8286,17 @@ def q_pareto_frontier_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, CAST(cost AS BIGINT) AS cost FROM d3
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "the DENSE-graph regime of the relax stage (r11, the sf1-benched weighted face): "
+        "identical per-round shape to the co-purchase gate — frontier equi-join against "
+        "the pinned familiarity-weighted trading adjacency, min hash-agg, node-keyed "
+        "full-outer fold — with corpus-proportional frontiers instead of the qty>=35 sliver",
+        markers=("InMemoryTableScan", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        max_exchanges=12,
+        max_scans=3,
+        stage=_stage_sssp_trading_graph,
+    ),
 )
 def q_sssp_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DENSE-graph regime of the weighted relaxation family (r11 —
@@ -7364,24 +8314,7 @@ def q_sssp_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/graph.py:sssp_rounds`)."""
     from transe_pyspark_spark.operators.graph import sssp_rounds
 
-    o = _T(spark, sf_dir, "orders")
-    li = _T(spark, sf_dir, "lineitem")
-    s = _T(spark, sf_dir, "supplier")
-    ew = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(
-            F.col("o_custkey").cast("long").alias("src"),
-            (F.lit(10000000) + F.col("l_suppkey")).cast("long").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        .select(
-            "src", "dst", (F.lit(1) + F.expr("1000 div __c")).cast("long").alias("w")
-        )
-    )
-    seeds = s.filter(F.col("s_nationkey") < 5).select(
-        (F.lit(10000000) + F.col("s_suppkey")).cast("long").alias("node")
-    )
-    return sssp_rounds(ew, seeds, rounds=3)
+    return sssp_rounds(_trade_weights(spark, sf_dir), _supplier_seeds(spark, sf_dir), rounds=3)
 
 
 @_register(
@@ -7421,6 +8354,19 @@ def q_sssp_trading_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, r AS rank_micro FROM r3
     """,
     tags=("graph", "iterative"),
+    plan=PlanContract(
+        "the restart-vector variant keeps pagerank's iteration shape (node-keyed "
+        "equi-joins + one destination hash agg over the pinned edge/degree/seed-flag "
+        "leaves); only NONZERO-rank nodes join the edge table, so pre-spread iterations "
+        "are seed-ball-sized; rank propagation is a node-keyed equi-join per iteration; "
+        "the seed flag rides a left join, never a window",
+        markers=("HashAggregate", "InMemoryTableScan"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        # pagerank's 9 plus the co-purchase pair self-join and the pinned
+        # seed-flag leaf's printed cache-DEFINITION lineage (built once;
+        # explain counts definition nodes alongside the live plan)
+        max_exchanges=16,
+    ),
 )
 def q_ppr_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank on the part co-purchase graph (r11,
@@ -7436,21 +8382,8 @@ def q_ppr_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed-flag restart term."""
     from transe_pyspark_spark.operators.graph import personalized_pagerank_integer
 
-    li = _T(spark, sf_dir, "lineitem")
-    sel = (
-        li.filter((F.col("l_partkey") % 10 == 0) & (F.col("l_quantity") >= 35))
-        .select(
-            F.col("l_orderkey").alias("ok"), F.col("l_partkey").cast("long").alias("pk")
-        )
-        .distinct()
-    )
-    pe = (
-        sel.select("ok", F.col("pk").alias("pa"))
-        .join(sel.select("ok", F.col("pk").alias("pb")), "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .select("pa", "pb")
-        .distinct()
-    )
+    sel = _copurchase_lines(spark, sf_dir).distinct()
+    pe = _copurchase_pairs(sel)
     edges = pe.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
         pe.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )
@@ -7488,6 +8421,10 @@ _WJ_ORACLE = _TF_CTE + """,
     "weighted_jaccard_docs",
     oracle=_WJ_ORACLE,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "multiset Jaccard must never plan an all-pairs nested loop",
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_weighted_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact WEIGHTED (multiset) Jaccard near-dup ≥ 0.6 over term
@@ -7504,6 +8441,13 @@ def q_weighted_jaccard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "weighted_jaccard_prefix_docs",
     oracle=_WJ_ORACLE,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "occurrence-expanded PPJoin: weighted Jaccard rides the same prefix-filtered "
+        "candidate equi-join as the set path; the occurrence-expansion prefix filter "
+        "exists to keep the candidate join an equi-join",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_weighted_jaccard_prefix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted Jaccard via PREFIX FILTERING — identical result set to
@@ -7539,6 +8483,14 @@ def q_weighted_jaccard_prefix_docs(spark: SparkSession, sf_dir: str) -> DataFram
     SELECT doc_a, doc_b, round(wjaccard, 6) AS wjaccard FROM s WHERE wjaccard >= 0.6
     """,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "3-gram occurrence-expanded PPJoin: the 10x-benched multiset configuration keeps "
+        "the same prefix equi-join shape; the occurrence-expansion prefix filter exists to "
+        "keep the candidate join an equi-join",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        sf1=True,
+    ),
 )
 def q_weighted_jaccard3_prefix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted 3-GRAM Jaccard via prefix filtering — the 100 TB
@@ -7568,6 +8520,13 @@ def q_weighted_jaccard3_prefix_docs(spark: SparkSession, sf_dir: str) -> DataFra
     SELECT doc_a, doc_b, round(tf_cosine, 6) AS tf_cosine FROM s WHERE tf_cosine >= 0.9
     """,
     tags=("dedup", "text", "vector"),
+    plan=PlanContract(
+        "inverted-index dot product: one BIGINT hash agg over per-term posting pairs; "
+        "norms ride the posting structs (no norm join); sparse cosine comes from the "
+        "inverted index, never all pairs",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_tf_cosine_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact lexical cosine ≥ 0.9 over raw term-frequency vectors —
@@ -7599,6 +8558,14 @@ def q_tf_cosine_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sc GROUP BY doc_id
     """,
     tags=("text", "stats"),
+    plan=PlanContract(
+        "one pinned (doc, token) tokenization pass feeds both the vocab counts and the "
+        "scoring join; the 1-row total broadcasts back; the only non-equi join is the "
+        "1-row corpus-total broadcast (fine); a Cartesian over doc/token rows is not",
+        markers=("HashAggregate", "InMemoryTableScan"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_unigram_nll_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc mean negative log-likelihood under the corpus's own
@@ -7630,6 +8597,13 @@ def q_unigram_nll_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j GROUP BY c_mktsegment, valid_from
     """,
     tags=("warehouse", "join", "scd2"),
+    plan=PlanContract(
+        "the SCD2 validity predicate rides the key equi-join as a residual — the dim "
+        "broadcasts, facts never shuffle; point-in-time lookup must stay a key equi-join "
+        "with a residual range filter, never a temporal nested loop",
+        markers=("BroadcastHashJoin",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_pit_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time enrichment: events join the customer-dimension
@@ -7754,6 +8728,11 @@ def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, rank, doc_id, n_matched_terms, score FROM r WHERE rank <= 10
     """,
     tags=("text", "ranking"),
+    plan=PlanContract(
+        "per-query top-k keeps O(k) pre-shuffle state (partial window limit); one scored "
+        "corpus pass shared across the query batch",
+        markers=("WindowGroupLimit", "HashAggregate"),
+    ),
 )
 def q_bm25_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-query BM25 top-10 retrieval (`functions/text.py:bm25_topk`)
@@ -7803,6 +8782,11 @@ def q_bm25_topk_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sc GROUP BY na, nb, B
     """,
     tags=("agg", "stats", "drift"),
+    plan=PlanContract(
+        "bucket counts per side + bucket-cardinality full-outer join; totals and the "
+        "bucket count broadcast as 1-row aggregates",
+        markers=("HashAggregate",),
+    ),
 )
 def q_psi_value_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between view and purchase value
@@ -7858,6 +8842,13 @@ def q_psi_value_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n_shared >= 5
     """,
     tags=("dedup", "text"),
+    plan=PlanContract(
+        "winnowed fingerprints ride the inverted-index posting pattern — one fp-keyed "
+        "aggregate, pairs only from shared fingerprints; fingerprint pairs come from "
+        "posting lists, never all pairs",
+        markers=("HashAggregate",),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+    ),
 )
 def q_winnow_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) fingerprint pairs sharing ≥5 fingerprints
@@ -7881,6 +8872,15 @@ def q_winnow_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.c_name, b.c_name) <= 1
     """,
     tags=("linkage", "dedup", "join"),
+    plan=PlanContract(
+        "deletion-variant posting lists (codegen'd explode) feed an equi-join; candidates "
+        "dedup (hash agg) before one Levenshtein verify per surviving pair — never the "
+        "oracle's n² definition; edit-distance candidates come from deletion-variant "
+        "equi-joins only — the quadratic Levenshtein stays in the oracle",
+        markers=("Generate", "HashAggregate"),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        sf1=True,
+    ),
 )
 def q_edit_near_names_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXHAUSTIVE edit-distance-1 name pairs via the symmetric-delete
@@ -7913,6 +8913,22 @@ def q_edit_near_names_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.nm, b.nm) <= 3
     """,
     tags=("linkage", "dedup", "join"),
+    plan=PlanContract(
+        "PassJoin segment/substring posting lists (codegen'd explodes) feed the (seg_no, "
+        "part_len, piece) equi-join; candidates dedup (hash agg) before one Levenshtein "
+        "verify per surviving pair — the quadratic definition stays in the oracle; "
+        "PassJoin candidates come from segment-signature equi-joins only (incl. the "
+        "short-string pass, a length-KEYED join) — the quadratic Levenshtein stays in the "
+        "oracle",
+        markers=("Generate", "HashAggregate"),
+        forbidden=("BroadcastNestedLoopJoin", "CartesianProduct"),
+        # seg/sub posting-list join (2) + candidate-pair distinct + the two
+        # name re-attach joins re-key the deduplicated pair set; the short
+        # path's length-keyed join broadcasts at any realistic slice —
+        # allow 8 for the shuffled-hash forms AQE may pick at scale
+        max_exchanges=8,
+        sf1=True,
+    ),
 )
 def q_edit3_near_names_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXHAUSTIVE edit-distance-3 name pairs via PassJoin segment
@@ -7999,6 +9015,15 @@ def q_edit3_near_names_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f QUALIFY rank <= 10
     """,
     tags=("vector", "knn", "text", "ranking"),
+    plan=PlanContract(
+        "both legs keep their own O(k) top-k contracts; the fusion full-outer join and "
+        "rank window touch only the two output-sized lists; the fusion join is keyed on "
+        "(query, doc); only the knn leg's deliberate broadcast-of-3-queries NLJ is allowed "
+        "upstream",
+        markers=("WindowGroupLimit", "FullOuter"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_hybrid_rrf_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID retrieval — BM25 lexical top-10 fused with exact
@@ -8054,6 +9079,15 @@ def q_hybrid_rrf_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 2
     """,
     tags=("agg", "timeseries", "rollup"),
+    plan=PlanContract(
+        "hour level materializes once (checkpointed partials); day and week fold THOSE — "
+        "the unioned plan re-reads the checkpoint, never the raw table; no raw-table scan "
+        "may survive into the returned plan — every level rides the checkpointed hourly "
+        "partials",
+        markers=("HashAggregate", "Union", "Scan ExistingRDD"),
+        forbidden=("Scan parquet", "BroadcastNestedLoopJoin", "CartesianProduct"),
+        sf1=True,
+    ),
 )
 def q_multires_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution rollup cascade
@@ -8098,6 +9132,14 @@ def q_multires_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     """,
     tags=("agg", "stats"),
+    plan=PlanContract(
+        "one joint |X·Y|-cell aggregate is the only corpus shuffle; marginals re-aggregate "
+        "the cells and broadcast back; cells join marginals on their keys; only the 1-row "
+        "totals frame rides a deliberate broadcast NLJ",
+        markers=("HashAggregate", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_mutual_info_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact empirical mutual information between event type and
@@ -8134,6 +9176,14 @@ def q_mutual_info_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d JOIN md USING (g) GROUP BY 1
     """,
     tags=("agg", "stats", "quality"),
+    plan=PlanContract(
+        "both medians ride the __pid distributed prefix-rank (no per-group window funnel); "
+        "|groups|-sized fences broadcast; median/MAD/fence joins are all keyed on the "
+        "group column",
+        markers=("HashAggregate", "__pid", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        sf1=True,
+    ),
 )
 def q_robust_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median/MAD robust outlier screen per event type
@@ -8175,6 +9225,15 @@ def q_robust_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            JOIN ic cb ON cb.i = d.consequent, nb
     """,
     tags=("agg", "join", "basket"),
+    plan=PlanContract(
+        "within-basket pair join keyed on the basket id (Σ|b|² bound); item counts and the "
+        "basket total broadcast back onto the support-pruned, output-sized rule table; "
+        "pairs come from the basket-keyed self-join only — never across baskets; the 1-row "
+        "basket total broadcasts",
+        markers=("HashAggregate", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_assoc_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules over order→part baskets
@@ -8216,6 +9275,14 @@ def q_assoc_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p JOIN tot USING (t_from)
     """,
     tags=("sequence", "agg"),
+    plan=PlanContract(
+        "one (basket, type) min-ts aggregate is the only corpus shuffle; the self-join and "
+        "totals ride the checkpointed first-occurrence frame, basket-keyed; precedence "
+        "pairs come from the basket-keyed first-occurrence join only — never across baskets",
+        markers=("HashAggregate", "BroadcastHashJoin", "Scan ExistingRDD"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        sf1=True,
+    ),
 )
 def q_eventually_follows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed eventually-follows matrix over (user, day) baskets
@@ -8252,6 +9319,14 @@ def q_eventually_follows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n LEFT JOIN u USING (user_id)
     """,
     tags=("asof", "join", "sequence"),
+    plan=PlanContract(
+        "the NOT EXISTS decorrelates to a key-equi anti join carrying the time window as a "
+        "residual predicate; the time-range predicate must stay a residual on the user "
+        "equi-key — never a temporal nested loop",
+        markers=("LeftAnti", "HashAggregate"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin"),
+        sf1=True,
+    ),
 )
 def q_absent_followup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absence detection (`operators/asof.py:absent_followup`): per
@@ -8291,6 +9366,15 @@ def q_absent_followup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM n, p, v
     """,
     tags=("agg", "stats", "timeseries"),
+    plan=PlanContract(
+        "S rides the DOCUMENTED bounded |days|² theta self-join over the checkpointed "
+        "calendar series (a deliberate BNLJ over aggregate-sized-by-contract input — never "
+        "a corpus join); ties are one value aggregate; nothing sorts: the bounded pair "
+        "join broadcasts, aggregates fold scalars",
+        markers=("Scan ExistingRDD", "HashAggregate"),
+        forbidden=("SortMergeJoin", "Window"),
+        sf1=True,
+    ),
 )
 def q_mann_kendall_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test over the daily event-value series in
@@ -8334,6 +9418,14 @@ def q_mann_kendall_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     tags=("agg", "stats", "timeseries"),
+    plan=PlanContract(
+        "the run-boundary lag window runs over the |days|-row checkpointed series (bounded "
+        "by contract); the discrete median broadcasts as one row; one bounded window + "
+        "scalar aggregates only",
+        markers=("Scan ExistingRDD", "Window", "HashAggregate"),
+        forbidden=("SortMergeJoin", "CartesianProduct"),
+        sf1=True,
+    ),
 )
 def q_runs_test_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test around the exact discrete median of
@@ -8374,6 +9466,16 @@ def q_runs_test_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p JOIN s sa ON sa.i = p.i JOIN s sb ON sb.i = p.j, n
     """,
     tags=("vector", "stats", "ml"),
+    plan=PlanContract(
+        "the visible plan assembles the CHECKPOINTED ≤2,145-row moment aggregate (the "
+        "Arrow QᵀQ partial pass + map-side combine executed upstream of the truncation — "
+        "test_embedding_covariance_* pin the kernel bit-for-bit); marginals broadcast; "
+        "assembly joins over the 2k-row aggregate broadcast; the 1-row count rides a "
+        "broadcast NLJ",
+        markers=("Scan ExistingRDD", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct", "SortMergeJoin", "Window"),
+        sf1=True,
+    ),
 )
 def q_embedding_covariance_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact covariance matrix of the embedding table
@@ -8410,6 +9512,16 @@ def q_embedding_covariance_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t JOIN gr USING (p)
     """,
     tags=("agg", "stats", "ml"),
+    plan=PlanContract(
+        "both rank machines ride ONE frozen (value, id) tiling — per-tile row_numbers + "
+        "broadcast exclusive offsets (global and per-group); the pooled-element lookup is "
+        "an integer equi-join; no pid-less window anywhere (probed); the only non-equi "
+        "join is the 1-row total broadcast; rank maps and the target lookup are keyed "
+        "equi-joins",
+        markers=("__pid", "Scan ExistingRDD", "HashAggregate"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_quantile_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization of document lengths across sources
@@ -8444,6 +9556,18 @@ def q_quantile_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d, t
     """,
     tags=("quality", "stats"),
+    plan=PlanContract(
+        "one ≤9-group digit aggregate (map-side partials); the total rides a window over "
+        "the ≤9-row aggregate (r14: single consumer — the old 1-row agg + cross join "
+        "re-executed the digit agg per consumer; the pid-less window is bounded BY "
+        "CONSTRUCTION to the 9 post-aggregate rows); digits come from the BIGINT's decimal "
+        "string, never a float log; nothing but the digit aggregate and the bounded ≤9-row "
+        "total window (r14: the Window replaced the 1-row NLJ so the digit agg has a "
+        "single consumer — no join of any kind remains)",
+        markers=("HashAggregate", "Window"),
+        forbidden=("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin"),
+        sf1=True,
+    ),
 )
 def q_benford_totalprice_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit screen over order totals in cents
@@ -8481,6 +9605,15 @@ def q_benford_totalprice_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     tags=("agg", "stats", "timeseries"),
+    plan=PlanContract(
+        "one corpus day-aggregate; lags explode map-side onto the checkpointed "
+        "calendar-bounded series and match by the t+k=t' hash equi-join; one "
+        "≤max_lag-group moment fold; the lag match is a hash EQUI-join on t+k — never a "
+        "range/nested-loop pairing, never a window",
+        markers=("HashAggregate", "Generate", "BroadcastHashJoin", "Scan ExistingRDD"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window", "SortMergeJoin"),
+        sf1=True,
+    ),
 )
 def q_acf_daily_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..7 autocorrelation of the DAILY event-value series in
@@ -8525,6 +9658,15 @@ def q_acf_daily_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base LEFT JOIN msrc USING (k) LEFT JOIN mlang USING (k)
     """,
     tags=("dedup", "quality"),
+    plan=PlanContract(
+        "the projected input pins once (min/max/count pass + one cell pass per mode "
+        "column); mode argmax is min(struct(-count, value)) — no window, no sort; the "
+        "|groups|-sized pieces broadcast-join; every join keys on the block; the mode "
+        "argmax is an aggregate, never a rank window",
+        markers=("InMemoryTableScan", "HashAggregate", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "Window"),
+        sf1=True,
+    ),
 )
 def q_golden_record_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship over LINKAGE BLOCKS
@@ -8579,6 +9721,15 @@ def q_golden_record_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per LEFT JOIN nw USING (o)
     """,
     tags=("text", "agg"),
+    plan=PlanContract(
+        "the checkpointed (source, term) aggregate serves both the per-source totals and "
+        "the first-seen regroup; the running vocabulary window runs over the |sources|-row "
+        "result (bounded by contract); the per-source pieces are aggregate-sized and "
+        "broadcast-join",
+        markers=("Scan ExistingRDD", "HashAggregate", "Window"),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"),
+        sf1=True,
+    ),
 )
 def q_vocab_growth_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marginal-vocabulary growth per source in lexicographic
@@ -8616,6 +9767,15 @@ def q_vocab_growth_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM h2 FULL OUTER JOIN a2 ON h2.s = a2.d
     """,
     tags=("graph", "join", "iterative"),
+    plan=PlanContract(
+        "the returned frame is the final checkpoint of the iterative run (per-round "
+        "truncation is the pagerank discipline); the per-round dataflow is pinned by "
+        "test_hits_integer_matches_python_model; per-round joins are node-keyed; the "
+        "normalization totals are 1-row broadcasts (inside the checkpointed rounds)",
+        markers=("Scan ExistingRDD",),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_hits_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of exact-integer HITS over the DIRECTED bipartite
@@ -8675,6 +9835,15 @@ def q_hits_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s WHERE d > 0
     """,
     tags=("sequence", "stats"),
+    plan=PlanContract(
+        "both KM passes (at-risk, log-survival) ride one frozen-tile prefix; the "
+        "between-pass frame is checkpointed (duration-cardinality) and the per-duration "
+        "aggregate is the only subject-sized shuffle; the only non-equi joins are the "
+        "1-row horizon/totals broadcasts; cohort joins are user-keyed",
+        markers=("__pid", "Scan ExistingRDD", "HashAggregate"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_km_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier view→purchase conversion curve
@@ -8748,6 +9917,16 @@ def q_km_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s, n
     """,
     tags=("agg", "stats"),
+    plan=PlanContract(
+        "both rank maps ride the frozen-tile prefix off the shared pair pin; the "
+        "value→rank joins are EQUI-joins whose strategy AQE picks per axis (the 50-value "
+        "quantity map broadcasts, the continuous price map sort-merges — never forced "
+        "broadcast, rank maps can be corpus-sized); the only non-equi joins are the 1-row "
+        "broadcast totals; rank maps join back on the value key",
+        markers=("__pid", "InMemoryTableScan"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_spearman_qty_price_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Spearman rank correlation between order-line quantity and
@@ -8781,6 +9960,14 @@ def q_spearman_qty_price_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM g WHERE n_rows > mode_n
     """,
     tags=("quality",),
+    plan=PlanContract(
+        "two hash aggregates total — the (det, dep) cell count is the only corpus shuffle "
+        "and max(cnt) IS the mode; nothing but the two hash aggregates and the violator "
+        "filter",
+        markers=("HashAggregate",),
+        forbidden=("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin", "Window"),
+        sf1=True,
+    ),
 )
 def q_fd_violations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency audit `source → lang` over the corpus
@@ -8815,6 +10002,16 @@ def q_fd_violations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c12 >= 5
     """,
     tags=("text", "stats"),
+    plan=PlanContract(
+        "the visible plan reads the CHECKPOINTED pair/unigram aggregates (the tokenization "
+        "pin + map-side slice/zip pair build executed upstream of the truncation — "
+        "test_collocations_* pin that shape); scoring joins broadcast; scoring joins ride "
+        "the broadcast vocab table; pairs build map-side from the pin — no position "
+        "self-join",
+        markers=("Scan ExistingRDD", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct", "SortMergeJoin"),
+        sf1=True,
+    ),
 )
 def q_collocations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI-ranked adjacent-bigram collocations over the corpus with
@@ -8862,6 +10059,15 @@ def q_collocations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     tags=("agg", "stats"),
+    plan=PlanContract(
+        "one joint-cell corpus aggregate, checkpointed for its four consumers; marginals "
+        "re-aggregate the cells; the zero-filled grid is the broadcast marginal×marginal "
+        "product; the marginal×marginal grid is a deliberate broadcast NLJ of two "
+        "aggregate-sized frames; a Cartesian over row-level data is not allowed",
+        markers=("HashAggregate", "Scan ExistingRDD", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_chi2_lang_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-squared independence between document language and
@@ -8900,6 +10106,15 @@ def q_chi2_lang_source_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w, t
     """,
     tags=("agg", "stats", "drift"),
+    plan=PlanContract(
+        "the CDF-gap area rides the same frozen-tile prefix as KS; the next-value handoff "
+        "joins the broadcast per-tile minima (aggregate-sized), never a global "
+        "value-ordered window; the only non-equi joins are 1-row broadcast totals; the "
+        "per-value aggregate is the single corpus-sized shuffle",
+        markers=("__pid", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_wasserstein_value_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 1-D Wasserstein-1 (earth-mover) distance between the
@@ -8940,6 +10155,14 @@ def q_wasserstein_value_drift_events(spark: SparkSession, sf_dir: str) -> DataFr
     FROM u, t
     """,
     tags=("agg", "stats", "drift"),
+    plan=PlanContract(
+        "the rank-sum fold rides the frozen-tile prefix — per-value counts and cumsums "
+        "only, no midrank window anywhere; the only non-equi joins are 1-row broadcast "
+        "totals; the per-value aggregate is the single corpus-sized shuffle",
+        markers=("__pid", "BroadcastHashJoin"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_mannwhitney_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Mann-Whitney U between 'view' and 'purchase'
@@ -8980,6 +10203,16 @@ def q_mannwhitney_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, rank, term, tf, score_nano FROM r WHERE rank <= 5
     """,
     tags=("text", "ranking"),
+    plan=PlanContract(
+        "one (doc, term) tf aggregate is pinned for its two term-keyed consumers; the "
+        "vocab-sized idf broadcasts into the scoring join; the per-doc rank is "
+        "WindowGroupLimit-bounded O(k); the scoring join is term-keyed and the rank window "
+        "is per-doc (the 1-row doc-count broadcast NLJ is fine; a Cartesian over the tf "
+        "table is not)",
+        markers=("WindowGroupLimit", "BroadcastHashJoin", "InMemoryTableScan"),
+        forbidden=("CartesianProduct",),
+        sf1=True,
+    ),
 )
 def q_tfidf_top_terms_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-5 TF-IDF terms
